@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.QueryDef
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -51,7 +51,7 @@ import graft.queries.QueryDef
   */
 object Bench {
   /** Force full evaluation of every row and column without sink cost. */
-  def consume(df: org.apache.spark.sql.DataFrame): Unit =
+  def consume(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
@@ -94,79 +94,22 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       try QueryDef.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"pre-read of $t failed: $e") }
     }
     try QueryDef.eventsTable(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"pre-read of events failed: $e") }
 
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { consume(fn(spark, sfDir)) } catch { case _: Throwable => return -1.0 }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      dt
-    }
     // validated parse: a garbage env value falls back to the default
     // rather than crashing the bench run
     val nPasses = scala.util.Try(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").trim.toInt)
       .getOrElse(2).max(2)
-    // untimed steady-state warmup (see the scaladoc): compiles every
-    // query's codegen units once so the timed passes measure query
-    // cost, not Janino. Results are consumed and dropped (same noop
-    // sink + cache clear as a timed pass) — nothing is cached across
-    // runs; only JVM/JIT/codegen state warms, the same class of state
-    // the table pre-read above already warms.
     val warmupPasses = scala.util.Try(
         sys.env.getOrElse("SPARK_GRAFT_WARMUP_PASSES", "1").trim.toInt)
       .getOrElse(1).max(0)
-    (1 to warmupPasses).foreach { _ =>
-      named.foreach { case (_, fn) => once(fn) }
-    }
-    val passes = (1 to nPasses).map { _ =>
-      named.map { case (name, fn) => name -> once(fn) }.toMap
-    }
-    // at exactly 2 passes, >2x cold/warm disagreement (host steal)
-    // triggers a third targeted sample, recorded separately so
-    // consumers reconciling the maps can see why queries[q] may be
-    // below min(cold, warm); at >=3 passes the min is already robust
-    // and no tiebreaks fire
-    val tiebreaks = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = named.map { case (name, fn) =>
-      val samples = passes.map(_(name))
-      val best =
-        if (samples.exists(_ < 0)) -1.0
-        else if (nPasses == 2 &&
-            samples.max > 2 * samples.min && samples.max - samples.min > 0.5) {
-          val c = once(fn)
-          tiebreaks(name) = c
-          if (c < 0) samples.min else math.min(samples.min, c)
-        } else samples.min
-      name -> best
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // EVERY pass's per-query samples ride along (queries_pass1..N —
-    // pass1 is the cold pass) so round-over-round comparisons can
-    // separate steady-state cost from host-steal luck, and so the
-    // reported min is always reconstructible from recorded samples
-    // at any pass count (the 2-pass cold/warm pair lost passes 3+);
-    // "queries"/"value" stay the best-sample contract
-    def passJson(p: Map[String, Double]) = named
-      .map { case (name, _) => "\"" + name + "\":" + p(name) }
-      .mkString("{", ",", "}")
-    val passMaps = passes.zipWithIndex
-      .map { case (p, i) => s""""queries_pass${i + 1}":${passJson(p)}""" }
-      .mkString(",")
-    val tbJson = tiebreaks
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s"""$passMaps,""" +
-      s""""queries_tiebreak":$tbJson,"passes":$nPasses,""" +
-      s""""warmup_passes":$warmupPasses,""" +
-      s""""consumption":"noop","sf":"$sfDir"}"""
+    val run = measure(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+      nPasses, warmupPasses)
+    val json = run.json(sfDir)
     println(json)
     // Durable copy: the driver captures a bounded tail of stdout, which
     // truncated the r03 artifact; the file survives regardless of log noise.
@@ -186,5 +129,86 @@ object Bench {
       java.nio.file.Files.write(mirror, json.getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
+    if (run.failed.nonEmpty) sys.exit(1)
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One bench run. `best` holds each query's reported sample, -1 for
+    * a query that threw in any timed sample; `failed` maps each such
+    * query to the class of its first exception. */
+  final case class Run(best: Seq[(String, Double)],
+                       passes: Seq[Map[String, Double]],
+                       tiebreaks: Seq[(String, Double)],
+                       failed: Seq[(String, String)],
+                       warmupPasses: Int) {
+    /** Sum over the queries that succeeded. */
+    def total: Double = best.map(_._2).filter(_ >= 0).sum
+
+    def json(sfDir: String): String = {
+      def obj(kv: Seq[(String, Any)]) = kv
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      // EVERY pass's per-query samples ride along (queries_pass1..N —
+      // pass1 is the cold pass) so round-over-round comparisons can
+      // separate steady-state cost from host-steal luck, and so the
+      // reported min is always reconstructible from recorded samples
+      // at any pass count (the 2-pass cold/warm pair lost passes 3+);
+      // "queries"/"value" stay the best-sample contract
+      val passMaps = passes.zipWithIndex
+        .map { case (p, i) => s""""queries_pass${i + 1}":${obj(best.map(b => b._1 -> p(b._1)))}""" }
+        .mkString(",")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(best)},""" +
+        s"""$passMaps,""" +
+        s""""queries_tiebreak":${obj(tiebreaks)},"passes":${passes.size},""" +
+        s""""warmup_passes":$warmupPasses,""" +
+        s""""failed":${obj(failed.map { case (k, v) => k -> ("\"" + v + "\"") })},""" +
+        s""""consumption":"noop","sf":"$sfDir"}"""
+    }
+  }
+
+  /** Runs `warmupPasses` untimed passes, then `nPasses` timed passes
+    * over `named`, and reports each query's fastest sample. */
+  def measure(spark: SparkSession, sfDir: String, named: Seq[(String, Query)],
+              nPasses: Int, warmupPasses: Int): Run = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // a thrown query reads -1; when `timed`, its first exception class
+    // is recorded so the failure is reported, never silently dropped
+    def once(name: String, fn: Query, timed: Boolean): Double = {
+      val t0 = System.nanoTime()
+      try consume(fn(spark, sfDir)) catch {
+        case e: Throwable =>
+          if (timed) failed.getOrElseUpdate(name, e.getClass.getName)
+          return -1.0
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      dt
+    }
+    // untimed steady-state warmup (see the scaladoc): compiles every
+    // query's codegen units once so the timed passes measure query
+    // cost, not Janino. Results are consumed and dropped (same noop
+    // sink + cache clear as a timed pass) — nothing is cached across
+    // runs; only JVM/JIT/codegen state warms, the same class of state
+    // `main`'s table pre-read already warms.
+    (1 to warmupPasses).foreach { _ =>
+      named.foreach { case (name, fn) => once(name, fn, timed = false) }
+    }
+    val passes = (1 to nPasses).map { _ =>
+      named.map { case (name, fn) => name -> once(name, fn, timed = true) }.toMap
+    }
+    // at exactly 2 passes, >2x cold/warm disagreement (host steal)
+    // triggers a third targeted sample, recorded separately so
+    // consumers reconciling the maps can see why queries[q] may be
+    // below min(cold, warm); at >=3 passes the min is already robust
+    // and no tiebreaks fire
+    val tiebreaks = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val best = named.map { case (name, fn) =>
+      val samples = passes.map(_(name))
+      if (!failed.contains(name) && nPasses == 2 &&
+          samples.max > 2 * samples.min && samples.max - samples.min > 0.5)
+        tiebreaks(name) = once(name, fn, timed = true)
+      name -> (if (failed.contains(name)) -1.0 else (samples ++ tiebreaks.get(name)).min)
+    }
+    Run(best, passes, tiebreaks.toSeq, failed.toSeq, warmupPasses)
   }
 }

@@ -4,7 +4,7 @@ import java.time.LocalDate
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.{CalendarDim, CleanJde, FactLoad, Scd2}
@@ -36,14 +36,40 @@ object Pipeline {
     "F0101" -> Schemas.F0101,
     "F4211" -> Schemas.F4211)
 
+  /** Silver and Gold table contracts: `Pipeline` reads these tables
+    * through them and checks every frame it writes to them first. */
+  val ContractFor: Map[String, StructType] = Map(
+    "transactions" -> Schemas.SilverTransactions,
+    "dim_customer" -> Schemas.DimCustomer,
+    "dim_date" -> Schemas.DimDate,
+    "fact_sales" -> Schemas.FactSales)
+
+  private def readGold(spark: SparkSession, zones: LakeZones, table: String): DataFrame =
+    LakeIO.readGold(spark, zones, table, Some(ContractFor(table)))
+
+  /** Checks `df` against `table`'s contract, then hands it on. */
+  private def conforming(table: String)(df: DataFrame): DataFrame = {
+    Schemas.requireConforms(table, df.schema, ContractFor(table))
+    df
+  }
+
+  /** The ingestion config, read through [[Schemas.SourceConfig]]. A
+    * schema read turns a missing or misspelled key into null, so every
+    * field must be present: a bad entry fails naming itself. */
   def readConfig(spark: SparkSession, path: String): Seq[SourceSpec] = {
     import spark.implicits._
-    LakeIO.readJsonConfig(spark, path)
-      .select("sourceFile", "sinkPath", "description")
+    LakeIO.readJsonConfig(spark, path, Schemas.SourceConfig)
       .as[(String, String, String)]
       .collect()
       .toSeq
-      .map { case (f, p, d) => SourceSpec(f, p, d) }
+      .zipWithIndex
+      .map { case ((f, p, d), i) =>
+        val missing = Schemas.SourceConfig.fieldNames.zip(Seq(f, p, d))
+          .collect { case (name, null) => name }
+        require(missing.isEmpty,
+          s"$path entry ${i + 1} lacks ${missing.mkString(", ")}")
+        SourceSpec(f, p, d)
+      }
   }
 
   /** C1 — ingest every configured CSV into time-partitioned Bronze,
@@ -87,6 +113,22 @@ object Pipeline {
     throw last
   }
 
+  /** The SCD2 step of [[run]]: merges an F0101 batch into the customer
+    * dimension (`dim` is `None` on the first load) and returns the
+    * complete next dimension state. */
+  def mergeCustomers(spark: SparkSession, dim: Option[DataFrame], f0101: DataFrame,
+                     now: Column): DataFrame = {
+    val incoming = f0101.select(
+      col("ABAN8").as("CustomerID"), col("ABALPH").as("CustomerName"),
+      col("ABAT1").as("SearchType"), col("ABAC01").as("CategoryCode"))
+    val spec = Scd2.Spec("CustomerKey", "CustomerID",
+      Seq("CustomerName", "SearchType", "CategoryCode"))
+    // first-ever key versions get beginning-of-time validity so
+    // historical facts resolve in the PIT join (SURVEY.md §7.4.3)
+    Scd2.merge(dim.getOrElse(Scd2.emptyDim(spark, incoming, spec)), incoming, spec, now,
+      newKeyValidFrom = Some(to_timestamp(lit("1900-01-01 00:00:00"))))
+  }
+
   /** Full Bronze→Silver→Gold run (entry point 1, SURVEY.md §3.1).
     * Returns the loaded fact frame for inspection. */
   def run(spark: SparkSession, zones: LakeZones, landingDir: String,
@@ -100,60 +142,61 @@ object Pipeline {
     }
 
     val silver = withRetry("silver", onFailure = onFailure) {
-      val f4211 = LakeIO.readBronze(spark, zones, "jde/F4211", Some(ingestDate))
+      val f4211 = LakeIO.readBronze(spark, zones, "jde/F4211", Some(ingestDate),
+          Some(Schemas.F4211))
         .select(Schemas.F4211.fieldNames.map(col).toIndexedSeq: _*)
-      val cleaned = CleanJde(f4211)
+      val cleaned = conforming("transactions")(CleanJde(f4211))
       LakeIO.overwriteSilver(cleaned, zones, "transactions")
 
-      val f0101 = LakeIO.readBronze(spark, zones, "jde/F0101", Some(ingestDate))
-      val incoming = f0101.select(
-        col("ABAN8").as("CustomerID"), col("ABALPH").as("CustomerName"),
-        col("ABAT1").as("SearchType"), col("ABAC01").as("CategoryCode"))
-      val spec = Scd2.Spec("CustomerKey", "CustomerID",
-        Seq("CustomerName", "SearchType", "CategoryCode"))
-      val dim0 = Try(LakeIO.readGold(spark, zones, "dim_customer"))
-        .getOrElse(Scd2.emptyDim(spark, incoming, spec))
-      // first-ever key versions get beginning-of-time validity so
-      // historical facts resolve in the PIT join (SURVEY.md §7.4.3)
-      val dim1 = Scd2.merge(dim0, incoming, spec, nowCol,
-        newKeyValidFrom = Some(to_timestamp(lit("1900-01-01 00:00:00"))))
+      val f0101 = LakeIO.readBronze(spark, zones, "jde/F0101", Some(ingestDate),
+        Some(Schemas.F0101))
+      // only an absent table means a first load: any read error must
+      // fail the stage, not re-seed the dimension from CustomerKey 1
+      val dim0 =
+        if (LakeIO.goldExists(spark, zones, "dim_customer"))
+          Some(readGold(spark, zones, "dim_customer"))
+        else None
+      val dim1 = mergeCustomers(spark, dim0, f0101, nowCol)
       // read-modify-write: materialize to a staging dir, then swap —
       // the live dir stays intact while the job reads from it
-      LakeIO.replaceGold(dim1, zones, "dim_customer")
-      LakeIO.readSilver(spark, zones, "transactions")
+      LakeIO.replaceGold(conforming("dim_customer")(dim1), zones, "dim_customer")
+      LakeIO.readSilver(spark, zones, "transactions", Some(ContractFor("transactions")))
     }
 
     withRetry("gold", onFailure = onFailure) {
-      val dimDate = CalendarDim(spark)
+      val dimDate = conforming("dim_date")(CalendarDim(spark))
       LakeIO.overwriteGold(dimDate, zones, "dim_date")
       // IDENTITY(1,1) continuation: seed SalesKey from the existing
       // fact's max so incremental loads never reuse keys (ADVICE r01);
       // exclude this run's own load_id so a retry re-assigns the SAME
       // key range instead of stacking on its partial previous attempt.
+      // Only an absent table starts at 0: a read error fails the stage.
       val loadId = ingestDate.toString
-      val keyOffset: Long = Try {
-        LakeIO.readGold(spark, zones, "fact_sales")
+      val keyOffset: Long =
+        if (!LakeIO.goldExists(spark, zones, "fact_sales")) 0L
+        else readGold(spark, zones, "fact_sales")
           .filter(col("load_id") =!= loadId)
           .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
-      }.getOrElse(0L)
       val fact = FactLoad.loadFactSales(
         silver,
-        LakeIO.readGold(spark, zones, "dim_customer"),
-        LakeIO.readGold(spark, zones, "dim_date"),
+        readGold(spark, zones, "dim_customer"),
+        readGold(spark, zones, "dim_date"),
         nowCol, keyOffset)
       // dynamic-partition overwrite of this run's load_id partition:
       // retries replace, not duplicate (idempotent append — ADVICE r01)
-      LakeIO.appendGoldRun(fact.drop("DateKeyValid"), zones, "fact_sales", loadId)
-      LakeIO.readGold(spark, zones, "fact_sales")
+      LakeIO.appendGoldRun(
+        conforming("fact_sales")(fact.drop("DateKeyValid")),
+        zones, "fact_sales", loadId)
+      readGold(spark, zones, "fact_sales")
     }
   }
 
   /** C6 — the flagship consumption query: top-k revenue with both
     * dims (`load_gold_data.sql:115-128`). */
   def starTopK(spark: SparkSession, zones: LakeZones, k: Int = 10): DataFrame = {
-    val fact = LakeIO.readGold(spark, zones, "fact_sales")
-    val dimC = broadcast(LakeIO.readGold(spark, zones, "dim_customer"))
-    val dimD = broadcast(LakeIO.readGold(spark, zones, "dim_date"))
+    val fact = readGold(spark, zones, "fact_sales")
+    val dimC = broadcast(readGold(spark, zones, "dim_customer"))
+    val dimD = broadcast(readGold(spark, zones, "dim_date"))
     fact.join(dimC, "CustomerKey")
       .join(dimD, "DateKey")
       .select(col("OrderNumber"), col("CustomerName"), col("FullDate"),

@@ -82,9 +82,10 @@ object LakeIO {
   }
 
   /** S4 — JSON config document (whole array → rows,
-    * `ds_config_json.json:10-17`). */
-  def readJsonConfig(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
+    * `ds_config_json.json:10-17`), read through `schema`: no
+    * inference job over the document. */
+  def readJsonConfig(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("multiLine", "true").json(path)
 
   /** JSONL (newline-delimited JSON) source — the training-data
     * interchange format (one document object per line, splittable,
@@ -147,11 +148,23 @@ object LakeIO {
       .option("compression", "snappy")
       .parquet(zones.bronze(table))
 
+  /** A reader with `schema` imposed, or an inferring one without it.
+    *
+    * A contract read (`schema` given) lists the files but runs no
+    * Spark job; without it, Spark runs a job that reads a parquet
+    * footer only to infer the schema.
+    * The schema holds data columns only: hive partition columns are
+    * still discovered from the paths, with their inferred types. */
+  private def reader(spark: SparkSession, schema: Option[StructType]) =
+    schema.fold(spark.read)(s => spark.read.schema(s))
+
   /** S2 — read Bronze; pass an ingest date to prune to one partition
-    * (pruning happens at planning: only that directory is listed). */
+    * (pruning happens at planning: only that directory is listed),
+    * and a `schema` to read through a contract (see `reader`). */
   def readBronze(spark: SparkSession, zones: LakeZones, table: String,
-                 ingestDate: Option[LocalDate] = None): DataFrame = {
-    val df = spark.read.parquet(zones.bronze(table))
+                 ingestDate: Option[LocalDate] = None,
+                 schema: Option[StructType] = None): DataFrame = {
+    val df = reader(spark, schema).parquet(zones.bronze(table))
     ingestDate.fold(df) { d =>
       df.filter(col("ingest_year") === d.getYear &&
         col("ingest_month") === d.getMonthValue &&
@@ -183,8 +196,10 @@ object LakeIO {
     df.write.mode("overwrite").option("compression", "snappy")
       .parquet(zones.silver(domain))
 
-  def readSilver(spark: SparkSession, zones: LakeZones, domain: String): DataFrame =
-    spark.read.parquet(zones.silver(domain))
+  /** Pass a `schema` to read through a contract (see `reader`). */
+  def readSilver(spark: SparkSession, zones: LakeZones, domain: String,
+                 schema: Option[StructType] = None): DataFrame =
+    reader(spark, schema).parquet(zones.silver(domain))
 
   /** S7 — append-only fact sink (`DF_Load_FactSales.json:145-153`). */
   def appendGold(df: DataFrame, zones: LakeZones, table: String): Unit =
@@ -338,8 +353,28 @@ object LakeIO {
     spark.read.parquet(zones.gold(table))
   }
 
-  def readGold(spark: SparkSession, zones: LakeZones, table: String): DataFrame =
-    spark.read.parquet(zones.gold(table))
+  /** Pass a `schema` to read through a contract (see `reader`). */
+  def readGold(spark: SparkSession, zones: LakeZones, table: String,
+               schema: Option[StructType] = None): DataFrame =
+    reader(spark, schema).parquet(zones.gold(table))
+
+  /** Whether a gold table holds anything: its directory exists and
+    * has an entry Spark would read (not `_`- or `.`-prefixed). Lets a
+    * caller tell "first load" from a read failure without catching
+    * the failure. Repairs a dangling [[replaceGold]] swap first (same
+    * single-writer assumption as [[readGoldRecovering]]), so a table
+    * whose data sits in `.old`/`.staging` counts as present. */
+  def goldExists(spark: SparkSession, zones: LakeZones, table: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val target = new Path(zones.gold(table))
+    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+    recoverGold(fs, target, new Path(zones.gold(table) + ".staging"),
+      new Path(zones.gold(table) + ".old"))
+    fs.exists(target) && fs.listStatus(target).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
 
   /** Time travel over a run-partitioned gold table: the table state
     * as of `loadId` INCLUSIVE — every `load_id=` run up to and

@@ -8,6 +8,13 @@ import org.apache.spark.sql.types._
   * (`allowSchemaDrift: true`, `adf/dataflow/DF_Clean_JDE.json:66-67`);
   * we impose the projection at read time and tolerate extra columns
   * by selecting declared names only.
+  *
+  * `Pipeline` reads every medallion table through its contract (no
+  * footer-inference job per read) and checks every frame it writes
+  * against the contract first ([[requireConforms]]), so a contract
+  * read returns exactly what was written. Contracts hold data columns
+  * only: partition columns (`ingest_*`, `load_id`) are discovered from
+  * the directory names, with their inferred types.
   */
 object Schemas {
 
@@ -72,4 +79,47 @@ object Schemas {
     StructField("ExtendedAmount", money),
     StructField("UnitPrice", money),
     StructField("LoadDate", TimestampType)))
+
+  /** Gold.Dim_Date — the [[graft.operators.CalendarDim]] output
+    * (`sql_scripts/dim_date.sql:16-31`). */
+  val DimDate: StructType = StructType(Seq(
+    StructField("DateKey", IntegerType),
+    StructField("FullDate", DateType),
+    StructField("DayOfMonth", IntegerType),
+    StructField("DayOfWeekName", StringType),
+    StructField("DayOfWeekNumber", IntegerType),
+    StructField("WeekOfYear", IntegerType),
+    StructField("MonthNumber", IntegerType),
+    StructField("MonthName", StringType),
+    StructField("Quarter", IntegerType),
+    StructField("Year", IntegerType),
+    StructField("IsWeekend", BooleanType),
+    StructField("IsLeapYear", BooleanType),
+    StructField("FiscalQuarter", IntegerType),
+    StructField("FiscalYear", IntegerType)))
+
+  /** One entry of the ingestion config (`config/source_config.json`). */
+  val SourceConfig: StructType = StructType(Seq(
+    StructField("sourceFile", StringType),
+    StructField("sinkPath", StringType),
+    StructField("description", StringType)))
+
+  /** Driver-only contract check (reads the analyzed schema, runs no
+    * job): `actual`'s column names and types, in order, must equal
+    * `contract`'s. Nullability is ignored — Spark reads parquet back
+    * as nullable anyway. Fails naming the first drifted column, so a
+    * renamed or retyped column cannot reach the lake and come back
+    * from a contract read as all-null. */
+  def requireConforms(table: String, actual: StructType, contract: StructType): Unit = {
+    def show(f: Option[StructField]) =
+      f.fold("nothing")(f => s"`${f.name}` ${f.dataType.simpleString}")
+    (0 until math.max(actual.length, contract.length)).find { i =>
+      actual.fields.lift(i).map(f => (f.name, f.dataType)) !=
+        contract.fields.lift(i).map(f => (f.name, f.dataType))
+    }.foreach { i =>
+      throw new IllegalArgumentException(
+        s"$table drifted from its contract at column ${i + 1}: expected " +
+          s"${show(contract.fields.lift(i))}, found ${show(actual.fields.lift(i))}")
+    }
+  }
 }

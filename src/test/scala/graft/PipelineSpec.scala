@@ -5,6 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.functions._
 import graft.sources.{LakeIO, LakeZones}
 import graft.types.Schemas
+import PipelineFixture.writeLanding
 
 /** C1+C7 golden end-to-end: reference-shaped CSV landing files
   * (50 customers / 200 orders, mirroring `generate_jde_data.py`
@@ -16,32 +17,15 @@ class PipelineSpec extends SparkSpec {
   private def mkTmp(): String =
     Files.createTempDirectory("graft_pipe").toString
 
-  /** Deterministic JDE-shaped fixture (seed-free: arithmetic series). */
-  private def writeLanding(dir: String): Unit = {
-    val customers = (0 until 50).map { i =>
+  /** Day 2's customer master: customer 10000 changes category. */
+  private def writeDay2Customers(landing: String): Unit = {
+    val f0101v2 = (0 until 50).map { i =>
       val id = 10000 + i
-      val cat = Seq("100", "200", "300")(i % 3)
-      val julian = 124001 + (i % 300)
-      s"$id,Company $i,C,$cat,$julian"
+      val cat = if (i == 0) "999" else Seq("100", "200", "300")(i % 3)
+      s"$id,Company $i,C,$cat,124300"
     }
-    Files.writeString(Paths.get(s"$dir/F0101.csv"),
-      "ABAN8,ABALPH,ABAT1,ABAC01,ABUPMJ\n" + customers.mkString("\n"))
-    val orders = (0 until 200).map { i =>
-      val doco = 1 + i
-      val an8 = 10000 + (i % 50)
-      val julian = 124001 + (i % 300)
-      val units = (1 + i % 100) * 100
-      val priceCents = 1000 + (i * 245) % 49000
-      val aexp = (units / 100) * priceCents
-      s"$doco,SO,$an8,400638133393$i,$julian,$units,$aexp"
-    }
-    Files.writeString(Paths.get(s"$dir/F4211.csv"),
-      "SDDOCO,SDDCTO,SDAN8,SDLITM,SDTRDJ,SDUORG,SDAEXP\n" + orders.mkString("\n"))
-    Files.writeString(Paths.get(s"$dir/source_config.json"),
-      """[
-        {"sourceFile": "F0101.csv", "sinkPath": "jde/F0101", "description": "Address Book"},
-        {"sourceFile": "F4211.csv", "sinkPath": "jde/F4211", "description": "Sales Detail"}
-      ]""")
+    Files.writeString(Paths.get(s"$landing/F0101.csv"),
+      "ABAN8,ABALPH,ABAT1,ABAC01,ABUPMJ\n" + f0101v2.mkString("\n"))
   }
 
   test("full medallion run: ingest → clean → scd2 → fact → star query") {
@@ -78,14 +62,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
       LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
 
-    // day 2: customer 10000 changes category
-    val f0101v2 = (0 until 50).map { i =>
-      val id = 10000 + i
-      val cat = if (i == 0) "999" else Seq("100", "200", "300")(i % 3)
-      s"$id,Company $i,C,$cat,124300"
-    }
-    Files.writeString(Paths.get(s"$landing/F0101.csv"),
-      "ABAN8,ABALPH,ABAT1,ABAC01,ABUPMJ\n" + f0101v2.mkString("\n"))
+    writeDay2Customers(landing)
     Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
       LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"))
 
@@ -111,6 +88,76 @@ class PipelineSpec extends SparkSpec {
     assert(facts2.select("SalesKey").distinct().count() == 400)
     // dimension unchanged by the no-op re-merge (SCD2 idempotence)
     assert(LakeIO.readGold(spark, zones, "dim_customer").count() == 51)
+  }
+
+  test("an unreadable fact table fails the gold stage instead of reusing SalesKeys") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    val day1 = Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-01")
+    val part = Files.list(day1).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.write(part, Array.fill[Byte](64)(7))
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+
+    var alerted: Option[String] = None
+    intercept[Exception] {
+      Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"),
+        onFailure = (stage, _) => alerted = Some(stage))
+    }
+    assert(alerted.contains("gold"))
+    // no day-2 batch was appended under restarted keys 1..n
+    assert(!Files.exists(Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-02")))
+  }
+
+  test("a dim_customer swap that crashed before day 2 is recovered, not re-seeded") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    val day1Keys = LakeIO.readGold(spark, zones, "dim_customer")
+      .select("CustomerID", "CustomerKey").as[(Int, Long)].collect().toMap
+    // a replaceGold that died between its renames: the live dimension
+    // is missing and its data sits in `.old`
+    Files.move(Paths.get(s"$lake/gold/dim_customer"),
+      Paths.get(s"$lake/gold/dim_customer.old"))
+
+    writeDay2Customers(landing)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"))
+
+    // day 1's history survived and day 2 merged onto it: keys continue
+    val dim = LakeIO.readGold(spark, zones, "dim_customer")
+    assert(dim.count() == 51)
+    val c0 = dim.filter($"CustomerID" === 10000).orderBy("CustomerKey")
+      .select("CustomerKey", "IsActive").as[(Long, Boolean)].collect().toSeq
+    assert(c0 == Seq((day1Keys(10000), false), (51L, true)))
+    val kept = dim.filter($"CustomerID" =!= 10000)
+      .select("CustomerID", "CustomerKey").as[(Int, Long)].collect().toMap
+    assert(kept == day1Keys - 10000)
+  }
+
+  test("a config entry with a misspelled key fails the bronze stage") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    Files.writeString(Paths.get(s"$landing/source_config.json"),
+      """[
+        {"sourceFile": "F0101.csv", "sinkPath": "jde/F0101", "description": "Address Book"},
+        {"sourceFile": "F4211.csv", "sinkpath": "jde/F4211", "description": "Sales Detail"}
+      ]""")
+    var alerted: Option[String] = None
+    val ex = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, LakeZones(lake), landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
+        onFailure = (stage, _) => alerted = Some(stage))
+    }
+    assert(alerted.contains("bronze"))
+    assert(ex.getMessage.contains("entry 2 lacks sinkPath"))
+    assert(!Files.exists(Paths.get(s"$lake/bronze/null")))
   }
 
   test("compaction collapses small files atomically, preserving rows") {
