@@ -1,9 +1,9 @@
 package graft
 
 /** Shared helper for the artifact-writing measurement mains
-  * (Q228Diag, AdmitScale, ScalingBench, BroadcastAudit): caller-
-  * supplied strings (data-dir paths) are interpolated into hand-built
-  * JSONL lines, and a path containing a quote or backslash would
+  * (AdmitScale, ScalingBench, BroadcastAudit): caller-supplied
+  * strings (data-dir paths) are interpolated into hand-built JSONL
+  * lines, and a path containing a quote or backslash would
   * silently corrupt the committed artifact. Escape the two JSON
   * string metacharacters plus control chars before interpolation.
   */

@@ -520,18 +520,9 @@ object Dedup {
       labels = next.select(col("id"), col("lbl"))
       i += 1
     }
-    lastCcRounds = i // recorded before the require so a non-convergent run still reports its count
     require(converged, s"label propagation did not converge in $maxIter rounds")
     labels.select(col("id"), col("lbl").as("component"))
   }
-
-  /** Rounds used by the most recent [[connectedComponents]] call on
-    * this JVM — diagnostic only (scaling harness reads it to tell
-    * "more rounds" from "slower rounds" across scale factors).
-    * JVM-global by design: only meaningful when closures run one at a
-    * time (CcDiag / ScalingBench); concurrent callers would race and
-    * must not read it. */
-  @volatile private[graft] var lastCcRounds: Int = 0
 
   // ------------------------------------------- greedy arrival admission
 

@@ -51,14 +51,12 @@ object FactLoad {
     *                    with a null key
     */
   def pointInTimeJoin(silver: DataFrame, dimCustomer: DataFrame,
-                      faithful: Boolean = false,
-                      broadcastDim: Boolean = true): DataFrame = {
-    val dim0 = dimCustomer.select(
+                      faithful: Boolean = false): DataFrame = {
+    val dim = broadcast(dimCustomer.select(
       col("CustomerKey"),
       col("CustomerID").as("_dimCustomerID"),
       col("ValidFrom").as("_vf"),
-      col("ValidTo").as("_vt"))
-    val dim = if (broadcastDim) broadcast(dim0) else dim0
+      col("ValidTo").as("_vt")))
     val cond = silver("CustomerID") === dim("_dimCustomerID") &&
       pitPredicate(silver("OrderDate"), dim("_vf"), dim("_vt"))
     val joined = silver.join(dim, cond, "left")

@@ -13,36 +13,36 @@ import graft.functions.JdeFunctions.rowHash
   * 109-217`: hash both sides → broadcast lookup → 3-way conditional
   * split → expire + insert, sinkOrder 1→2). On an immutable lake
   * there is no row update, so the operator is reformulated
-  * functionally: it returns the COMPLETE next dimension state
-  * (untouched rows ∪ expired rows ∪ freshly keyed new versions) and
-  * the caller atomically overwrites the dimension. The reference's
-  * sink-ordering hazard (`docs/technical_report.md:251`) disappears.
+  * functionally: it returns the COMPLETE next dimension state (the
+  * prior rows with superseded versions expired ∪ freshly keyed new
+  * versions) and the caller atomically overwrites the dimension. The
+  * reference's sink-ordering hazard (`docs/technical_report.md:251`)
+  * disappears.
   *
   * Change detection is the reference's SHA-256 design
   * (`DF_SCD2_Customer.json:135`, `docs/technical_report.md:209-215`):
   * one hash comparison instead of N column comparisons.
   *
   * Scale notes (100 TB contract):
-  *  - the active-side lookup is broadcast by default (dimensions are
-  *    small relative to facts), but the decision is backed by a
-  *    MEASURED active-row count riding the eager max-key probe (the
-  *    dimension is checkpoint-rooted in chained merges, so Catalyst's
-  *    size estimate is garbage): past `dimBroadcastMaxRows` the
-  *    lookup AND the expire set auto-switch to shuffle joins. Pass
-  *    `broadcastDim=false` to force shuffle joins outright;
+  *  - the active-side lookup and the expire set are broadcast while a
+  *    MEASURED active-row count riding the eager max-key probe stays
+  *    within `dimBroadcastMaxRows` (the dimension is checkpoint-rooted
+  *    in chained merges, so Catalyst's size estimate is garbage); past
+  *    it both joins auto-switch to shuffle joins;
   *  - surrogate keys are assigned with [[Ids.addContiguousIds]]
-  *    (range-partitioned zipWithIndex), not a single-partition
+  *    (range-partitioned, materialized once), not a single-partition
   *    `row_number` window;
-  *  - the whole merge is one shuffle-light DAG: hash (narrow) →
-  *    broadcast join (narrow) → two filters over the cached join →
-  *    union (narrow);
-  *  - the result references the input dimension THREE times (expire /
-  *    untouched / key seed), so chaining merges without materializing
-  *    between rounds grows the analyzed plan ~3^n. Persist the
-  *    returned state before the next merge — the pipeline does this
-  *    naturally by writing the dimension to the lake
-  *    ([[graft.sources.LakeIO.replaceGold]]); in-memory chains should
-  *    `localCheckpoint()`.
+  *  - one pass per input: the batch is hashed and looked up once,
+  *    inside the key assignment's materialization; the changed keys
+  *    are read back from that keyed frame, and the dimension flows
+  *    through ONE left join against them (expired rows are rewritten
+  *    in place, all others pass through). The result therefore
+  *    references the input dimension once, so chained merges grow the
+  *    analyzed plan linearly, not geometrically. Each merge still
+  *    re-evaluates its input's lineage (probe, expire join), so
+  *    persist the returned state before the next merge: the pipeline
+  *    writes it to the lake ([[graft.sources.LakeIO.replaceGold]]);
+  *    in-memory chains should `localCheckpoint()`.
   */
 object Scd2 {
 
@@ -91,21 +91,20 @@ object Scd2 {
     *                 to give initial versions a beginning-of-time
     *                 validity instead (standard warehouse practice).
     * @param dimBroadcastMaxRows measured active-row bound above which
-    *                 the lookup and expire-set broadcasts auto-switch
-    *                 to shuffle joins even with `broadcastDim=true`.
-    *                 The count is MEASURED (it rides the eager max-key
-    *                 probe the merge already pays, zero extra jobs)
-    *                 because `dim` is usually checkpoint-rooted and
-    *                 its Catalyst size estimate is garbage — a forced
-    *                 broadcast justified only by assumption never
-    *                 re-decides itself as the dimension grows. The
-    *                 default (4M rows, ~0.5 GB of (_bk, key, 64-char
-    *                 hash) lookup tuples) fits comfortably in executor
-    *                 build memory; the expire set is gated by the same
-    *                 measurement since changed keys ⊆ active keys.
+    *                 the lookup and expire-set broadcasts switch to
+    *                 shuffle joins. The count is MEASURED (it rides the
+    *                 eager max-key probe the merge already pays, zero
+    *                 extra jobs) because `dim` is usually
+    *                 checkpoint-rooted and its Catalyst size estimate
+    *                 is garbage — a forced broadcast justified only by
+    *                 assumption never re-decides itself as the
+    *                 dimension grows. The default (4M rows, ~0.5 GB of
+    *                 (_bk, key, 64-char hash) lookup tuples) fits
+    *                 comfortably in executor build memory; the expire
+    *                 set is gated by the same measurement since changed
+    *                 keys ⊆ active keys.
     */
   def merge(dim: DataFrame, incoming: DataFrame, spec: Spec, now: Column,
-            broadcastDim: Boolean = true,
             newKeyValidFrom: Option[Column] = None,
             dimBroadcastMaxRows: Long = 4000000L): DataFrame = {
     val attrCols = incoming.columns.toSeq
@@ -135,7 +134,7 @@ object Scd2 {
     // Key continuation + broadcast sizing via ONE eager probe.
     // Deliberately not a lazy broadcast scalar: the probe doubles as
     // materialization of a cached/persisted `dim`, so the merge's
-    // several broadcast exchanges read the cache instead of racing to
+    // broadcast exchanges read the cache instead of racing to
     // evaluate the dimension lineage concurrently — measured ~2×
     // faster on a chained merge than the lazy-scalar formulation.
     // The same row rides the active-row count out: `dim` is typically
@@ -150,34 +149,33 @@ object Scd2 {
       count(when(col("IsActive"), lit(1)))).head()
     val maxKey: Long = probe.getLong(0)
     val activeRows: Long = probe.getLong(1)
-    val dimFitsBroadcast = activeRows <= dimBroadcastMaxRows
+    // The expire set ⊆ active keys, so the bound that clears the
+    // lookup broadcast clears the expire set too; past it the planner
+    // shuffles both joins.
+    def bounded(df: DataFrame): DataFrame =
+      if (activeRows <= dimBroadcastMaxRows) broadcast(df) else df
 
-    val activeLookup0 = dim.filter(col("IsActive")).select(
+    val activeLookup = bounded(dim.filter(col("IsActive")).select(
       col(spec.businessKey).as("_bk"),
       col(spec.surrogateKey).as("_existingKey"),
-      col("RowHash").as("_existingHash"))
-    val activeLookup =
-      if (broadcastDim && dimFitsBroadcast) broadcast(activeLookup0)
-      else activeLookup0
-
-    val joined = hashed.join(
-      activeLookup, hashed(spec.businessKey) === activeLookup("_bk"), "left")
+      col("RowHash").as("_existingHash")))
 
     // 3-way split (reference `DF_SCD2_Customer.json:148-152`), made
-    // mutually exclusive: new key | changed hash | unchanged (dropped).
-    val toInsert = joined
-      .withColumn("_isNewKey", col("_existingKey").isNull)
-      .filter(col("_isNewKey") || col("RowHash") =!= col("_existingHash"))
-      .drop("_bk", "_existingKey", "_existingHash")
-    val changedKeys = joined
-      .filter(col("_existingKey").isNotNull && col("RowHash") =!= col("_existingHash"))
-      .select(col("_existingKey").as(spec.surrogateKey))
+    // mutually exclusive: new key (`_existingKey` null) | changed hash
+    // (`_existingKey` = the version it supersedes) | unchanged
+    // (dropped). Key assignment materializes this frame once, so the
+    // hash and the lookup run exactly once per batch.
+    val toInsert = hashed
+      .join(activeLookup, hashed(spec.businessKey) === activeLookup("_bk"), "left")
+      .filter(col("_existingKey").isNull || col("RowHash") =!= col("_existingHash"))
+      .drop("_bk", "_existingHash")
+    val keyed = Ids.addContiguousIds(
+      toInsert, Seq(col(spec.businessKey)), spec.surrogateKey, maxKey)
 
     val validFrom = newKeyValidFrom
-      .map(nk => when(col("_isNewKey"), nk).otherwise(now))
+      .map(nk => when(col("_existingKey").isNull, nk).otherwise(now))
       .getOrElse(now)
-    val inserted = Ids.addContiguousIds(
-        toInsert, Seq(col(spec.businessKey)), spec.surrogateKey, maxKey)
+    val inserted = keyed
       .withColumn("IsActive", lit(true))
       .withColumn("ValidFrom", validFrom)
       .withColumn("ValidTo", lit(null).cast(TimestampType))
@@ -185,23 +183,16 @@ object Scd2 {
       .withColumn("ModifiedDate", now)
       .select(spec.surrogateKey, attrCols ++ MetaCols: _*)
 
-    val dimCols = col(spec.surrogateKey) +: attrCols.map(col) ++: MetaCols.map(col)
-    // Expire the superseded versions; everything else passes through.
-    // changedKeys ⊆ active dim keys, so the measured active-row bound
-    // that cleared the lookup broadcast clears this narrower set too;
-    // past the bound — or with broadcastDim=false, which the contract
-    // says forces shuffle joins OUTRIGHT on both sides — let the
-    // planner shuffle both semi/anti joins.
-    val expireSet =
-      if (broadcastDim && dimFitsBroadcast) broadcast(changedKeys) else changedKeys
-    val expired = dim.join(expireSet, Seq(spec.surrogateKey), "left_semi")
-      .withColumn("IsActive", lit(false))
-      .withColumn("ValidTo", now)
-      .withColumn("ModifiedDate", now)
-      .select(dimCols: _*)
-    val untouched = dim.join(expireSet, Seq(spec.surrogateKey), "left_anti")
-      .select(dimCols: _*)
-
-    untouched.unionByName(expired).unionByName(inserted.select(dimCols: _*))
+    // Expire the superseded versions in place; everything else
+    // passes through unchanged.
+    val expireSet = bounded(keyed.filter(col("_existingKey").isNotNull)
+      .select(col("_existingKey").as("_expiredKey")))
+    val expired = col("_expiredKey").isNotNull
+    dim.join(expireSet, dim(spec.surrogateKey) === expireSet("_expiredKey"), "left")
+      .withColumn("IsActive", when(expired, lit(false)).otherwise(col("IsActive")))
+      .withColumn("ValidTo", when(expired, now).otherwise(col("ValidTo")))
+      .withColumn("ModifiedDate", when(expired, now).otherwise(col("ModifiedDate")))
+      .select(spec.surrogateKey, attrCols ++ MetaCols: _*)
+      .unionByName(inserted)
   }
 }

@@ -174,10 +174,9 @@ object ParityQueries {
         Seq("CustomerName", "SearchType", "CategoryCode"))
       val t0 = to_timestamp(lit("2024-01-01 00:00:00"))
       val t1 = to_timestamp(lit("2024-06-01 00:00:00"))
-      // localCheckpoint (not cache): merge-2 then plans over a flat
-      // LogicalRDD scan instead of re-analyzing merge-1's whole DAG
-      // three times — the operator scaladoc's chaining guidance;
-      // cuts ~0.5 s of driver planning at sf0.1
+      // localCheckpoint (not cache): merge-2 then plans and runs over
+      // a flat LogicalRDD scan instead of re-evaluating merge-1's
+      // whole DAG — the operator scaladoc's chaining guidance
       val dim1 = Scd2.merge(Scd2.emptyDim(s, b1, spec), b1, spec, t0)
         .localCheckpoint()
       val dim2 = Scd2.merge(dim1, b2, spec, t1)

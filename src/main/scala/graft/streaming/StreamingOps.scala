@@ -234,7 +234,7 @@ object StreamingOps {
     * Equivalence with the monolithic sink is structural, not
     * approximate: [[graft.operators.Scd2.merge]] only reads active
     * rows (the lookup filters `IsActive`; the expire set is ⊆ active
-    * keys, so inactive rows always pass through `untouched`
+    * keys, so inactive rows always pass through the expire join
     * unchanged), hence `merge(active ∪ closed) = merge(active) ∪
     * closed` row for row. The surrogate-key seed also survives the
     * split: `max(surrogateKey)` always sits on an ACTIVE row, because

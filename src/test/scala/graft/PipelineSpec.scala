@@ -298,6 +298,17 @@ class PipelineSpec extends SparkSpec {
     }
     assert(calls == 3)
     assert(alerted.contains("silver"))
+    // fatal errors are not retried and not alerted: they propagate
+    // from the first attempt
+    calls = 0; alerted = None
+    intercept[LinkageError] {
+      Pipeline.withRetry("silver", attempts = 3,
+        onFailure = (st, _) => alerted = Some(st)) {
+        calls += 1; throw new LinkageError("fatal")
+      }
+    }
+    assert(calls == 1)
+    assert(alerted.isEmpty)
   }
 
   test("jsonl and orc round-trip with schema and value fidelity") {

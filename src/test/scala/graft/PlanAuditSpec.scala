@@ -126,8 +126,7 @@ class PlanAuditSpec extends SparkSpec {
     * batch-bounded = sized by the operational unit a caller submits
     * (a merge batch, an ANN query workload), not by the corpus;
     * dim-bounded = sized by a dimension/entity table (the Kimball
-    * broadcast-dim assumption; the owning operator exposes
-    * broadcastDim=false for dims that outgrow memory);
+    * broadcast-dim assumption);
     * param-bounded = sized by an algorithm constant (codebook k,
     * centroid count). */
   private val forcedBroadcastAllowlist: Map[String, String] = Map(
@@ -139,8 +138,10 @@ class PlanAuditSpec extends SparkSpec {
     // it is planner-chosen, not forced.
     "q05_scd2_merge" -> ("measured-bounded: the lookup AND expire " +
       "broadcasts are gated on the active-row count probed at merge " +
-      "time (Scd2.merge dimBroadcastMaxRows; auto-switch to shuffle " +
-      "joins past 4M rows — both regimes plan-asserted in Scd2Spec) " +
+      "time (Scd2.merge dimBroadcastMaxRows, no override; auto-switch " +
+      "to shuffle joins past 4M rows — both regimes plan-asserted in " +
+      "Scd2Spec). The lookup broadcast runs in the key-assignment " +
+      "checkpoint job, so this plan shows the expire broadcast " +
       "— census rows 2×15,000 + 2×5,000 @sf0.1"),
     "q135_int8_quant_ann" -> ("batch-bounded (quantized ANN query " +
       "workload) — 10 rows @sf0.1"),

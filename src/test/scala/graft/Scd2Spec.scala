@@ -70,10 +70,10 @@ class Scd2Spec extends SparkSpec {
       if (rows.nonEmpty) {
         val changed = rows.filterNot(r => model.get(r._1).contains((r._2, r._3, r._4)))
         // localCheckpoint breaks lineage between rounds: each merge
-        // references the prior dimension three times (expire/untouch/
-        // key-seed), so an unbroken 6-deep chain grows the analyzed
-        // plan ~3^n and stalls planning. Real pipelines break it the
-        // same way by persisting the dimension between runs.
+        // re-evaluates its input (max-key probe, expire join), so an
+        // unbroken 6-deep chain would recompute every earlier round.
+        // Real pipelines break it the same way by persisting the
+        // dimension between runs.
         dim = Scd2.merge(dim, batch(rows: _*), spec,
           ts(f"2024-0$step%d-01 00:00:00")).localCheckpoint()
         model ++= changed.map(r => r._1 -> ((r._2, r._3, r._4)))
@@ -121,43 +121,55 @@ class Scd2Spec extends SparkSpec {
 
   test("measured bound fires: dimBroadcastMaxRows=0 merges via shuffle joins, " +
        "row-identical to the broadcast regime") {
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     // b2 exercises all three split branches against dim1: changed
-    // hash (10), unchanged (20), new key (30) — so the lookup join,
-    // the expire semi join AND the untouched anti join all carry rows.
+    // hash (10), unchanged (20), new key (30) — so the lookup join
+    // and the expire join both carry rows.
     val b2 = batch((10L, "Acme Corp", "C", "100"), (20L, "Globex", "C", "200"),
       (30L, "Initech", "C", "300"))
     val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
       ts("2024-01-01 00:00:00")).localCheckpoint()
-    def bhjCount(df: org.apache.spark.sql.DataFrame): Int = {
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      // ignore Ids.addContiguousIds' structural offsets join
-      // (<= shuffle partitions rows by construction) — this test
-      // gates DIMENSION broadcasts only
-      plan.collect {
-        case b: BroadcastHashJoinExec
-          if !b.rightKeys.exists(_.references.exists(a =>
-            graft.operators.Ids.isOffsetsInternal(a.name))) => b
-      }.size
+    // dimension joins only: Ids.addContiguousIds' structural offsets
+    // join (<= shuffle partitions rows by construction) is exempt
+    def dimJoins(p: SparkPlan): Seq[BaseJoinExec] = (p match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }).collect {
+      case j: BaseJoinExec
+        if !j.rightKeys.exists(_.references.exists(a =>
+          graft.operators.Ids.isOffsetsInternal(a.name))) => j
     }
+    // The lookup join runs inside the key assignment's checkpoint, so
+    // it only shows in that job's plan; the expire join is in the
+    // returned frame's plan. Returns (lookup joins, expire joins, rows).
+    def mergeWithBound(bound: Long) = {
+      var merged: org.apache.spark.sql.DataFrame = null
+      val plans = executedPlans {
+        merged = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"),
+          dimBroadcastMaxRows = bound)
+      }
+      val lookup = plans.collect { case ("localCheckpoint", p) => p }.flatMap(dimJoins)
+      (lookup, dimJoins(merged.queryExecution.executedPlan), merged)
+    }
+    def isBhj(j: BaseJoinExec) = j.isInstanceOf[BroadcastHashJoinExec]
     // Kill Catalyst's own size-based broadcasts so any BHJ left in the
     // plan can only come from Scd2.merge's explicit broadcast() hints
     // — the thing the measured bound exists to withhold.
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val shuffled = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"),
-        dimBroadcastMaxRows = 0L)
-      assert(bhjCount(shuffled) == 0,
-        "active-rows(2) > bound(0): lookup and expire joins must not broadcast")
-      // control: the default bound broadcasts (proves the re-decision,
-      // not just the absence of broadcasts under a hostile conf)
-      val bcast = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"))
-      assert(bhjCount(bcast) >= 2,
+      val (sLookup, sExpire, shuffled) = mergeWithBound(0L)
+      assert(sLookup.size == 1 && sExpire.size == 1, s"$sLookup / $sExpire")
+      assert(!sLookup.exists(isBhj) && !sExpire.exists(isBhj),
+        "active-rows(2) > bound(0): lookup and expire joins must shuffle")
+      // control: the default bound (4M rows) broadcasts (proves the
+      // re-decision, not just the absence of broadcasts under a
+      // hostile conf)
+      val (bLookup, bExpire, bcast) = mergeWithBound(4000000L)
+      assert(bLookup.size == 1 && bExpire.size == 1, s"$bLookup / $bExpire")
+      assert(bLookup.forall(isBhj) && bExpire.forall(isBhj),
         "within the bound the lookup AND expire joins broadcast")
       assert(shuffled.exceptAll(bcast).count() == 0 &&
              bcast.exceptAll(shuffled).count() == 0,
@@ -166,31 +178,47 @@ class Scd2Spec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
   }
 
-  test("broadcastDim=false forces shuffle joins on lookup AND expire sides") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+  test("merge result references the input dimension once (no plan growth)") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val dir = java.nio.file.Files.createTempDirectory("scd2-dim").toString
+    Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec, ts("2024-01-01 00:00:00"))
+      .write.mode("overwrite").parquet(dir)
     val b2 = batch((10L, "Acme Corp", "C", "100"), (30L, "Initech", "C", "300"))
-    val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
-      ts("2024-01-01 00:00:00")).localCheckpoint()
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    val merged = Scd2.merge(spark.read.parquet(dir), b2, spec, ts("2024-06-01 00:00:00"))
+    val dimScans = merged.queryExecution.analyzed.collect {
+      case r: LogicalRelation => r
+    }
+    assert(dimScans.size == 1, merged.queryExecution.analyzed.treeString)
+    assert(merged.count() == 4 && merged.filter($"IsActive").count() == 3)
+  }
+
+  /** (funcName, executed plan) of every query `body` runs, checkpoints
+    * included (as "localCheckpoint"). Listener events arrive
+    * asynchronously but in order, so sentinel queries run before and
+    * after the block bracket exactly its queries (as in [[JobCount]]). */
+  private def executedPlans(body: => Any)
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.put(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.put(f -> qe)
+    }
+    def isSentinel(qe: QueryExecution, tag: String) =
+      qe.analyzed.output.map(_.name) == Seq(tag)
+    def sentinel(tag: String): Unit = spark.range(1).toDF(tag).collect()
+    spark.listenerManager.register(listener)
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val d = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"),
-        broadcastDim = false)
-      val plan = d.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      val bhj = plan.collect {
-        case b: BroadcastHashJoinExec
-          if !b.rightKeys.exists(_.references.exists(a =>
-            graft.operators.Ids.isOffsetsInternal(a.name))) => b
-      }.size
-      // The documented contract: broadcastDim=false forces shuffle
-      // joins outright — the expire set must honor it even though the
-      // tiny dimension is well inside the measured bound.
-      assert(bhj == 0, s"broadcastDim=false must leave no BHJ, found $bhj")
-      assert(d.filter($"IsActive").count() == 3 && d.count() == 4)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      sentinel("plans_open")
+      body
+      sentinel("plans_close")
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .map(e => { require(e != null, "listener bus stalled"); e })
+        .takeWhile(e => !isSentinel(e._2, "plans_close")).toSeq
+        .dropWhile(e => !isSentinel(e._2, "plans_open")).drop(1)
+        .map { case (f, qe) => f -> qe.executedPlan }
+    } finally spark.listenerManager.unregister(listener)
   }
 }
