@@ -1,8 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,6 +21,16 @@ import graft.types.Schemas
   * function; stage boundaries are lake writes; retries/alerts are a
   * plain wrapper (the documented-but-absent OnFailure alert webhook —
   * SURVEY.md C7 — becomes an injectable callback).
+  *
+  * [[run]] is a dependency graph, not a chain: after the Bronze
+  * barrier, the Silver decode, the SCD2 merge, the calendar dimension
+  * and the fact key-offset probe run concurrently, and the fact load
+  * runs once all four have settled. The reference orders Clean before
+  * SCD2 only as an ADF control step (`PL_Transform_Silver.json:55-61`);
+  * no data flows between them. Running the branches together is sound
+  * because they share no input that another branch writes and write
+  * disjoint tables — keep that invariant when adding a branch. Both
+  * fan-outs, [[ingest]]'s and [[run]]'s, go through [[settleAll]].
   */
 object Pipeline {
 
@@ -72,29 +81,46 @@ object Pipeline {
       }
   }
 
+  /** Runs `branches` at most `parallelism` at a time and waits for
+    * every one of them to finish, successful or not. Then it rethrows
+    * the first failure in `branches` order, with the later ones
+    * attached as suppressed; fatal errors included.
+    *
+    * The pool is created per call, from the calling thread, so each
+    * branch thread inherits the caller's active `SparkSession` and
+    * Spark local properties. Settling every branch before rethrowing
+    * means a caller's retry never starts while a sibling is still
+    * writing. */
+  private[graft] def settleAll(parallelism: Int)(branches: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(parallelism)
+    try {
+      val running = branches.map(b => pool.submit(new Callable[Unit] { def call(): Unit = b() }))
+      val failures = running.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
+  }
+
   /** C1 — ingest every configured CSV into time-partitioned Bronze,
     * `parallelism`-way concurrent (reference ForEach batchCount=4,
     * `PL_Ingest_Bronze.json:53-54`). Spark schedules the jobs
     * concurrently from the driver; each file's read→write is an
-    * independent job. */
+    * independent job. A failed file fails the call only after every
+    * other file has settled ([[settleAll]]). */
   def ingest(spark: SparkSession, zones: LakeZones, landingDir: String,
              specs: Seq[SourceSpec], ingestDate: LocalDate,
-             parallelism: Int = 4): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val jobs = specs.map { spec =>
-        Future {
-          val table = spec.sourceFile.stripSuffix(".csv")
-          val schema = SchemaFor.getOrElse(table,
-            sys.error(s"no schema registered for $table"))
-          val df = LakeIO.readCsv(spark, s"$landingDir/${spec.sourceFile}", schema)
-          LakeIO.writeBronze(df, zones, spec.sinkPath, ingestDate)
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf)
-    } finally pool.shutdown()
-  }
+             parallelism: Int = 4): Unit =
+    settleAll(parallelism)(specs.map { spec => () =>
+      val table = spec.sourceFile.stripSuffix(".csv")
+      val schema = SchemaFor.getOrElse(table,
+        sys.error(s"no schema registered for $table"))
+      val df = LakeIO.readCsv(spark, s"$landingDir/${spec.sourceFile}", schema)
+      LakeIO.writeBronze(df, zones, spec.sinkPath, ingestDate)
+    })
 
   /** C7 retry wrapper: `attempts` total tries, `onFailure` alert hook
     * with the reference's webhook payload shape (message, stage —
@@ -130,55 +156,81 @@ object Pipeline {
   }
 
   /** Full Bronze→Silver→Gold run (entry point 1, SURVEY.md §3.1).
-    * Returns the loaded fact frame for inspection. */
+    * Returns the loaded fact frame for inspection.
+    *
+    * The schedule is a graph (see [[Pipeline]]):
+    *  1. Bronze ingest, a barrier;
+    *  1. four concurrent branches: the Silver decode
+    *     (`silver/transactions`), the SCD2 merge (`gold/dim_customer`),
+    *     the calendar (`gold/dim_date`) and the fact key-offset probe
+    *     (reads `gold/fact_sales`, writes nothing);
+    *  1. the fact load, which reads all four outputs.
+    *
+    * Each branch is retried and alerted on its own, under its stage
+    * name: decode and SCD2 as `silver`, calendar and key probe as
+    * `gold`, the fact load as `gold`. Alerts are serialized, so
+    * `onFailure` need not be thread-safe. A failed branch fails the
+    * run once its siblings have settled, and the fact load does not
+    * start. */
   def run(spark: SparkSession, zones: LakeZones, landingDir: String,
           configPath: String, ingestDate: LocalDate,
           now: java.sql.Timestamp,
           onFailure: (String, Throwable) => Unit = (_, _) => ()): DataFrame = {
     val nowCol = lit(now).cast("timestamp")
+    val loadId = ingestDate.toString
+    val alertLock = new Object
+    val alert: (String, Throwable) => Unit =
+      (stage, e) => alertLock.synchronized(onFailure(stage, e))
 
-    withRetry("bronze", onFailure = onFailure) {
+    withRetry("bronze", onFailure = alert) {
       ingest(spark, zones, landingDir, readConfig(spark, configPath), ingestDate)
     }
 
-    val silver = withRetry("silver", onFailure = onFailure) {
-      val f4211 = LakeIO.readBronze(spark, zones, "jde/F4211", Some(ingestDate),
-          Some(Schemas.F4211))
-        .select(Schemas.F4211.fieldNames.map(col).toIndexedSeq: _*)
-      val cleaned = conforming("transactions")(CleanJde(f4211))
-      LakeIO.overwriteSilver(cleaned, zones, "transactions")
+    // written by the probe branch; settleAll's wait on that branch
+    // orders the write before the fact load reads it
+    var keyOffset = 0L
+    val branches: Seq[() => Unit] = Seq(
+      () => withRetry("silver", onFailure = alert) {
+        val f4211 = LakeIO.readBronze(spark, zones, "jde/F4211", Some(ingestDate),
+            Some(Schemas.F4211))
+          .select(Schemas.F4211.fieldNames.map(col).toIndexedSeq: _*)
+        LakeIO.overwriteSilver(conforming("transactions")(CleanJde(f4211)),
+          zones, "transactions")
+      },
+      () => withRetry("silver", onFailure = alert) {
+        val f0101 = LakeIO.readBronze(spark, zones, "jde/F0101", Some(ingestDate),
+          Some(Schemas.F0101))
+        // only an absent table means a first load: any read error must
+        // fail the stage, not re-seed the dimension from CustomerKey 1
+        val dim0 =
+          if (LakeIO.goldExists(spark, zones, "dim_customer"))
+            Some(readGold(spark, zones, "dim_customer"))
+          else None
+        val dim1 = mergeCustomers(spark, dim0, f0101, nowCol)
+        // read-modify-write: materialize to a staging dir, then swap —
+        // the live dir stays intact while the job reads from it
+        LakeIO.replaceGold(conforming("dim_customer")(dim1), zones, "dim_customer")
+      },
+      () => withRetry("gold", onFailure = alert) {
+        LakeIO.overwriteGold(conforming("dim_date")(CalendarDim(spark)), zones, "dim_date")
+      },
+      () => withRetry("gold", onFailure = alert) {
+        // IDENTITY(1,1) continuation: seed SalesKey from the existing
+        // fact's max so incremental loads never reuse keys (ADVICE r01);
+        // exclude this run's own load_id so a retry re-assigns the SAME
+        // key range instead of stacking on its partial previous attempt.
+        // Only an absent table starts at 0: a read error fails the stage.
+        keyOffset =
+          if (!LakeIO.goldExists(spark, zones, "fact_sales")) 0L
+          else readGold(spark, zones, "fact_sales")
+            .filter(col("load_id") =!= loadId)
+            .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
+      })
+    settleAll(branches.size)(branches)
 
-      val f0101 = LakeIO.readBronze(spark, zones, "jde/F0101", Some(ingestDate),
-        Some(Schemas.F0101))
-      // only an absent table means a first load: any read error must
-      // fail the stage, not re-seed the dimension from CustomerKey 1
-      val dim0 =
-        if (LakeIO.goldExists(spark, zones, "dim_customer"))
-          Some(readGold(spark, zones, "dim_customer"))
-        else None
-      val dim1 = mergeCustomers(spark, dim0, f0101, nowCol)
-      // read-modify-write: materialize to a staging dir, then swap —
-      // the live dir stays intact while the job reads from it
-      LakeIO.replaceGold(conforming("dim_customer")(dim1), zones, "dim_customer")
-      LakeIO.readSilver(spark, zones, "transactions", Some(ContractFor("transactions")))
-    }
-
-    withRetry("gold", onFailure = onFailure) {
-      val dimDate = conforming("dim_date")(CalendarDim(spark))
-      LakeIO.overwriteGold(dimDate, zones, "dim_date")
-      // IDENTITY(1,1) continuation: seed SalesKey from the existing
-      // fact's max so incremental loads never reuse keys (ADVICE r01);
-      // exclude this run's own load_id so a retry re-assigns the SAME
-      // key range instead of stacking on its partial previous attempt.
-      // Only an absent table starts at 0: a read error fails the stage.
-      val loadId = ingestDate.toString
-      val keyOffset: Long =
-        if (!LakeIO.goldExists(spark, zones, "fact_sales")) 0L
-        else readGold(spark, zones, "fact_sales")
-          .filter(col("load_id") =!= loadId)
-          .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
+    withRetry("gold", onFailure = alert) {
       val fact = FactLoad.loadFactSales(
-        silver,
+        LakeIO.readSilver(spark, zones, "transactions", Some(ContractFor("transactions"))),
         readGold(spark, zones, "dim_customer"),
         readGold(spark, zones, "dim_date"),
         nowCol, keyOffset)

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.{LakeIO, LakeZones}
 import graft.types.Schemas
@@ -113,6 +116,32 @@ class PipelineSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-02")))
   }
 
+  test("an unreadable dim_customer fails the silver stage after its siblings settle") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    val dimDir = Paths.get(s"$lake/gold/dim_customer")
+    val part = Files.list(dimDir).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.write(part, Array.fill[Byte](64)(7))
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+
+    // not thread-safe on purpose: run serializes its alerts
+    var alerts = Vector.empty[String]
+    intercept[Exception] {
+      Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"),
+        onFailure = (stage, _) => alerts :+= stage)
+    }
+    assert(alerts == Seq("silver"))
+    // the fact load never started
+    assert(!Files.exists(Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-02")))
+    // the concurrent decode finished its commit before the run failed
+    assert(!Files.exists(Paths.get(s"$lake/silver/transactions/_temporary")))
+  }
+
   test("a dim_customer swap that crashed before day 2 is recovered, not re-seeded") {
     val landing = mkTmp(); val lake = mkTmp()
     writeLanding(landing)
@@ -169,7 +198,6 @@ class PipelineSpec extends SparkSpec {
         Seq((i.toLong, s"row$i")).toDF("id", "v"), zones, "tiny", s"b$i")
     }
     def dataFiles(): Int = {
-      import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(Paths.get(s"$lake/gold/tiny")).iterator().asScala
         .count(_.toString.endsWith(".parquet"))
     }
@@ -210,7 +238,6 @@ class PipelineSpec extends SparkSpec {
     // tiny target size forces several files; partition-col-only keying
     // would emit exactly one file for the single load_id
     LakeIO.compactGold(spark, zones, "hot", targetFileBytes = 64 * 1024)
-    import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(Paths.get(s"$lake/gold/hot")).iterator()
       .asScala.count(_.toString.endsWith(".parquet"))
     assert(files > 1, s"hot partition must split across files, got $files")
@@ -309,6 +336,49 @@ class PipelineSpec extends SparkSpec {
     }
     assert(calls == 1)
     assert(alerted.isEmpty)
+  }
+
+  test("settleAll runs branches concurrently") {
+    val latch = new CountDownLatch(2)
+    val met = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    Pipeline.settleAll(2)(Seq.fill(2) { () =>
+      latch.countDown()
+      met.add(latch.await(30, TimeUnit.SECONDS))
+    })
+    // each branch saw the other count down: both were running at once
+    assert(met.asScala.toSeq == Seq(true, true))
+  }
+
+  test("settleAll waits for every branch, then rethrows the first failure") {
+    val siblingDone = new AtomicBoolean(false)
+    val ex = intercept[IllegalStateException] {
+      Pipeline.settleAll(3)(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(500); siblingDone.set(true) },
+        () => throw new IllegalArgumentException("second")))
+    }
+    assert(siblingDone.get, "rethrown before the slower sibling finished")
+    assert(ex.getMessage == "first")
+    assert(ex.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+  }
+
+  test("settleAll propagates a fatal error instead of hanging") {
+    var calls = 0
+    val caller = Executors.newSingleThreadExecutor()
+    try {
+      val outcome = caller.submit(new Callable[Throwable] {
+        def call(): Throwable =
+          try {
+            Pipeline.withRetry("bronze", attempts = 3) {
+              calls += 1
+              Pipeline.settleAll(2)(Seq(() => throw new LinkageError("fatal"), () => ()))
+            }
+            null
+          } catch { case t: Throwable => t }
+      })
+      assert(outcome.get(60, TimeUnit.SECONDS).isInstanceOf[LinkageError])
+      assert(calls == 1)
+    } finally caller.shutdownNow()
   }
 
   test("jsonl and orc round-trip with schema and value fidelity") {
