@@ -60,9 +60,7 @@ object FrameAudit {
     for (name <- names; dir <- dirs) {
       val df = SparkEntry.queries(name)(spark, dir)
       val frames = df.queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty &&
-          !w.child.output.exists(a =>
-            graft.operators.Ids.isOffsetsInternal(a.name)) => w.child
+        case w: LWindow if w.partitionSpec.isEmpty => w.child
       }
       val counts = frames.map(c => PlanBridge.ofRows(spark, c).count())
       spark.catalog.clearCache()

@@ -1,8 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.util.AccumulatorV2
 
 /** Contiguous surrogate-key assignment without a single-partition
   * window (the T-SQL `INT IDENTITY` replacement — reference
@@ -12,43 +14,72 @@ import org.apache.spark.sql.types.LongType
   * DataFrame onto ONE partition — fine for a 50-row demo, a
   * bottleneck at 100 TB. Instead: range-repartition on the sort
   * expressions (asc/desc honored; global order preserved across
-  * partitions), sort within partitions, materialize ONCE with
-  * per-partition positions (`monotonically_increasing_id`), and add
-  * the per-partition offsets back with a bounded prefix sum + a
-  * broadcast join — all Catalyst, no external-Row round trip.
+  * partitions), sort within partitions, and materialize ONCE with
+  * per-partition positions (`monotonically_increasing_id`). The same
+  * job reports each partition's row count to the driver through an
+  * accumulator; the driver prefix-sums those ≤ shuffle-partitions
+  * counts and the id is one projection over the materialized rows —
+  * no aggregate, window, join or broadcast in the returned plan.
   * Deterministic for a unique sort ordering; scales linearly with
   * executors.
   *
-  * WHY THE SINGLE MATERIALIZATION IS LOAD-BEARING (r03/r12 lesson,
-  * preserved across the round-14 rewrite): deriving per-partition
-  * offsets from a SECOND read of the range exchange is only sound
-  * while Catalyst reuses one materialized exchange for both branches.
-  * When column pruning (or any rewrite) makes the two subtrees
-  * unequal, each branch materializes its OWN exchange — and
-  * `RangePartitioner` seeds its boundary sampling with the RDD id, so
-  * the two materializations can place rows in DIFFERENT partitions:
-  * the pid-keyed offset join then silently mis-assigns ids (caught by
-  * the q05 oracle gate). The old implementation pinned one RDD with
-  * `zipWithIndex`; the current one pins one via
-  * [[Checkpoints.truncate]] — same guarantee, but the data path stays
-  * inside codegen instead of deserializing every row to an external
-  * Row and re-encoding it through an interpreted schema encoder.
+  * WHY THE SINGLE MATERIALIZATION IS LOAD-BEARING (r03/r12 lesson):
+  * the per-partition offsets are only sound if they describe the same
+  * partitioning the ids are read from. Two independent evaluations of
+  * the range exchange can place rows in DIFFERENT partitions
+  * (`RangePartitioner` seeds its boundary sampling with the RDD id),
+  * and a pid-keyed offset then silently mis-assigns ids (caught by
+  * the q05 oracle gate). [[Checkpoints.truncate]] pins one
+  * materialization, and the counts are taken from that very job, so
+  * counts and rows cannot disagree by construction. The accumulator
+  * merges by max per partition id: a retried or recomputed task, or
+  * reliable checkpointing's second evaluation of the plan, re-sends
+  * the same count instead of adding to it.
   */
 object Ids {
 
-  /** Column-name convention for the internal offsets frame
-    * ([[addContiguousIds]]): `__<idCol>_pid` / `__<idCol>_off` /
-    * `__<idCol>_mid`. The offsets frame is STRUCTURALLY bounded at
-    * ≤ `spark.sql.shuffle.partitions` rows — it aggregates the
-    * partition ids of the pinned range exchange — so its global
-    * prefix-sum window and its broadcast join back are O(cores), not
-    * O(corpus), at any scale. The plan audits (PlanAuditSpec,
-    * ScaleSpec, Scd2Spec) recognize the construct by this marker and
-    * exempt it from the corpus-sized-global-window / forced-broadcast
-    * tripwires; everything else stays gated. */
-  def isOffsetsInternal(name: String): Boolean =
-    name.startsWith("__") &&
-      (name.endsWith("_pid") || name.endsWith("_off") || name.endsWith("_mid"))
+  /** Row-index field width of `monotonically_increasing_id`
+    * (partitionId·2³³ + row index). */
+  private val IndexBits = 33
+  private val IndexMask = (1L << IndexBits) - 1
+
+  /** Rows per partition of one materialization, keyed by the
+    * partition field of `monotonically_increasing_id`: each row adds
+    * its id, a partition's count is its largest row index + 1, and
+    * merging takes the max per partition (idempotent under re-sends). */
+  private[graft] final class PartitionRows
+      extends AccumulatorV2[Long, Map[Int, Long]] {
+    private val rows = mutable.HashMap.empty[Int, Long]
+    private def put(pid: Int, n: Long): Unit =
+      if (rows.getOrElse(pid, 0L) < n) rows.update(pid, n)
+    override def isZero: Boolean = rows.isEmpty
+    override def copy(): PartitionRows = {
+      val c = new PartitionRows; c.rows ++= rows; c
+    }
+    override def reset(): Unit = rows.clear()
+    override def add(mid: Long): Unit =
+      put((mid >>> IndexBits).toInt, (mid & IndexMask) + 1)
+    override def merge(other: AccumulatorV2[Long, Map[Int, Long]]): Unit =
+      synchronized(other.value.foreach { case (pid, n) => put(pid, n) })
+    override def value: Map[Int, Long] = synchronized(rows.toMap)
+  }
+
+  /** Start offset of each of `parts` partitions (rows in the
+    * partitions before it), checking the two invariants the ids rest
+    * on: every partition id lies inside the range exchange, and no
+    * partition overflows the 2³³ row-index field (past it, ids of
+    * neighbouring partitions silently overlap). */
+  private[graft] def partitionOffsets(rows: Map[Int, Long], parts: Int): Array[Long] = {
+    rows.foreach { case (pid, n) =>
+      if (pid >= parts) throw new IllegalStateException(
+        s"contiguous ids: partition id $pid outside the $parts-partition range exchange")
+      if (n >= (1L << IndexBits)) throw new IllegalStateException(
+        s"contiguous ids: partition $pid holds $n rows, past the 2^$IndexBits " +
+          "row-index field of monotonically_increasing_id")
+    }
+    (0 until parts).scanLeft(0L)((acc, pid) => acc + rows.getOrElse(pid, 0L))
+      .take(parts).toArray
+  }
 
   /** Adds `idCol` = offset+1, offset+2, … following the global order
     * of `sortCols` (which must be a unique ordering for determinism;
@@ -57,7 +88,6 @@ object Ids {
   def addContiguousIds(df: DataFrame, sortCols: Seq[Column], idCol: String,
                        offset: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    import org.apache.spark.sql.expressions.Window
     // pin the partition count (no AQE coalesce): the exchange is tiny
     // in BYTES at test scale, so AQE folds it to one partition — and
     // every CPU-heavy comparator downstream of the ranks (candidate
@@ -65,48 +95,31 @@ object Ids {
     // size is the wrong signal for compute-bound stages; the
     // configured shuffle parallelism is the contract.
     //
-    // Rank assembly is pure Catalyst (round-14 optimization): the old
-    // form dropped to `sorted.rdd.zipWithIndex` + `createDataFrame`,
-    // which deserializes EVERY row to an external Row and re-encodes
-    // it through an interpreted schema encoder — per-row overhead on
-    // the whole frame, twice (count pass + data pass), outside
-    // codegen. Instead: materialize the range-sorted frame ONCE with
-    // `monotonically_increasing_id` (= partitionId·2³³ + row index —
-    // within-partition positions in the pinned sorted order), then
-    // rank = (rows in partitions before mine) + (my index) + 1. The
-    // per-partition row counts are a tiny (≤ shuffle partitions)
-    // frame; its prefix-sum window and the broadcast join back are
-    // negligible at any scale. Correctness needs both the count
-    // branch and the data branch to read the SAME materialization
-    // (two independent range exchanges may draw different sampled
-    // boundaries — the r03/r12 hazard on the old two-branch plan);
-    // [[Checkpoints.truncate]] pins one, exactly as zipWithIndex
-    // pinned one RDD, and costs the same single construction job the
-    // zipWithIndex count pass already paid. Global rank is
-    // boundary-placement-independent for a unique total order, so the
-    // sampled range boundaries affect layout only, never the ids.
+    // Rank assembly stays inside codegen: materialize the range-sorted
+    // frame ONCE with `monotonically_increasing_id` (within-partition
+    // positions in the pinned sorted order); the checkpoint job itself
+    // feeds every id to a max-merging accumulator, so when it returns
+    // the driver holds each partition's row count and no second pass
+    // over the rows is needed. rank = (rows in partitions before
+    // mine) + (my index) + 1, with the offsets an array literal.
+    // Global rank is boundary-placement-independent for a unique
+    // total order, so the sampled range boundaries affect layout
+    // only, never the ids.
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val rows = new PartitionRows
+    spark.sparkContext.register(rows)
+    val counted = udf { (m: Long) => rows.add(m); m }.asNondeterministic().asNonNullable()
     val mid = s"__${idCol}_mid"
     val sorted = Checkpoints.truncate(df
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
-        sortCols: _*)
+      .repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      .withColumn(mid, monotonically_increasing_id()))
-    val pid = s"__${idCol}_pid"
-    val off = s"__${idCol}_off"
-    val offsets = sorted
-      .groupBy(shiftright(col(mid), 33).as(pid))
-      .agg(count(lit(1)).as(off))
-      // prefix sum over ≤ numShufflePartitions rows — a bounded frame,
-      // so the single-partition window is safe at any scale
-      .withColumn(off, coalesce(sum(col(off)).over(
-        Window.orderBy(col(pid)).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
+      .withColumn(mid, counted(monotonically_increasing_id())))
+    val offs = typedLit(partitionOffsets(rows.value, parts))
     sorted
-      .join(broadcast(offsets), shiftright(col(mid), 33) === col(pid))
       .withColumn(idCol,
-        (lit(offset) + col(off) + col(mid).bitwiseAND(lit((1L << 33) - 1))
-          + lit(1L)).cast(LongType))
-      .drop(mid, pid, off)
+        (lit(offset) + offs(shiftright(col(mid), IndexBits).cast("int"))
+          + col(mid).bitwiseAND(lit(IndexMask)) + lit(1L)).cast(LongType))
+      .drop(mid)
   }
 
   /** Exact SQL `NTILE(k)` bucket computed from a 1-based contiguous

@@ -30,8 +30,10 @@ import graft.functions.JdeFunctions.rowHash
   *    in chained merges, so Catalyst's size estimate is garbage); past
   *    it both joins auto-switch to shuffle joins;
   *  - surrogate keys are assigned with [[Ids.addContiguousIds]]
-  *    (range-partitioned, materialized once), not a single-partition
-  *    `row_number` window;
+  *    (range-partitioned, materialized once, offsets summed on the
+  *    driver), not a single-partition `row_number` window; the keyed
+  *    frame is one projection over that checkpoint, so the expire
+  *    set reads the checkpoint alone;
   *  - one pass per input: the batch is hashed and looked up once,
   *    inside the key assignment's materialization; the changed keys
   *    are read back from that keyed frame, and the dimension flows
@@ -184,7 +186,8 @@ object Scd2 {
       .select(spec.surrogateKey, attrCols ++ MetaCols: _*)
 
     // Expire the superseded versions in place; everything else
-    // passes through unchanged.
+    // passes through unchanged. The expire set needs no id, so it
+    // prunes down to the key assignment's checkpoint scan.
     val expireSet = bounded(keyed.filter(col("_existingKey").isNotNull)
       .select(col("_existingKey").as("_expiredKey")))
     val expired = col("_expiredKey").isNotNull

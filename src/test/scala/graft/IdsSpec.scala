@@ -34,8 +34,8 @@ class IdsSpec extends SparkSpec {
   }
 
   test("repeated evaluation of one plan yields identical ids") {
-    // zipWithIndex pins a single RDD: the count job and every data
-    // job read the same partitioning, so re-evaluating the result
+    // the checkpoint pins a single RDD: the partition counts and every
+    // data job read the same partitioning, so re-evaluating the result
     // (no cache) cannot re-deal rows into different partitions
     val df = spark.range(20000).select(($"id" * 37 % 20011).as("key"))
       .repartition(7)
@@ -69,5 +69,88 @@ class IdsSpec extends SparkSpec {
     val out = Ids.addContiguousIds(df, Seq(col("g"), col("k")), "sk")
       .orderBy("sk").select("g", "k").as[(String, Int)].collect().toSeq
     assert(out == Seq(("a", 1), ("a", 2), ("a", 3), ("b", 1), ("b", 2)))
+  }
+
+  test("the returned plan is one projection over the checkpoint scan") {
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = spark.range(1000).select(($"id" * 37 % 1009).as("key")).repartition(3)
+    val out = Ids.addContiguousIds(df, Seq(col("key")), "sk")
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val offending = plan.collect {
+      case e: Exchange => e
+      case w: WindowExec => w
+      case j: BaseJoinExec => j
+      case a: BaseAggregateExec => a
+    }
+    assert(offending.isEmpty, s"offsets machinery left in the plan:\n$plan")
+    assert(plan.collect { case s: RDDScanExec => s; case s: ExternalRDDScanExec[_] => s }
+      .size == 1, s"expected one checkpoint scan:\n$plan")
+    assert(!out.schema("sk").nullable)
+    assert(out.select("sk").as[Long].collect().sorted.toSeq == (1L to 1000L))
+  }
+
+  test("reliable checkpointing assigns the same ids as local mode") {
+    import graft.operators.Checkpoints
+    val df = spark.range(5000).select(($"id" * 7919 % 5003).as("key")).repartition(6)
+    def ids() = Ids.addContiguousIds(df, Seq(col("key")), "sk")
+      .select("key", "sk").as[(Long, Long)].collect().sortBy(_._1).toSeq
+    val local = ids()
+    val sc = spark.sparkContext
+    val prevDir = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("graft_ids_ckpt").toString
+    spark.conf.set(Checkpoints.ReliableConf, "true")
+    spark.conf.set(Checkpoints.DirConf, dir)
+    val reliable = try ids() finally {
+      spark.conf.set(Checkpoints.ReliableConf, "false")
+      // the context keeps the first checkpoint dir it is given; hand
+      // the shared session back unset so later suites pick their own
+      // (null clears it on a local master)
+      if (prevDir.isEmpty) sc.setCheckpointDir(null)
+    }
+    assert(reliable == local)
+    assert(reliable.map(_._2) == (1L to 5000L))
+  }
+
+  test("more partitions than rows still numbers 1..n") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try {
+      for (n <- Seq(1, 3, 15)) {
+        val df = spark.range(n).select((lit(100L) - $"id").as("key")).repartition(2)
+        val out = Ids.addContiguousIds(df, Seq(col("key")), "sk")
+          .select("sk", "key").as[(Long, Long)].collect().sortBy(_._1).toSeq
+        assert(out.map(_._1) == (1L to n.toLong), s"n=$n")
+        assert(out.map(_._2) == out.map(_._2).sorted, s"n=$n")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("partition counts merge by max: a re-sent count leaves the offsets unchanged") {
+    val rows = new Ids.PartitionRows
+    // partition 0: 3 rows, partition 1: 2 rows, partition 3: 1 row
+    Seq(0L, 1L, 2L, 1L << 33, (1L << 33) + 1, 3L << 33).foreach(rows.add)
+    val once = Ids.partitionOffsets(rows.value, 4).toSeq
+    assert(once == Seq(0L, 3L, 5L, 5L))
+    val resent = rows.copy()
+    rows.merge(resent)
+    rows.merge(resent)
+    assert(Ids.partitionOffsets(rows.value, 4).toSeq == once)
+  }
+
+  test("offsets refuse a partition outside the exchange or past the row-index field") {
+    val outside = intercept[IllegalStateException](
+      Ids.partitionOffsets(Map(0 -> 5L, 4 -> 1L), 4))
+    assert(outside.getMessage.contains("partition id 4"))
+    val overflow = intercept[IllegalStateException](
+      Ids.partitionOffsets(Map(0 -> (1L << 33)), 4))
+    assert(overflow.getMessage.contains("2^33"))
   }
 }

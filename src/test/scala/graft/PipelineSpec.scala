@@ -93,6 +93,23 @@ class PipelineSpec extends SparkSpec {
     assert(LakeIO.readGold(spark, zones, "dim_customer").count() == 51)
   }
 
+  test("a day-1 load runs 15 Spark jobs and a day-2 load 21") {
+    // the load is driver-bound at this scale, so its job count is
+    // pinned: a change that moves it must update the pin and say why
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    def load(day: Int): Int = JobCount(spark) {
+      Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, day),
+        java.sql.Timestamp.valueOf(s"2024-06-0$day 00:00:00"))
+    }
+    val day1 = load(1)
+    writeDay2Customers(landing)
+    val day2 = load(2)
+    assert((day1, day2) == ((15, 21)))
+  }
+
   test("an unreadable fact table fails the gold stage instead of reusing SalesKeys") {
     val landing = mkTmp(); val lake = mkTmp()
     writeLanding(landing)

@@ -46,14 +46,9 @@ class PlanAuditSpec extends SparkSpec {
       }
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        // Ids.addContiguousIds' offsets frame is structurally bounded
-        // at <= shuffle partitions rows (see Ids.isOffsetsInternal) —
-        // its global prefix-sum window is O(cores), not O(corpus)
         val hasGlobal = physical(fn(spark, sf)).collect {
-          case w: WindowExec if w.partitionSpec.isEmpty &&
-            !w.child.output.exists(a => graft.operators.Ids.isOffsetsInternal(a.name)) => w
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty &&
-            !w.child.output.exists(a => graft.operators.Ids.isOffsetsInternal(a.name)) => w
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
         }.nonEmpty
         spark.catalog.clearCache()
         if (hasGlobal && !boundedGlobalWindowFrames.contains(name)) Some(name)
@@ -79,9 +74,7 @@ class PlanAuditSpec extends SparkSpec {
     def maxGlobalFrameRows(name: String, dir: String): Long = {
       val df = SparkEntry.queries(name)(spark, dir)
       val frames = df.queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty &&
-          !w.child.output.exists(a =>
-            graft.operators.Ids.isOffsetsInternal(a.name)) => w.child
+        case w: LWindow if w.partitionSpec.isEmpty => w.child
       }
       assert(frames.nonEmpty,
         s"$name is allowlisted but plans no global window — drop it " +
@@ -141,7 +134,8 @@ class PlanAuditSpec extends SparkSpec {
       "time (Scd2.merge dimBroadcastMaxRows, no override; auto-switch " +
       "to shuffle joins past 4M rows — both regimes plan-asserted in " +
       "Scd2Spec). The lookup broadcast runs in the key-assignment " +
-      "checkpoint job, so this plan shows the expire broadcast " +
+      "checkpoint job and the key offsets are summed on the driver, " +
+      "so this plan shows the expire broadcast only " +
       "— census rows 2×15,000 + 2×5,000 @sf0.1"),
     "q135_int8_quant_ann" -> ("batch-bounded (quantized ANN query " +
       "workload) — 10 rows @sf0.1"),
@@ -188,13 +182,8 @@ class PlanAuditSpec extends SparkSpec {
           case p => p
         }
         val forced = initial.collect {
-          // the Ids offsets broadcast is structurally <= shuffle
-          // partitions rows (Ids.isOffsetsInternal) — its checkpointed
-          // source reports no stats, so the size ESTIMATE is garbage,
-          // but the bound is by construction, not by estimate
           case b: BroadcastExchangeExec
-            if b.child.logicalLink.exists(_.stats.sizeInBytes > threshold) &&
-              !b.output.exists(a => graft.operators.Ids.isOffsetsInternal(a.name)) => b
+            if b.child.logicalLink.exists(_.stats.sizeInBytes > threshold) => b
         }
         spark.catalog.clearCache()
         if (forced.nonEmpty && !forcedBroadcastAllowlist.contains(name))

@@ -131,16 +131,10 @@ class Scd2Spec extends SparkSpec {
       (30L, "Initech", "C", "300"))
     val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
       ts("2024-01-01 00:00:00")).localCheckpoint()
-    // dimension joins only: Ids.addContiguousIds' structural offsets
-    // join (<= shuffle partitions rows by construction) is exempt
     def dimJoins(p: SparkPlan): Seq[BaseJoinExec] = (p match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
-    }).collect {
-      case j: BaseJoinExec
-        if !j.rightKeys.exists(_.references.exists(a =>
-          graft.operators.Ids.isOffsetsInternal(a.name))) => j
-    }
+    }).collect { case j: BaseJoinExec => j }
     // The lookup join runs inside the key assignment's checkpoint, so
     // it only shows in that job's plan; the expire join is in the
     // returned frame's plan. Returns (lookup joins, expire joins, rows).
