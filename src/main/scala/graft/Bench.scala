@@ -46,8 +46,8 @@ import graft.queries.QueryDef
   * and projection-only work (q45's scrub column, q03's decodes) was
   * never evaluated. The noop write consumes every column of every
   * row, so the measured plan is the plan a consumer pays for, at zero
-  * sink cost. Round 7 switched this (and ScalingBench); the recorded
-  * continuity note lives in docs/PLANS.md.
+  * sink cost. Round 7 switched this; the recorded continuity note
+  * lives in docs/PLANS.md.
   */
 object Bench {
   /** Force full evaluation of every row and column without sink cost. */
@@ -56,40 +56,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the workload (round-14, guide
-      // §1.2 step 3): the default 100 entries cannot hold one pass of
-      // this 231-query registry, so EVERY pass re-Janino-compiled
-      // every query's codegen units — measured 211.8 s → 151.6 s
-      // (×0.72) on the identical 3-pass protocol, 181 queries faster,
-      // none slower beyond noise. A long-lived driver serving many
-      // distinct queries sizes this cache the same way; it is
-      // workload-sized (compiled classes), not data-sized, so the
-      // setting is scale-independent. Parameterized for the driver's
-      // low-core runs and future registry growth.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      // Never use the bypass-merge shuffle writer (round-14, guide
-      // §1.1 empirical loop): stack-sampling the whole bench showed
-      // java.io.FileOutputStream.open0 as the TOP executor CPU frame
-      // — BypassMergeSortShuffleWriter opens numPartitions files per
-      // map task, which at this scale factor is pure filesystem
-      // churn (32 creates+deletes per task for a few KB of shuffle
-      // data). The sort writer opens ~1 file per task. Measured
-      // 138.1 s → 115.5 s (with the same round's expression fixes)
-      // on the 3-pass protocol, 1 query regressed > 0.1 s. At real
-      // tiers shuffle partition counts exceed the default threshold
-      // (200), so bypass never fires and this setting is a NO-OP at
-      // scale — it only removes a small-scale measurement artifact.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>

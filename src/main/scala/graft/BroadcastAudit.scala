@@ -11,8 +11,8 @@ import org.apache.spark.sql.graft.PlanBridge
   * query (default: all), find each BroadcastExchange in the INITIAL
   * physical plan and count the rows of its build side at each sf dir
   * in SPARK_GRAFT_SF_DIRS (default sf0.01 and sf0.1) — the same
-  * claims-become-measurements discipline FrameAudit applies to global
-  * windows, aimed at the q129 failure class: a broadcast whose build
+  * claims-become-measurements discipline PlanAuditSpec applies to
+  * global-window frames, aimed at the q129 failure class: a broadcast whose build
   * side grows with the corpus works at bench scale, driver-OOMs at
   * 20×, and is structurally wrong at 100 TB. A broadcast is only safe
   * when its build side is bounded by DOMAIN (a dim table, a stats
@@ -80,14 +80,7 @@ object BroadcastAudit {
       "/root/testdata/sf0.01,/root/testdata/sf0.1").split(",").toSeq
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     val out = java.nio.file.Paths.get("target", "broadcast_audit.jsonl")
     java.nio.file.Files.createDirectories(out.getParent)

@@ -35,14 +35,7 @@ object DiverseGen {
   def main(args: Array[String]): Unit = {
     val Array(sfStr, outDir) = args.take(2)
     val sf = sfStr.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     documentsDf(spark, math.max(1L, math.round(50000 * sf)))
       .coalesce(4).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     println(s"[diversegen] wrote documents at sf $sf")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector + micro-timer: `runMain graft.Explain <query> [n]`
   * prints the formatted physical plan of one SparkEntry query over
   * SPARK_GRAFT_SF_DIR (default sf0.001) and times `n` count() runs
@@ -11,21 +9,7 @@ object Explain {
     val name = args.headOption.getOrElse(sys.error("usage: Explain <query> [n]"))
     val n = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // registry-sized codegen cache — measurement parity with Bench
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      // sort writer, never bypass-merge — measurement parity with
-      // Bench (see the rationale there); no-op at real tiers
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     // SPARK_GRAFT_CONF="k=v,k=v" → extra session confs (e.g.
     // graft.checkpoint.reliable=true to time the durable-checkpoint path)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)

@@ -12,8 +12,9 @@ import graft.functions._
   * DataFrame API:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)
-  * // or: --conf spark.sql.extensions=graft.GraftExtensions
+  * // --conf spark.sql.extensions=graft.GraftExtensions (the same key
+  * // as a -D reaches GraftSession), or on a running session:
+  * GraftExtensions.register(spark)
   * spark.sql("SELECT simhash_32(word_shingles(split(text,' '), 1)) ...")
   * }}}
   *

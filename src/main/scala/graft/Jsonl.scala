@@ -1,7 +1,7 @@
 package graft
 
-/** Shared helper for the artifact-writing measurement mains
-  * (AdmitScale, ScalingBench, BroadcastAudit): caller-supplied
+/** Helper for the artifact-writing measurement main
+  * ([[BroadcastAudit]]): caller-supplied
   * strings (data-dir paths) are interpolated into hand-built JSONL
   * lines, and a path containing a quote or backslash would
   * silently corrupt the committed artifact. Escape the two JSON

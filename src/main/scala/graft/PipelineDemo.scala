@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import graft.sources.LakeZones
 
 /** Sample entry point driving the full medallion pipeline through the
@@ -34,13 +33,7 @@ object PipelineDemo {
       """[{"sourceFile":"F0101.csv","sinkPath":"jde/F0101","description":"Address Book"},
          {"sourceFile":"F4211.csv","sinkPath":"jde/F4211","description":"Sales Detail"}]""")
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     val zones = LakeZones(lake)
     val fact = Pipeline.run(spark, zones, landing,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Batch plan snapshotter for the optimization rounds:
@@ -9,30 +8,16 @@ import org.apache.spark.sql.execution.FormattedMode
   * (all registered queries when none are named) over
   * SPARK_GRAFT_SF_DIR in ONE JVM — the per-query Explain main pays
   * ~15 s of Spark startup per plan, which makes a 231-query
-  * before/after sweep impractical. Session config matches Bench
-  * (shuffle partitions = SPARK_GRAFT_CPUS, UTC) so the dumped plans
-  * are the shapes the bench actually runs. Plans are the pre-execution
+  * before/after sweep impractical. The session is Bench's
+  * ([[GraftSession]], shuffle partitions = SPARK_GRAFT_CPUS) so the
+  * dumped plans are the shapes the bench actually runs. Plans are the pre-execution
   * AQE-initial shapes — the same thing `df.explain("formatted")`
   * prints. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(sys.error("usage: PlanDump <outDir> [query ...]"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // registry-sized codegen cache — measurement parity with Bench
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      // sort writer, never bypass-merge — measurement parity with
-      // Bench (see the rationale there); no-op at real tiers
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val out = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(out)
     val names =

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation policy for iterative operators
@@ -21,9 +23,9 @@ import org.apache.spark.sql.DataFrame
   *    going. Costs a write per round — the right trade at scale.
   *
   * Switch with the session conf `graft.checkpoint.reliable=true`; the
-  * checkpoint directory comes from `graft.checkpoint.dir` (set once,
-  * lazily, on first use) or a pre-configured
-  * `SparkContext.setCheckpointDir`.
+  * checkpoint directory comes from `graft.checkpoint.dir` (the
+  * context's directory follows it whenever it names another one) or,
+  * when that is unset, a pre-configured `SparkContext.setCheckpointDir`.
   */
 object Checkpoints {
   val ReliableConf = "graft.checkpoint.reliable"
@@ -34,12 +36,21 @@ object Checkpoints {
     val spark = df.sparkSession
     if (spark.conf.getOption(ReliableConf).exists(_.toBoolean)) {
       val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = spark.conf.getOption(DirConf).getOrElse(throw new IllegalStateException(
-          s"$ReliableConf=true requires $DirConf or SparkContext.setCheckpointDir"))
-        sc.setCheckpointDir(dir)
-      }
+      spark.conf.getOption(DirConf).foreach(pointAt(sc, _))
+      if (sc.getCheckpointDir.isEmpty) throw new IllegalStateException(
+        s"$ReliableConf=true requires $DirConf or SparkContext.setCheckpointDir")
       df.checkpoint()
     } else df.localCheckpoint()
+  }
+
+  /** Re-point the context's checkpoint dir at `dir` unless it is there
+    * already. `setCheckpointDir` qualifies the path and adds a UUID
+    * subdirectory, so the context's dir is compared by its parent.
+    * Locked: concurrent `Pipeline.run` branches truncate at once. */
+  private def pointAt(sc: SparkContext, dir: String): Unit = synchronized {
+    val p = new Path(dir)
+    val wanted = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
+    if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == wanted))
+      sc.setCheckpointDir(dir)
   }
 }

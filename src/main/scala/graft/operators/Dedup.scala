@@ -733,7 +733,8 @@ object Dedup {
     * candidate count is exactly n·window by construction.
     *
     * Scale shape: the global rank comes from [[Ids.addContiguousIds]]
-    * (range exchange + zipWithIndex — no single-partition window),
+    * (range exchange + driver-side partition offsets — no
+    * single-partition window),
     * and the windowed self-join never compares ranks pairwise:
     * rows land in rank-blocks of size `window`, each left row probes
     * its own block and the next one (two equi-join keys), so any pair

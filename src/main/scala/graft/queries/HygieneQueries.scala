@@ -436,7 +436,7 @@ object HygieneQueries {
     (s, dir) => {
       val c = table(s, dir, "customer")
       val n = c.agg(count(lit(1)).as("n"))
-      // global balance rank via range-partitioned zipWithIndex (the
+      // global balance rank via range partition + partition offsets (the
       // q215/q219 discipline) — a row_number() window here would drag
       // every customer through ONE partition at any scale
       val ranked = graft.operators.Ids

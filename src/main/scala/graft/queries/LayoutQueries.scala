@@ -40,8 +40,9 @@ object LayoutQueries {
     * windows would each serialize the ENTIRE orders table through one
     * task. The Spark side instead bins via a range-partitioned global
     * rank ([[graft.operators.Ids.addContiguousIds]] — exactly the
-    * `repartitionByRange` the audit models, with zipWithIndex making
-    * the bin boundaries deterministic rather than sample-approximate)
+    * `repartitionByRange` the audit models, with exact per-partition
+    * offsets making the bin boundaries deterministic rather than
+    * sample-approximate)
     * plus [[graft.operators.Ids.ntileFromRank]] arithmetic: NTILE-
     * identical bins (oracle unchanged, hash-exact), three parallel
     * range sorts, no single-partition frame. [[graft.LakehouseSpec]]

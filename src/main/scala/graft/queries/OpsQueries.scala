@@ -1148,8 +1148,8 @@ object OpsQueries {
     * batch 32 docs and account `Σ(batch_max − len)` exactly; the
     * sorted variant is the standard fix and the audit prices it.
     * Waste in exact ppm of padded mass; the global batch numbering
-    * comes from [[graft.operators.Ids.addContiguousIds]] (range-
-    * partitioned zipWithIndex — same semantics as a global
+    * comes from [[graft.operators.Ids.addContiguousIds]] (range
+    * partition + partition offsets — same semantics as a global
     * row_number, without the single-partition window). */
   private val q215 = QueryDef(
     "q215_padding_waste",

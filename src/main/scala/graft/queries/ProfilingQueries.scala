@@ -289,7 +289,8 @@ object ProfilingQueries {
           "").as("seq"))
         .select(col("user_id"), col("seq"),
           length(col("seq")).cast(LongType).as("len"))
-      // rank via range-partitioned zipWithIndex, neighbor pairs via
+      // rank via Ids.addContiguousIds (range partition + driver-side
+      // partition offsets), neighbor pairs via
       // the two-bucket trick (bucket = own + previous) — the
       // rank-range theta join this replaced planned as a broadcast
       // nested-loop (O(N²) compares, the q149 failure mode), and the

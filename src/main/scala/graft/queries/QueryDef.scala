@@ -82,8 +82,6 @@ object QueryDef {
   def spreadTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = table(spark, sfDir, name)
     val par = spark.sparkContext.defaultParallelism
-    // A/B kill switch for optimization-round measurements only
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df
     if (scanSplits(spark, s"$sfDir/$name.parquet") < par) df.repartition(par)
     else df
   }

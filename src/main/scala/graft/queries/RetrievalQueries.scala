@@ -35,7 +35,8 @@ object RetrievalQueries {
     * EXACT global ranks (the fused output reports them), so neither
     * can be top-k-truncated without changing the query — instead each
     * rank comes from [[graft.operators.Ids.addContiguousIds]] (range-
-    * partitioned sort + zipWithIndex), never a global `row_number`
+    * partitioned sort + driver-side partition offsets), never a
+    * global `row_number`
     * window: for a high-df term the lexical match set — and always
     * the semantic corpus pass — is corpus-proportional, and the
     * window form would serialize it through one task. Oracles stay in

@@ -548,8 +548,8 @@ object ServingQueries {
     * the rank-based calibration a curation pipeline applies before
     * mixing heterogeneous quality signals. Per-source ranks are a
     * keyed window; the global rank comes from
-    * [[graft.operators.Ids.addContiguousIds]] (range-partitioned
-    * zipWithIndex — NO single-partition window), and the mapped
+    * [[graft.operators.Ids.addContiguousIds]] (range partition +
+    * partition offsets — NO single-partition window), and the mapped
     * position 1 + ⌊(r−1)(N−1)/(Nₛ−1)⌋ is pure integer arithmetic, so
     * the calibrated value is exact on any engine. */
   private val q113 = QueryDef(

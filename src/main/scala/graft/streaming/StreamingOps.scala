@@ -242,10 +242,11 @@ object StreamingOps {
     * takes a strictly larger key — so probing the active table alone
     * continues the key sequence exactly. Both facts are asserted
     * against the monolithic sink in MultimodalStreamingSpec (full
-    * dimension equality, surrogate keys included) and measured at
-    * volume by [[graft.StreamingScale]] (the monolithic sink's
-    * per-batch `batch_ms` slope of ~1.5 µs per RESIDENT dim row —
-    * the r13 measured bound — drops to a slope in ACTIVE rows only).
+    * dimension equality, surrogate keys included) and were measured
+    * at volume in `docs/streaming_scale_r14.jsonl` (`scd2Sink` against
+    * `scd2SinkPartitioned`: the monolithic sink's per-batch
+    * `batch_ms` slope of ~1.5 µs per RESIDENT dim row — the r13
+    * measured bound — drops to a slope in ACTIVE rows only).
     *
     * Crash ordering: closed rows land BEFORE the active replace. A
     * crash between the two leaves the old active table, so the

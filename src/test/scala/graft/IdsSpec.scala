@@ -103,18 +103,10 @@ class IdsSpec extends SparkSpec {
     def ids() = Ids.addContiguousIds(df, Seq(col("key")), "sk")
       .select("key", "sk").as[(Long, Long)].collect().sortBy(_._1).toSeq
     val local = ids()
-    val sc = spark.sparkContext
-    val prevDir = sc.getCheckpointDir
     val dir = java.nio.file.Files.createTempDirectory("graft_ids_ckpt").toString
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.conf.set(Checkpoints.DirConf, dir)
-    val reliable = try ids() finally {
-      spark.conf.set(Checkpoints.ReliableConf, "false")
-      // the context keeps the first checkpoint dir it is given; hand
-      // the shared session back unset so later suites pick their own
-      // (null clears it on a local master)
-      if (prevDir.isEmpty) sc.setCheckpointDir(null)
-    }
+    val reliable = try ids() finally spark.conf.set(Checkpoints.ReliableConf, "false")
     assert(reliable == local)
     assert(reliable.map(_._2) == (1L to 5000L))
   }

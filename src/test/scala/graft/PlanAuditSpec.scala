@@ -26,14 +26,32 @@ class PlanAuditSpec extends SparkSpec {
     * not by corpus size, so the single partition holds O(constant)
     * rows at any scale — audited in the owning query's docstring.
     * Anything NOT in the list that plans a global window is a 100 TB
-    * regression and fails the tripwire. The list itself (query →
-    * measured frame-row cap, plus the growth-gated subset) lives in
-    * `FrameAudit` in main — ONE definition shared with the
-    * measurement tool, so the two can't drift. */
-  private val boundedGlobalWindowFrames: Map[String, Long] =
-    FrameAudit.FrameCaps
+    * regression and fails the tripwire. Each entry maps the query to
+    * the measured frame-row cap its docstring claims (the domain
+    * bound one task must hold at any corpus size); the
+    * "documented caps (measured)" case below measures every cap at
+    * two sfs. */
+  private val boundedGlobalWindowFrames: Map[String, Long] = Map(
+    "q102_cumulative_users" -> 40L,      // per-day frame (#distinct days; 30-day events span)
+    "q149_jaro_winkler_linkage" -> 2000L, // boundary stitch: ≤ 4 rows per name block (+ growth gate)
+    "q165_histogram_percentiles" -> 56001L, // distinct 2dp values; domain [0.00, 560.00]
+    "q167_waterfill_budget" -> 25L,      // per-source frame (20 distinct sources)
+    "q168_km_conversion" -> 10L,         // Kaplan-Meier distinct obs times ≤ 8
+    "q177_auc_stopword_en" -> 56001L,    // distinct 2dp scores; same value domain
+    "q180_ks_statistic" -> 56001L,       // distinct 2dp values; same value domain
+    "q188_window_funnel" -> 8L,          // funnel-step frame (#steps)
+    "q189_sprt_stopping" -> 60L,         // per-variant sequential frame (30 rows)
+    "q213_pareto_suppliers" -> 2000L,    // union of 32 partial frontiers (+ growth gate)
+    "q217_slo_burn" -> 744L,             // per-hour SLO frame (≤ 31 days × 24 h)
+    "q223_watermark_audit" -> 65536L     // block-maxima frame; block size adapts to cap #blocks
+  )
 
-  private val growthGated: Set[String] = FrameAudit.GrowthGated
+  /** The two allowlist entries whose bound is a GROWTH argument
+    * (partial-frontier unions / per-block stitches shrink relative to
+    * the corpus) rather than a fixed value domain: the measured case
+    * additionally requires the frame to grow ≤ 5× under a 10× corpus. */
+  private val growthGated: Set[String] = Set(
+    "q149_jaro_winkler_linkage", "q213_pareto_suppliers")
 
   test("global windows only ever run over domain-bounded frames (allowlist)") {
     import org.apache.spark.sql.execution.SparkPlan

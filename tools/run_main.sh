@@ -7,7 +7,8 @@
 #   tools/run_main.sh graft.ScaleGen 8.0 target/scale/sf8.0
 #
 # Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_JVM_OPTS (extra
-# flags, whitespace-split — same limitation as build.sbt).
+# flags, whitespace-split — same limitation as build.sbt; a -Dspark.*
+# flag overrides any graft.GraftSession setting).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes
@@ -24,6 +25,5 @@ done
 # shellcheck disable=SC2086  # SPARK_GRAFT_JVM_OPTS is deliberately word-split
 exec java "${ADD_OPENS[@]}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${SPARK_GRAFT_JVM_OPTS:-} \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
