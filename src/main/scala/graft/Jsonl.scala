@@ -1,11 +1,11 @@
 package graft
 
-/** Helper for the artifact-writing measurement main
-  * ([[BroadcastAudit]]): caller-supplied
-  * strings (data-dir paths) are interpolated into hand-built JSONL
-  * lines, and a path containing a quote or backslash would
-  * silently corrupt the committed artifact. Escape the two JSON
-  * string metacharacters plus control chars before interpolation.
+/** JSON string escaping for hand-built JSON and JSONL artifacts
+  * ([[Verify]]'s `oracle_sql.json`, [[BroadcastAudit]]'s lines):
+  * caller-supplied strings (SQL text, data-dir paths) are
+  * interpolated into them, and a quote, backslash or control char
+  * would silently corrupt the artifact. Escapes the two JSON string
+  * metacharacters plus control chars before interpolation.
   */
 object Jsonl {
   def esc(s: String): String =

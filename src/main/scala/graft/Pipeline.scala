@@ -202,10 +202,8 @@ object Pipeline {
           Some(Schemas.F0101))
         // only an absent table means a first load: any read error must
         // fail the stage, not re-seed the dimension from CustomerKey 1
-        val dim0 =
-          if (LakeIO.goldExists(spark, zones, "dim_customer"))
-            Some(readGold(spark, zones, "dim_customer"))
-          else None
+        val dim0 = LakeIO.readIfPresent(spark, zones.gold("dim_customer"),
+          Some(ContractFor("dim_customer")))
         val dim1 = mergeCustomers(spark, dim0, f0101, nowCol)
         // read-modify-write: materialize to a staging dir, then swap —
         // the live dir stays intact while the job reads from it
@@ -220,11 +218,10 @@ object Pipeline {
         // exclude this run's own load_id so a retry re-assigns the SAME
         // key range instead of stacking on its partial previous attempt.
         // Only an absent table starts at 0: a read error fails the stage.
-        keyOffset =
-          if (!LakeIO.goldExists(spark, zones, "fact_sales")) 0L
-          else readGold(spark, zones, "fact_sales")
-            .filter(col("load_id") =!= loadId)
-            .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
+        keyOffset = LakeIO.readIfPresent(spark, zones.gold("fact_sales"),
+            Some(ContractFor("fact_sales")))
+          .fold(0L)(_.filter(col("load_id") =!= loadId)
+            .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0))
       })
     settleAll(branches.size)(branches)
 

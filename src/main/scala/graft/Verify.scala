@@ -33,18 +33,9 @@ object Verify {
     java.nio.file.Files.createDirectories(localOut.getParent)
     java.nio.file.Files.writeString(localOut,
       local.map { case (k, v) => s""""$k": $v""" }.mkString("{", ",\n ", "}"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // a raw tab or newline in a query's SQL would make the oracle
+    // compare's json.load (tools/check.py) fail
+    def q(s: String): String = "\"" + Jsonl.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.time.LocalDate
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -201,12 +202,8 @@ object LakeIO {
                  schema: Option[StructType] = None): DataFrame =
     reader(spark, schema).parquet(zones.silver(domain))
 
-  /** S7 — append-only fact sink (`DF_Load_FactSales.json:145-153`). */
-  def appendGold(df: DataFrame, zones: LakeZones, table: String): Unit =
-    df.write.mode("append").option("compression", "snappy")
-      .parquet(zones.gold(table))
-
-  /** S7, retry-safe — append one load batch as its own `load_id`
+  /** S7 — append-only fact sink (`DF_Load_FactSales.json:145-153`),
+    * retry-safe: append one load batch as its own `load_id`
     * partition with dynamic overwrite: a retried load (C7) replaces
     * its OWN partition instead of appending a second copy, so the
     * append-only fact sink is idempotent per logical run. `loadId`
@@ -220,7 +217,6 @@ object LakeIO {
     // other partitionCols) makes Spark partition discovery reject the
     // whole table at read time. Better to refuse the write than to
     // poison the table.
-    import org.apache.hadoop.fs.Path
     val target = new Path(zones.gold(table))
     val fs = target.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(target)) {
@@ -259,7 +255,6 @@ object LakeIO {
   def vacuumGold(spark: SparkSession, zones: LakeZones, table: String,
                  keepLast: Int): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    import org.apache.hadoop.fs.Path
     val target = new Path(zones.gold(table))
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(target)) return Seq.empty
@@ -285,19 +280,14 @@ object LakeIO {
     * from — then swapped in with two FS renames. Readers never see a
     * partially-written state: they see the old table, or the new one,
     * or (in the brief rename window, or after a crash inside it) a
-    * missing directory — which the next replaceGold/readGoldRecovering
+    * missing directory — which the next replaceGold/[[readIfPresent]]
     * repairs from the `.old`/`.staging` leftovers before proceeding.
     * Pass `partitionCols` to keep a hive-partitioned layout through
     * the rewrite. */
   def replaceGold(df: DataFrame, zones: LakeZones, table: String,
                   partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(zones.gold(table))
-    val staging = new Path(zones.gold(table) + ".staging")
-    val retired = new Path(zones.gold(table) + ".old")
-    val fs = target.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    recoverGold(fs, target, staging, retired)
+    val (fs, target, staging, retired) =
+      recoverSwap(df.sparkSession, zones.gold(table))
     fs.delete(staging, true)
     val w = df.write.mode("overwrite").option("compression", "snappy")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
@@ -310,71 +300,65 @@ object LakeIO {
     fs.delete(retired, true)
   }
 
-  /** Crash recovery for the swap window: if a previous replaceGold
-    * died between retiring the live table and publishing staging, the
-    * target is missing but its content survives in `.old` (complete
-    * previous state) and possibly `.staging` (complete next state).
-    * Prefer the fully-written NEW state when present — it was the
-    * outcome the crashed call was committing — else restore the old. */
-  private def recoverGold(fs: org.apache.hadoop.fs.FileSystem,
-                          target: org.apache.hadoop.fs.Path,
-                          staging: org.apache.hadoop.fs.Path,
-                          retired: org.apache.hadoop.fs.Path): Unit =
+  /** The live, staging and retired directories of a [[replaceGold]]
+    * swap on `path`, after crash recovery for the swap window: if a
+    * previous replaceGold died between retiring the live table and
+    * publishing staging, the target is missing but its content
+    * survives in `.old` (complete previous state) and possibly
+    * `.staging` (complete next state). Prefer the fully-written NEW
+    * state when present — it was the outcome the crashed call was
+    * committing — else restore the old.
+    *
+    * SINGLE-WRITER ASSUMPTION: repair cannot distinguish a CRASHED
+    * writer from a LIVE one currently between its two renames —
+    * repairing concurrently with a live writer can steal its publish
+    * rename and fail the writer. This engine's orchestration (C7, one
+    * Spark application per lake) satisfies the assumption; concurrent multi-writer tables
+    * need an external commit protocol (a lock or a transaction log),
+    * which is out of scope for plain-parquet zones. */
+  private def recoverSwap(spark: SparkSession,
+                          path: String): (FileSystem, Path, Path, Path) = {
+    val target = new Path(path)
+    val staging = new Path(path + ".staging")
+    val retired = new Path(path + ".old")
+    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(target)) {
       // A staging dir is complete iff the committer wrote _SUCCESS —
       // a crash mid-write (no prior target at all) leaves no marker.
-      val stagingComplete = fs.exists(
-        new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
-      if (stagingComplete) {
+      if (fs.exists(new Path(staging, "_SUCCESS"))) {
         require(fs.rename(staging, target), s"could not publish $staging")
         fs.delete(retired, true)
       } else if (fs.exists(retired)) {
         require(fs.rename(retired, target), s"could not restore $retired")
       }
     }
+    (fs, target, staging, retired)
+  }
 
-  /** Read a gold table, first repairing any dangling replaceGold swap
-    * (see [[replaceGold]]).
-    *
-    * SINGLE-WRITER ASSUMPTION: repair cannot distinguish a CRASHED
-    * writer from a LIVE one currently between its two renames —
-    * repairing concurrently with a live writer can steal its publish
-    * rename and fail the writer. This engine's orchestration (C7, one
-    * driver) satisfies the assumption; concurrent multi-writer tables
-    * need an external commit protocol (a lock or a transaction log),
-    * which is out of scope for plain-parquet zones. */
-  def readGoldRecovering(spark: SparkSession, zones: LakeZones,
-                         table: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(zones.gold(table))
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverGold(fs, target, new Path(zones.gold(table) + ".staging"),
-      new Path(zones.gold(table) + ".old"))
-    spark.read.parquet(zones.gold(table))
+  /** The first-load rule of every read-modify-write over the lake:
+    * the parquet table at `path`, or `None` when there is none yet —
+    * its directory is missing or holds no entry Spark would read
+    * (every name starts with `_` or `.`, as an aborted first write or
+    * a batch that wrote no rows leaves it). Any other failure of the
+    * read propagates: a caller never mistakes a broken table for an
+    * absent one. Repairs a dangling [[replaceGold]] swap first (see
+    * `recoverSwap`), so a table whose data sits in `.old`/`.staging`
+    * counts as present. Pass a `schema` to read through a contract
+    * (see `reader`). */
+  def readIfPresent(spark: SparkSession, path: String,
+                    schema: Option[StructType] = None): Option[DataFrame] = {
+    val (fs, target, _, _) = recoverSwap(spark, path)
+    val present = fs.exists(target) && fs.listStatus(target).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (present) Some(reader(spark, schema).parquet(path)) else None
   }
 
   /** Pass a `schema` to read through a contract (see `reader`). */
   def readGold(spark: SparkSession, zones: LakeZones, table: String,
                schema: Option[StructType] = None): DataFrame =
     reader(spark, schema).parquet(zones.gold(table))
-
-  /** Whether a gold table holds anything: its directory exists and
-    * has an entry Spark would read (not `_`- or `.`-prefixed). Lets a
-    * caller tell "first load" from a read failure without catching
-    * the failure. Repairs a dangling [[replaceGold]] swap first (same
-    * single-writer assumption as [[readGoldRecovering]]), so a table
-    * whose data sits in `.old`/`.staging` counts as present. */
-  def goldExists(spark: SparkSession, zones: LakeZones, table: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(zones.gold(table))
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverGold(fs, target, new Path(zones.gold(table) + ".staging"),
-      new Path(zones.gold(table) + ".old"))
-    fs.exists(target) && fs.listStatus(target).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
 
   /** Time travel over a run-partitioned gold table: the table state
     * as of `loadId` INCLUSIVE — every `load_id=` run up to and
@@ -445,7 +429,6 @@ object LakeIO {
     * lake-native). Re-running refreshes the view set; views are
     * lazy — registration reads only directory listings, no data. */
   def registerViews(spark: SparkSession, zones: LakeZones): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(zones.root).getFileSystem(
       spark.sessionState.newHadoopConf())
     for {
@@ -482,7 +465,6 @@ object LakeIO {
   def compactGold(spark: SparkSession, zones: LakeZones, table: String,
                   targetFileBytes: Long = 128L * 1024 * 1024,
                   preservePartitions: Boolean = true): Int = {
-    import org.apache.hadoop.fs.Path
     val target = new Path(zones.gold(table))
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes = fs.getContentSummary(target).getLength
@@ -516,8 +498,7 @@ object LakeIO {
   /** Detect hive-style partition columns (`k=v` directory levels) by
     * walking the first directory chain under `root`. */
   private def hivePartitionColumns(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] = {
+      fs: FileSystem, root: Path): Seq[String] = {
     val cols = scala.collection.mutable.ListBuffer.empty[String]
     var cur = root
     var continue = true

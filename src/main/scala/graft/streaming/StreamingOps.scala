@@ -181,39 +181,45 @@ object StreamingOps {
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // latestByKey needs a TOTAL order per key: equal-ts change
-          // events would otherwise pick a partition-dependent winner.
-          // A content hash breaks ties deterministically (identical
-          // duplicates tie harmlessly).
-          val tiebreak = xxhash64(
-            batch.columns.filterNot(_ == tsCol).map(col): _*)
-          // persist the deduped batch before the multi-action sequence
-          // (max-ts collect, then the merge's joins): without it each
-          // action re-scans the micro-batch source — the round-12
-          // streaming-scale run measured numInputRows at ~3x the event
-          // count, which at ingest scale is 2 extra passes over every
-          // arriving byte
-          val latest = graft.operators.Upsert
-            .latestByKey(batch.toDF(), Seq(spec.businessKey),
-              Seq(col(tsCol), tiebreak))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
-            val incoming = latest.drop(tsCol)
-            val dim =
-              try LakeIO.readGoldRecovering(spark, zones, table)
-              catch { case _: org.apache.spark.sql.AnalysisException =>
-                graft.operators.Scd2.emptyDim(spark, incoming, spec)
-              }
-            val next = graft.operators.Scd2.merge(
-              dim.localCheckpoint(), incoming, spec, lit(now))
-            LakeIO.replaceGold(next, zones, table)
-          } finally latest.unpersist()
-        }
+        scd2Step(batch.toDF(), zones, table, spec, tsCol)(
+          LakeIO.replaceGold(_, zones, table))
       }
       .start()
+
+  /** The micro-batch step both streaming SCD2 sinks share: merge each
+    * key's latest change in `batch` into the dimension stored at gold
+    * table `dimTable` (an empty one on the first load, as
+    * [[LakeIO.readIfPresent]] decides) and hand the next dimension to
+    * `publish`. An empty batch is a no-op. */
+  private def scd2Step(batch: DataFrame, zones: LakeZones, dimTable: String,
+                       spec: graft.operators.Scd2.Spec, tsCol: String)(
+                       publish: DataFrame => Unit): Unit =
+    if (!batch.isEmpty) {
+      val spark = batch.sparkSession
+      // latestByKey needs a TOTAL order per key: equal-ts change
+      // events would otherwise pick a partition-dependent winner.
+      // A content hash breaks ties deterministically (identical
+      // duplicates tie harmlessly).
+      val tiebreak = xxhash64(
+        batch.columns.filterNot(_ == tsCol).map(col): _*)
+      // persist the deduped batch before the multi-action sequence
+      // (max-ts collect, then the merge's joins): without it each
+      // action re-scans the micro-batch source — the round-12
+      // streaming-scale run measured numInputRows at ~3x the event
+      // count, which at ingest scale is 2 extra passes over every
+      // arriving byte
+      val latest = graft.operators.Upsert
+        .latestByKey(batch, Seq(spec.businessKey), Seq(col(tsCol), tiebreak))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
+        val incoming = latest.drop(tsCol)
+        val dim = LakeIO.readIfPresent(spark, zones.gold(dimTable))
+          .getOrElse(graft.operators.Scd2.emptyDim(spark, incoming, spec))
+        publish(graft.operators.Scd2.merge(
+          dim.localCheckpoint(), incoming, spec, lit(now)))
+      } finally latest.unpersist()
+    }
 
   /** Partitioned-gold variant of [[scd2Sink]]: same hash-diff SCD2
     * semantics, but the dimension is stored SPLIT so per-batch I/O is
@@ -274,26 +280,9 @@ object StreamingOps {
     * testing (replay = calling twice with the same `batchId`). */
   def scd2PublishBatch(batch: DataFrame, batchId: Long, zones: LakeZones,
                        table: String, spec: graft.operators.Scd2.Spec,
-                       tsCol: String = "ts"): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // identical batch preparation to scd2Sink: latest event per key
-    // with a deterministic content-hash tiebreak, persisted once
-    val tiebreak = xxhash64(
-      batch.columns.filterNot(_ == tsCol).map(col): _*)
-    val latest = graft.operators.Upsert
-      .latestByKey(batch, Seq(spec.businessKey), Seq(col(tsCol), tiebreak))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
-      val incoming = latest.drop(tsCol)
-      val active =
-        try LakeIO.readGoldRecovering(spark, zones, s"${table}__active")
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          graft.operators.Scd2.emptyDim(spark, incoming, spec)
-        }
-      val next = graft.operators.Scd2.merge(
-          active.localCheckpoint(), incoming, spec, lit(now))
+                       tsCol: String = "ts"): Unit =
+    scd2Step(batch, zones, s"${table}__active", spec, tsCol) { merged =>
+      val next = merged
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // the merge input held only active rows, so every inactive
@@ -305,18 +294,20 @@ object StreamingOps {
         }
         LakeIO.replaceGold(next.filter(col("IsActive")), zones, s"${table}__active")
       } finally next.unpersist()
-    } finally latest.unpersist()
-  }
+    }
 
   /** The complete dimension maintained by [[scd2SinkPartitioned]]:
     * active versions ∪ all closed runs (the `load_id` batch tag is
     * internal bookkeeping and dropped). Row-identical to what
-    * [[scd2Sink]] would have produced from the same change stream. */
+    * [[scd2Sink]] would have produced from the same change stream.
+    * No closed run yet means active rows only; closed runs whose
+    * columns differ from the active table fail the read. */
   def readScd2Dim(spark: SparkSession, zones: LakeZones, table: String): DataFrame = {
-    val active = LakeIO.readGoldRecovering(spark, zones, s"${table}__active")
-    try active.unionByName(
-      LakeIO.readGold(spark, zones, s"${table}__closed").drop("load_id"))
-    catch { case _: org.apache.spark.sql.AnalysisException => active }
+    def half(suffix: String) =
+      LakeIO.readIfPresent(spark, zones.gold(s"${table}__$suffix"))
+    val active = half("active").getOrElse(throw new IllegalArgumentException(
+      s"no SCD2 dimension $table under ${zones.root}"))
+    half("closed").fold(active)(closed => active.unionByName(closed.drop("load_id")))
   }
 
   /** Stream-static POINT-IN-TIME enrichment: each streamed fact row
@@ -657,16 +648,8 @@ object StreamingOps {
     // batch's own stale partition is excluded from the READ so the
     // dynamic-overwrite WRITE below replaces it without this batch's
     // docs seeing their own failed-attempt state as "admitted".
-    val state: Option[DataFrame] =
-      try {
-        val s = spark.read.parquet(stateDir)
-          .filter(col("load_id") =!= loadId)
-        Some(s.localCheckpoint())
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.toLowerCase.contains("unable to infer") => None
-      }
+    val state: Option[DataFrame] = LakeIO.readIfPresent(spark, stateDir)
+      .map(_.filter(col("load_id") =!= loadId).localCheckpoint())
 
     // (2) rejected-by-state: verified near-dup of an already-admitted
     // doc; witness = the smallest such neighbor (ids only grow, so

@@ -134,7 +134,7 @@ class AnalyticsSpec extends SparkSpec {
     val (instrumented, obs) = Quality.observed(df, "load_metrics", Map(
       "n_rows" -> count(lit(1)),
       "n_null_v" -> count(when($"v".isNull, 1))))
-    val out = java.nio.file.Files.createTempDirectory("graft_obs").toString
+    val out = tempDir("graft_obs")
     instrumented.write.mode("overwrite").parquet(out)
     val m = obs.get
     assert(m("n_rows") == 3L && m("n_null_v") == 1L)
@@ -143,7 +143,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("vacuumGold keeps the newest runs and deletes the rest") {
     import graft.sources.{LakeIO, LakeZones}
-    val lake = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val lake = tempDir("graft_vac")
     val zones = LakeZones(lake)
     Seq("2024-01-01", "2024-01-02", "2024-01-03").zipWithIndex.foreach {
       case (id, i) =>
@@ -253,7 +253,7 @@ class AnalyticsSpec extends SparkSpec {
   test("audited CSV read quarantines malformed rows, loads the rest") {
     import graft.sources.LakeIO
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in.csv"),
       ("id,qty\n" +            // header
         "1,10\n" +             // clean

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, Row}
@@ -71,7 +70,7 @@ class ContractSpec extends SparkSpec {
   }
 
   test("a contract read launches no job; an inferring read does") {
-    val zones = LakeZones(Files.createTempDirectory("graft_contract").toString)
+    val zones = LakeZones(tempDir("graft_contract"))
     LakeIO.overwriteSilver(CleanJde(f4211), zones, "transactions")
     assert(JobCount(spark) {
       LakeIO.readSilver(spark, zones, "transactions", Some(Schemas.SilverTransactions))
@@ -80,8 +79,8 @@ class ContractSpec extends SparkSpec {
   }
 
   test("on a loaded lake, contract reads match inference and starTopK plans jobless") {
-    val landing = Files.createTempDirectory("graft_contract_landing").toString
-    val zones = LakeZones(Files.createTempDirectory("graft_contract_lake").toString)
+    val landing = tempDir("graft_contract_landing")
+    val zones = LakeZones(tempDir("graft_contract_lake"))
     PipelineFixture.writeLanding(landing)
     Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
       LocalDate.of(2024, 6, 1), Timestamp.valueOf("2024-06-01 00:00:00"))

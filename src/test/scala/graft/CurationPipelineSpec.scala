@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Dedup, TextAnalysis}
 import graft.sources.{LakeIO, LakeZones}
@@ -11,7 +10,7 @@ class CurationPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("curation flow: monotone stages, correct survivors, stats beside gold") {
-    val zones = LakeZones(Files.createTempDirectory("graft_cur").toString)
+    val zones = LakeZones(tempDir("graft_cur"))
     // fixture corpus + planted exact and near duplicates
     val raw0 = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val exactDups = raw0.filter($"doc_id" % 11 === 0)
@@ -48,7 +47,7 @@ class CurationPipelineSpec extends SparkSpec {
     assert(mix.count() ==
       TextAnalysis.profile(gold).select($"lang_pred").distinct().count())
     // determinism: a second run reproduces the same gold set
-    val zones2 = LakeZones(Files.createTempDirectory("graft_cur2").toString)
+    val zones2 = LakeZones(tempDir("graft_cur2"))
     val r2 = Curation.run(spark, raw, zones2)
     assert(r2 == r)
     val gold2 = LakeIO.readGold(spark, zones2, "curation_gold")

@@ -103,7 +103,7 @@ class IdsSpec extends SparkSpec {
     def ids() = Ids.addContiguousIds(df, Seq(col("key")), "sk")
       .select("key", "sk").as[(Long, Long)].collect().sortBy(_._1).toSeq
     val local = ids()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ids_ckpt").toString
+    val dir = tempDir("graft_ids_ckpt")
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.conf.set(Checkpoints.DirConf, dir)
     val reliable = try ids() finally spark.conf.set(Checkpoints.ReliableConf, "false")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.sources.{JdbcRangePartitioning, JdbcTarget, LakeIO, LakeZones}
 
 /** The generic JDBC serving seam (the literal form of S5), round-
@@ -10,7 +9,7 @@ class JdbcSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTarget(): JdbcTarget = {
-    val dir = Files.createTempDirectory("graft_derby").toString
+    val dir = tempDir("graft_derby")
     JdbcTarget(s"jdbc:derby:$dir/db;create=true",
       "org.apache.derby.jdbc.EmbeddedDriver")
   }
@@ -57,7 +56,7 @@ class JdbcSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val ckpt = Files.createTempDirectory("graft_jdbcck").toString
+    val ckpt = tempDir("graft_jdbcck")
     val q = StreamingOps.jdbcSink(
       mem.toDF().toDF("k", "v"), target, "t_live", ckpt)
     mem.addData((10L, "x"), (11L, "y"))
@@ -93,7 +92,7 @@ class JdbcSpec extends SparkSpec {
 
   test("publishGoldJdbc truncate-loads a gold table into the serving DB") {
     val target = freshTarget()
-    val zones = LakeZones(Files.createTempDirectory("graft_lake").toString)
+    val zones = LakeZones(tempDir("graft_lake"))
     val gold = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     LakeIO.overwriteGold(gold, zones, "dim_demo")
     LakeIO.publishGoldJdbc(spark, zones, "dim_demo", target)

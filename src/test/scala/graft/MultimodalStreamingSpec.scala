@@ -209,8 +209,8 @@ class MultimodalStreamingSpec extends SparkSpec {
   test("foreachBatch gold sink writes idempotent per-batch partitions") {
     import graft.sources.{LakeIO, LakeZones}
     implicit val sqlCtx = spark.sqlContext
-    val lake = java.nio.file.Files.createTempDirectory("graft_ssink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val lake = tempDir("graft_ssink")
+    val ckpt = tempDir("graft_ckpt")
     val zones = LakeZones(lake)
     val mem = MemoryStream[Event]
     val q = StreamingOps.sinkToGold(mem.toDF(), zones, "events_gold", ckpt)
@@ -257,8 +257,8 @@ class MultimodalStreamingSpec extends SparkSpec {
     import graft.operators.Scd2
     import graft.sources.{LakeIO, LakeZones}
     implicit val sqlCtx = spark.sqlContext
-    val lake = java.nio.file.Files.createTempDirectory("graft_scd2s").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2c").toString
+    val lake = tempDir("graft_scd2s")
+    val ckpt = tempDir("graft_scd2c")
     val zones = LakeZones(lake)
     val spec = Scd2.Spec("DimKey", "k", Seq("name"))
     val mem = MemoryStream[Cdc]
@@ -295,8 +295,8 @@ class MultimodalStreamingSpec extends SparkSpec {
     import graft.operators.Scd2
     import graft.sources.{LakeIO, LakeZones}
     implicit val sqlCtx = spark.sqlContext
-    val lakeM = java.nio.file.Files.createTempDirectory("graft_s2m").toString
-    val lakeP = java.nio.file.Files.createTempDirectory("graft_s2p").toString
+    val lakeM = tempDir("graft_s2m")
+    val lakeP = tempDir("graft_s2p")
     val spec = Scd2.Spec("DimKey", "k", Seq("name"))
     val batches = Seq(
       Seq(Cdc(1L, "alice", Timestamp.valueOf("2024-01-01 00:00:00")),
@@ -308,14 +308,14 @@ class MultimodalStreamingSpec extends SparkSpec {
       Seq(Cdc(2L, "bobby", Timestamp.valueOf("2024-01-03 00:00:00")),
         Cdc(3L, "carol", Timestamp.valueOf("2024-01-03 00:00:00"))))
     locally {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_s2ck").toString
+      val ckpt = tempDir("graft_s2ck")
       val mem = MemoryStream[Cdc]
       val q = StreamingOps.scd2Sink(mem.toDF(), LakeZones(lakeM), "dim_k", spec, ckpt)
       batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
       q.stop()
     }
     locally {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_s2ck").toString
+      val ckpt = tempDir("graft_s2ck")
       val mem = MemoryStream[Cdc]
       val q = StreamingOps.scd2SinkPartitioned(
         mem.toDF(), LakeZones(lakeP), "dim_k", spec, ckpt)
@@ -336,10 +336,30 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(activeOnly.filter(!$"IsActive").isEmpty)
   }
 
+  test("partitioned SCD2 read fails on closed runs whose columns drifted") {
+    import graft.operators.Scd2
+    import graft.sources.{LakeIO, LakeZones}
+    val zones = LakeZones(tempDir("graft_s2d"))
+    val spec = Scd2.Spec("DimKey", "k", Seq("name"))
+    StreamingOps.scd2PublishBatch(Seq(
+      Cdc(1L, "alice", Timestamp.valueOf("2024-01-01 00:00:00"))).toDF(),
+      0L, zones, "dim_d", spec)
+    // no closed run yet: the active rows are the whole dimension
+    assert(StreamingOps.readScd2Dim(spark, zones, "dim_d").count() == 1)
+    // a closed run written with an attribute the active table lacks
+    LakeIO.appendGoldRun(
+      LakeIO.readGold(spark, zones, "dim_d__active").withColumn("region", lit("EU")),
+      zones, "dim_d__closed", "batch-000000000001")
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      StreamingOps.readScd2Dim(spark, zones, "dim_d")
+    }
+    assert(ex.getMessage.contains("NUM_COLUMNS_MISMATCH"), ex.getMessage)
+  }
+
   test("partitioned SCD2 batch replay overwrites its own closed run") {
     import graft.operators.Scd2
     import graft.sources.LakeZones
-    val lake = java.nio.file.Files.createTempDirectory("graft_s2r").toString
+    val lake = tempDir("graft_s2r")
     val zones = LakeZones(lake)
     val spec = Scd2.Spec("DimKey", "k", Seq("name"))
     val b1 = Seq(
@@ -460,7 +480,7 @@ class MultimodalStreamingSpec extends SparkSpec {
   }
 
   test("binaryFile source: glob + size guard, content flows into feature extraction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = java.nio.file.Paths.get(tempDir("graft_media"))
     def put(name: String, bytes: Array[Byte]): Unit =
       java.nio.file.Files.write(dir.resolve(name), bytes)
     put("a.img", Array.tabulate(64)(_.toByte))
@@ -549,8 +569,8 @@ class MultimodalStreamingSpec extends SparkSpec {
   test("streaming agg sink maintains an exactly-once materialized view") {
     import graft.sources.{LakeIO, LakeZones}
     implicit val sqlCtx = spark.sqlContext
-    val lake = java.nio.file.Files.createTempDirectory("graft_aggmv").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_aggck").toString
+    val lake = tempDir("graft_aggmv")
+    val ckpt = tempDir("graft_aggck")
     val zones = LakeZones(lake)
     val mem = MemoryStream[Event]
     val q = StreamingOps.aggSink(mem.toDF(), zones, "clicks_mv",

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.queries.ExtensionQueries
@@ -43,8 +42,8 @@ class NearDupAdmitSpec extends SparkSpec {
         if (r.isNullAt(2)) -1L else r.getLong(2))).sortBy(_._1)
     assert(expected.exists(_._2 == "R"), "fixture must contain near-dups")
 
-    val stateDir = Files.createTempDirectory("graft_admit_state").toString
-    val outDir = Files.createTempDirectory("graft_admit_out").toString
+    val stateDir = tempDir("graft_admit_state")
+    val outDir = tempDir("graft_admit_out")
     // three id-ordered micro-batches (arrival order = ascending id)
     val cuts = docs.select(col("doc_id")).orderBy(col("doc_id"))
       .collect().map(_.getLong(0))
@@ -76,9 +75,9 @@ class NearDupAdmitSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val stateDir = Files.createTempDirectory("graft_admit_state2").toString
-    val outDir = Files.createTempDirectory("graft_admit_out2").toString
-    val ckpt = Files.createTempDirectory("graft_admit_ckpt").toString
+    val stateDir = tempDir("graft_admit_state2")
+    val outDir = tempDir("graft_admit_out2")
+    val ckpt = tempDir("graft_admit_ckpt")
     val q = StreamingOps.nearDupAdmit(
       mem.toDF().toDF("doc_id", "text"), stateDir, outDir, ckpt)
     // batch 0: two distinct docs; batch 1: a near-dup of doc 1 + a fresh doc

@@ -17,8 +17,7 @@ import PipelineFixture.writeLanding
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkTmp(): String =
-    Files.createTempDirectory("graft_pipe").toString
+  private def mkTmp(): String = tempDir("graft_pipe")
 
   /** Day 2's customer master: customer 10000 changes category. */
   private def writeDay2Customers(landing: String): Unit = {
@@ -284,8 +283,8 @@ class PipelineSpec extends SparkSpec {
     val old = Paths.get(s"$lake/gold/dim.old")
     Files.move(dir, old)
     // a reader repairs the dangling state instead of failing
-    val recovered = LakeIO.readGoldRecovering(spark, zones, "dim")
-    assert(recovered.select("v").as[String].collect().toSeq == Seq("v1"))
+    val recovered = LakeIO.readIfPresent(spark, zones.gold("dim"))
+    assert(recovered.map(_.select("v").as[String].collect().toSeq) == Some(Seq("v1")))
     assert(Files.exists(dir) && !Files.exists(old))
     // crash with a COMPLETE staging dir: the new state wins
     val staging = Paths.get(s"$lake/gold/dim.staging")
@@ -296,6 +295,16 @@ class PipelineSpec extends SparkSpec {
       .select("v").as[String].collect().toSeq
     assert(fin == Seq("v3")) // the new call's state, built on recovery
     assert(!Files.exists(staging) && !Files.exists(old))
+  }
+
+  test("readIfPresent finds no table in a missing or empty directory") {
+    val dir = mkTmp()
+    // an existing empty directory: admitBatch's first batch
+    assert(LakeIO.readIfPresent(spark, dir).isEmpty)
+    assert(LakeIO.readIfPresent(spark, s"$dir/missing").isEmpty)
+    // only entries Spark would skip, as a batch with no rows leaves
+    Files.createFile(Paths.get(s"$dir/_SUCCESS"))
+    assert(LakeIO.readIfPresent(spark, dir).isEmpty)
   }
 
   test("schema drift: evolving bronze batches merge by name (SURVEY §1.3)") {

@@ -20,7 +20,7 @@ class ScaleGenFidelitySpec extends SparkSpec {
 
   private val fixDir = "/root/testdata/sf0.1"
   private lazy val genDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("scalegen-fid").toString
+    val d = tempDir("scalegen-fid")
     ScaleGen.generate(spark, 0.1, d)
     d
   }

@@ -40,7 +40,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bronze ingest-date filter becomes a partition filter (pruning)") {
-    val lake = Files.createTempDirectory("graft_prune").toString
+    val lake = tempDir("graft_prune")
     val zones = LakeZones(lake)
     val day1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
     val day2 = Seq((3, "c")).toDF("id", "v")
@@ -156,8 +156,8 @@ class ScaleSpec extends SparkSpec {
     // 64×64 grid of (x, y) points
     val grid = spark.range(64L * 64)
       .select(($"id" % 64).as("x"), ($"id" / 64).as("y"))
-    val dirZ = Files.createTempDirectory("graft_z").toString
-    val dirX = Files.createTempDirectory("graft_x").toString
+    val dirZ = tempDir("graft_z")
+    val dirX = tempDir("graft_x")
     ZOrder.writeZOrdered(grid, Seq("x", "y"), dirZ, nFiles = 16, bitsPerCol = 6)
     grid.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.mode("overwrite").parquet(dirX)
@@ -239,7 +239,7 @@ class ScaleSpec extends SparkSpec {
 
   test("stats index skips files outside the predicate range; result is exact") {
     import graft.sources.StatsIndex
-    val dir = Files.createTempDirectory("graft_stats").toString
+    val dir = tempDir("graft_stats")
     // range-partitioned sort ⇒ disjoint per-file shipdate envelopes
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .repartitionByRange(8, $"l_shipdate")
@@ -273,7 +273,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("dim filter prunes fact partitions at runtime (dynamic partition pruning)") {
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp")
     val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .withColumn("o_year", year($"o_orderdate"))
     o.write.partitionBy("o_year").mode("overwrite").parquet(s"$dir/fact")
@@ -307,7 +307,7 @@ class ScaleSpec extends SparkSpec {
     // not the whole iteration history
     assert(planLines(local) < 10, local.queryExecution.optimizedPlan.toString)
 
-    val dir = Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.conf.set(Checkpoints.DirConf, dir)
     try {
@@ -334,7 +334,7 @@ class ScaleSpec extends SparkSpec {
     import graft.operators.Checkpoints
     def filesUnder(dir: String): Long =
       Files.walk(java.nio.file.Paths.get(dir)).filter(Files.isRegularFile(_)).count()
-    val dirs = Seq.fill(2)(Files.createTempDirectory("graft_ckpt_dir").toString)
+    val dirs = Seq.fill(2)(tempDir("graft_ckpt_dir"))
     spark.conf.set(Checkpoints.ReliableConf, "true")
     try dirs.foreach { dir =>
       spark.conf.set(Checkpoints.DirConf, dir)

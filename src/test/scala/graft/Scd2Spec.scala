@@ -174,7 +174,7 @@ class Scd2Spec extends SparkSpec {
 
   test("merge result references the input dimension once (no plan growth)") {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val dir = java.nio.file.Files.createTempDirectory("scd2-dim").toString
+    val dir = tempDir("scd2-dim")
     Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec, ts("2024-01-01 00:00:00"))
       .write.mode("overwrite").parquet(dir)
     val b2 = batch((10L, "Acme Corp", "C", "100"), (30L, "Initech", "C", "300"))

@@ -129,7 +129,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted IVF index: pruned search equals the in-memory plan") {
     import graft.sources.LakeZones
-    val lake = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val lake = tempDir("graft_ivf")
     val zones = LakeZones(lake)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = e.filter($"vec_id" % 50 === 0)
@@ -175,7 +175,7 @@ class SimilaritySpec extends SparkSpec {
     // lands as a run partition and equals the in-memory search
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_annck").toString
+    val ckpt = tempDir("graft_annck")
     val mem = MemoryStream[(Long, Array[Float])]
     val stream = mem.toDF().toDF("vec_id", "embedding")
     val sq = graft.streaming.StreamingOps.annEnrich(
