@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
 import graft.functions.JdeFunctions._
 
 /** Composite C5 — the calendar dimension (Dim_Date).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -103,26 +103,17 @@ object Multimodal {
                    mediaCol: String = "media", frameBytes: Int = 256,
                    stride: Int = 128): DataFrame = {
     require(frameBytes > 0 && stride > 0, "frameBytes and stride must be positive")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
+    mapMedia(df, idCol, mediaCol, Nil, Seq(
       StructField("frame_idx", LongType, nullable = false),
       StructField("frame", BinaryType, nullable = false),
-      StructField("frame_bytes", LongType, nullable = false)))
-    val input = df.select(col(idCol).cast(LongType), col(mediaCol))
-    val rdd = input.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        Iterator.range(0, bytes.length, stride).zipWithIndex.map {
-          case (off, idx) =>
-            val frame = java.util.Arrays.copyOfRange(
-              bytes, off, math.min(off + frameBytes, bytes.length))
-            Row(id, idx.toLong, frame, frame.length.toLong)
-        }
+      StructField("frame_bytes", LongType, nullable = false))) { (id, bytes, _) =>
+      Iterator.range(0, bytes.length, stride).zipWithIndex.map {
+        case (off, idx) =>
+          val frame = java.util.Arrays.copyOfRange(
+            bytes, off, math.min(off + frameBytes, bytes.length))
+          Row(id, idx.toLong, frame, frame.length.toLong)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Deterministic nearest-neighbor byte resample to `targetBytes` —
@@ -132,28 +123,19 @@ object Multimodal {
   def resizeMedia(df: DataFrame, idCol: String = "doc_id",
                   mediaCol: String = "media", targetBytes: Int = 64): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
+    mapMedia(df, idCol, mediaCol, Nil, Seq(
       StructField("resized", BinaryType, nullable = false),
-      StructField("orig_bytes", LongType, nullable = false)))
-    val input = df.select(col(idCol).cast(LongType), col(mediaCol))
-    val rdd = input.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        val out = new Array[Byte](targetBytes)
-        if (bytes.length > 0) {
-          var i = 0
-          while (i < targetBytes) {
-            out(i) = bytes((i.toLong * bytes.length / targetBytes).toInt)
-            i += 1
-          }
+      StructField("orig_bytes", LongType, nullable = false))) { (id, bytes, _) =>
+      val out = new Array[Byte](targetBytes)
+      if (bytes.length > 0) {
+        var i = 0
+        while (i < targetBytes) {
+          out(i) = bytes((i.toLong * bytes.length / targetBytes).toInt)
+          i += 1
         }
-        Row(id, out, bytes.length.toLong)
       }
+      Iterator.single(Row(id, out, bytes.length.toLong))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Perceptual near-dup over binary media columns — the image/audio
@@ -183,22 +165,11 @@ object Multimodal {
     * (id, features array<float>, size_bytes). */
   def extractFeatures(df: DataFrame, idCol: String = "doc_id",
                       mediaCol: String = "media",
-                      nBuckets: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false)),
-      StructField("size_bytes", LongType, nullable = false)))
-    val input = df.select(col(idCol).cast(LongType), col(mediaCol))
-    val rdd = input.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        Row(id, fakeDecodeFeatures(bytes, nBuckets).toSeq, bytes.length.toLong)
-      }
+                      nBuckets: Int = 16): DataFrame =
+    mapMedia(df, idCol, mediaCol, Nil, featureFields) { (id, bytes, _) =>
+      Iterator.single(
+        Row(id, fakeDecodeFeatures(bytes, nBuckets).toSeq, bytes.length.toLong))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Like [[extractFeatures]] but through the REAL decode seam: the
     * mime type rides in from the metadata struct and image payloads
@@ -207,21 +178,28 @@ object Multimodal {
     * zero shuffle, 16-float features either way. */
   def extractDecodedFeatures(df: DataFrame, idCol: String = "doc_id",
                              mediaCol: String = "media",
-                             mimeCol: String = "media_meta.mime_type"): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false)),
-      StructField("size_bytes", LongType, nullable = false)))
-    val input = df.select(col(idCol).cast(LongType), col(mediaCol),
-      expr(mimeCol).cast(StringType))
-    val rdd = input.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        Row(id, decodeMedia(r.getString(2), bytes).toSeq, bytes.length.toLong)
-      }
+                             mimeCol: String = "media_meta.mime_type"): DataFrame =
+    mapMedia(df, idCol, mediaCol, Seq(expr(mimeCol).cast(StringType)),
+      featureFields) { (id, bytes, r) =>
+      Iterator.single(
+        Row(id, decodeMedia(r.getString(2), bytes).toSeq, bytes.length.toLong))
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  private val featureFields = Seq(
+    StructField("features", ArrayType(FloatType, containsNull = false)),
+    StructField("size_bytes", LongType, nullable = false))
+
+  /** The extractors' one pass: stream each partition's `(id, media,
+    * extra…)` rows through `f(id, bytes, row)`, whose output rows are
+    * the id followed by `outFields`. */
+  private def mapMedia(df: DataFrame, idCol: String, mediaCol: String,
+                       extra: Seq[Column], outFields: Seq[StructField])
+                      (f: (Long, Array[Byte], Row) => Iterator[Row]): DataFrame = {
+    val outSchema = StructType(StructField(idCol, LongType, nullable = false) +: outFields)
+    val input = df.select(col(idCol).cast(LongType) +: col(mediaCol) +: extra: _*)
+    val rdd = input.rdd.mapPartitions(_.flatMap { r =>
+      f(r.getLong(0), r.getAs[Array[Byte]](1), r)
+    })
+    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 }

@@ -34,12 +34,7 @@ object Similarity {
       queries.select(col(idCol).cast(LongType).as("q_id"), col(vecCol).as("q_v")))
     val scored = c.join(q, col("q_id") =!= col("n_id"))
       .withColumn("cos", cosine(col("q_v"), col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast(LongType).as("rank"),
-        col("n_id"), col("cos"))
+    topKByCos(scored, k)
   }
 
   /** Multi-table LSH approximate top-k: `tables` independent SRP hash
@@ -66,12 +61,7 @@ object Similarity {
       .select(col("q_id"), col("q_v"), col("n_id"), col("n_v"))
       .dropDuplicates("q_id", "n_id")
     val scored = candidates.withColumn("cos", cosine(col("q_v"), col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast(LongType).as("rank"),
-        col("n_id"), col("cos"))
+    topKByCos(scored, k)
   }
 
   /** IVF (inverted-file) approximate top-k — the classic
@@ -101,9 +91,7 @@ object Similarity {
       // maxCells cap = the [[Clustering.seedCentroids]] scale guard:
       // codebook size is a hyperparameter, not a function of corpus
       // size (uncapped, the N×cells assignment goes quadratic)
-      corpus.filter(col(idCol) % centroidEvery === 0 &&
-          col(idCol) < centroidEvery.toLong * maxCells)
-        .select(col(idCol).cast(LongType).as("c_id"), col(vecCol).as("c_v")),
+      Clustering.seedCentroids(corpus, centroidEvery, idCol, vecCol, maxCells),
       k, nProbe, idCol, vecCol)
 
   /** IVF search against an EXPLICIT codebook `(c_id, c_v)` — e.g. one
@@ -114,36 +102,16 @@ object Similarity {
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
                   centroids: DataFrame, k: Int, nProbe: Int = 2,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).cast(LongType).as("n_id"), col(vecCol).as("n_v"))
     val cents = broadcast(centroids.select(
       col("c_id").cast(LongType).as("c_id"), col("c_v")))
-    // nearest centroid per corpus vector: max over (cos, -c_id) picks
-    // the highest cosine, smallest centroid id on ties — equivalent to
-    // ROW_NUMBER()=1 but with a map-side partial aggregate
-    val assign = c.crossJoin(cents)
-      .withColumn("cos_c", cosine(col("n_v"), col("c_v")))
-      .groupBy(col("n_id"), col("n_v"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg"))).as("m"))
-      .select(col("n_id"), col("n_v"), (-col("m.neg")).as("cell"))
-    val q = queries.select(col(idCol).cast(LongType).as("q_id"), col(vecCol).as("q_v"))
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_c").desc, col("c_id"))
-    val probes = q.crossJoin(cents)
-      .withColumn("cos_c", cosine(col("q_v"), col("c_v")))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
+    val assign = Clustering.assignCells(corpus, cents, idCol, vecCol)
+    val probes = probeCells(queries, cents, nProbe, idCol, vecCol)
     // every corpus vector lives in exactly one cell → no dedup needed
     val scored = broadcast(probes)
       .join(assign, Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("cos", cosine(col("q_v"), col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast(LongType).as("rank"),
-        col("n_id"), col("cos"))
+    topKByCos(scored, k)
   }
 
   /** Persist an IVF index to the lake: corpus vectors land
@@ -224,15 +192,7 @@ object Similarity {
     val codebook =
       graft.sources.LakeIO.readGold(spark, zones, s"${name}_codebook")
     val cents = broadcast(codebook)
-    val q = queries.select(col(idCol).cast(LongType).as("q_id"),
-      col(vecCol).as("q_v"))
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_c").desc, col("c_id"))
-    val probes = q.crossJoin(cents)
-      .withColumn("cos_c", cosine(col("q_v"), col("c_v")))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
+    val probes = probeCells(queries, cents, nProbe, idCol, vecCol)
     val idxAll = graft.sources.LakeIO.readGold(spark, zones, s"${name}_cells")
     val idx =
       if (ivfCellCount(spark, zones, name, codebook) <= maxInlineCells) {
@@ -245,6 +205,26 @@ object Similarity {
       .join(idx, Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("cos", cosine(col("q_v"), col("n_v")))
+    topKByCos(scored, k)
+  }
+
+  /** The `nProbe` nearest cells of each query by cosine against the
+    * codebook `cents` (ties → smaller `c_id`): `(q_id, q_v, cell)`. */
+  private def probeCells(queries: DataFrame, cents: DataFrame, nProbe: Int,
+                         idCol: String, vecCol: String): DataFrame = {
+    val q = queries.select(col(idCol).cast(LongType).as("q_id"), col(vecCol).as("q_v"))
+    val probeW = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_c").desc, col("c_id"))
+    q.crossJoin(cents)
+      .withColumn("cos_c", cosine(col("q_v"), col("c_v")))
+      .withColumn("rn", row_number().over(probeW))
+      .filter(col("rn") <= nProbe)
+      .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
+  }
+
+  /** Rank each query's scored candidates by (cosine desc, neighbor id)
+    * and keep the first `k`: `(q_id, rank, n_id, cos)`. */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w))

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.queries.QueryDef.{eventsTable, table}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-3 third widening: corpus-governance analytics — rule-based
   * quality gating (Gopher-style), calendar gap-fill, bigram
@@ -66,6 +66,34 @@ object AnalyticsQueries {
              CAST(SUM(pass) AS DOUBLE) / COUNT(*) AS pass_rate
       FROM r GROUP BY 1 ORDER BY source"""))
 
+  /** q81's zero-filled calendar grid: one row per (day, event_type)
+    * over the observed day range, `n_events` 0 where none occurred.
+    * The spine and the types are tiny and broadcast. Shared with q99. */
+  private def dailyGrid(s: org.apache.spark.sql.SparkSession, dir: String)
+  : org.apache.spark.sql.DataFrame = {
+    val e = eventsTable(s, dir)
+      .select(to_date(col("ts")).as("day"), col("event_type"))
+    val days = e.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
+    val types = e.select(col("event_type")).distinct()
+    val daily = e.groupBy(col("day"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    broadcast(days).crossJoin(broadcast(types))
+      .join(daily, Seq("day", "event_type"), "left")
+      .select(col("day"), col("event_type"),
+        coalesce(col("n"), lit(0L)).as("n_events"))
+  }
+
+  /** DuckDB CTEs of [[dailyGrid]]'s inputs: events `e(day,
+    * event_type)`, the day spine `days` and the types `t`. */
+  private val daySpineSql = """e AS (
+        SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type FROM events),
+      b AS (SELECT min(day) AS lo, max(day) AS hi FROM e),
+      days AS (
+        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
+        FROM b),
+      t AS (SELECT DISTINCT event_type FROM e)"""
+
   /** q81 — calendar-spine gap fill: daily event counts per type with
     * EVERY day of the observed range present (missing days zero-
     * filled via a generated date spine × distinct-types cross join —
@@ -73,28 +101,9 @@ object AnalyticsQueries {
     * is tiny and broadcast, so the fill adds no shuffle at scale). */
   private val q81 = QueryDef(
     "q81_daily_gap_fill",
-    (s, dir) => {
-      val e = eventsTable(s, dir)
-        .select(to_date(col("ts")).as("day"), col("event_type"))
-      val days = e.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-      val types = e.select(col("event_type")).distinct()
-      val daily = e.groupBy(col("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      broadcast(days).crossJoin(broadcast(types))
-        .join(daily, Seq("day", "event_type"), "left")
-        .select(col("day"), col("event_type"),
-          coalesce(col("n"), lit(0L)).as("n_events"))
-        .orderBy(col("day"), col("event_type"))
-    },
-    Some("""
-      WITH e AS (
-        SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type FROM events),
-      b AS (SELECT min(day) AS lo, max(day) AS hi FROM e),
-      days AS (
-        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-        FROM b),
-      t AS (SELECT DISTINCT event_type FROM e),
+    (s, dir) => dailyGrid(s, dir).orderBy(col("day"), col("event_type")),
+    Some(s"""
+      WITH $daySpineSql,
       d AS (SELECT day, event_type, COUNT(*) AS n FROM e GROUP BY 1, 2)
       SELECT days.day, t.event_type,
              COALESCE(n, CAST(0 AS BIGINT)) AS n_events
@@ -151,6 +160,15 @@ object AnalyticsQueries {
       FROM bc JOIN cx a ON bc.w1 = a.w JOIN cx b ON bc.w2 = b.w, n
       ORDER BY pmi_ratio DESC, bigram LIMIT 20"""))
 
+  /** Token mass per language, `(lang, lang_tokens)` — the input of
+    * the q83 and q96 mixing weights. */
+  private def langTokens(s: org.apache.spark.sql.SparkSession, dir: String)
+  : org.apache.spark.sql.DataFrame =
+    table(s, dir, "documents")
+      .select(col("lang"),
+        TextFunctions.tokenCount(col("text")).cast(LongType).as("n_tok"))
+      .groupBy(col("lang")).agg(sum(col("n_tok")).as("lang_tokens"))
+
   /** q83 — token-budget corpus mixing: per-language token mass, its
     * share of the corpus, and the deterministic sampling rate that
     * levels every language to an equal token budget
@@ -160,10 +178,7 @@ object AnalyticsQueries {
   private val q83 = QueryDef(
     "q83_token_budget_mix",
     (s, dir) => {
-      val perLang = table(s, dir, "documents")
-        .select(col("lang"),
-          TextFunctions.tokenCount(col("text")).cast(LongType).as("n_tok"))
-        .groupBy(col("lang")).agg(sum(col("n_tok")).as("lang_tokens"))
+      val perLang = langTokens(s, dir)
       val tot = perLang.agg(sum(col("lang_tokens")).as("total_tokens"),
         count(lit(1)).as("n_langs"))
       perLang.crossJoin(broadcast(tot))
@@ -528,6 +543,12 @@ object AnalyticsQueries {
              TRUE AS approx_ok
       FROM orders GROUP BY 1 ORDER BY 1"""))
 
+  /** Each user's events in (ts, event_id) order, from the first up
+    * to the current row: the carry-forward frame of q93 and q94. */
+  private val userRunning = Window.partitionBy(col("user_id"))
+    .orderBy(col("ts"), col("event_id"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
   /** q93 — forward-fill imputation (LOCF): per-user event stream with
     * synthetic gaps (every 7th event's value nulled) repaired by
     * carrying the last observed value forward — `last(_, ignoreNulls)`
@@ -536,13 +557,10 @@ object AnalyticsQueries {
   private val q93 = QueryDef(
     "q93_locf_impute",
     (s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       eventsTable(s, dir)
         .withColumn("v",
           when(col("event_id") % 7 === 0, lit(null)).otherwise(col("value")))
-        .withColumn("filled", last(col("v"), ignoreNulls = true).over(w))
+        .withColumn("filled", last(col("v"), ignoreNulls = true).over(userRunning))
         .select(col("event_id"), col("user_id"),
           unix_millis(col("ts")).as("ts_ms"), col("filled"))
         .orderBy(col("event_id"))
@@ -566,16 +584,13 @@ object AnalyticsQueries {
   private val q94 = QueryDef(
     "q94_attribution",
     (s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       eventsTable(s, dir)
         .withColumn("click_id",
           last(when(col("event_type") === "click", col("event_id")),
-            ignoreNulls = true).over(w))
+            ignoreNulls = true).over(userRunning))
         .withColumn("click_ts",
           last(when(col("event_type") === "click", col("ts")),
-            ignoreNulls = true).over(w))
+            ignoreNulls = true).over(userRunning))
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"),
           unix_millis(col("ts")).as("ts_ms"), col("click_id"),
@@ -730,10 +745,7 @@ object AnalyticsQueries {
   private val q96 = QueryDef(
     "q96_temperature_mix",
     (s, dir) => {
-      val perLang = table(s, dir, "documents")
-        .select(col("lang"),
-          TextFunctions.tokenCount(col("text")).cast(LongType).as("n_tok"))
-        .groupBy(col("lang")).agg(sum(col("n_tok")).as("lang_tokens"))
+      val perLang = langTokens(s, dir)
         .withColumn("w_int",
           floor(sqrt(col("lang_tokens").cast(DoubleType)) * 1e6).cast(LongType))
       val tot = perLang.agg(sum(col("lang_tokens")).as("total_tokens"),
@@ -791,21 +803,7 @@ object AnalyticsQueries {
         .orderBy(col("component"))
     },
     Some(s"""
-      WITH ${ExtensionQueries.augmentedDocsSql},
-      toks AS (SELECT doc_id, source, text, $toksSql AS t FROM aug),
-      prepped AS MATERIALIZED (
-        SELECT doc_id AS id,
-               source || '#' || CAST(length(text) // 64 AS VARCHAR) AS blk,
-               list_distinct(${ExtensionQueries.shinglesSql}) AS sh
-        FROM toks),
-      ex AS MATERIALIZED (
-        SELECT id, blk, len(sh) AS n, unnest(sh) AS s FROM prepped),
-      pairs AS MATERIALIZED (
-        SELECT a.id AS id_a, b.id AS id_b
-        FROM ex a JOIN ex b ON a.blk = b.blk AND a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id, a.n, b.n
-        HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.3),
-      ${ExtensionQueries.closureUnrollSql()},
+      WITH ${ExtensionQueries.jaccardClustersSql},
       split AS (
         SELECT doc_id,
                CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
@@ -844,21 +842,7 @@ object AnalyticsQueries {
         .orderBy(col("component"))
     },
     Some(s"""
-      WITH ${ExtensionQueries.augmentedDocsSql},
-      toks AS (SELECT doc_id, source, text, $toksSql AS t FROM aug),
-      prepped AS MATERIALIZED (
-        SELECT doc_id AS id,
-               source || '#' || CAST(length(text) // 64 AS VARCHAR) AS blk,
-               list_distinct(${ExtensionQueries.shinglesSql}) AS sh
-        FROM toks),
-      ex AS MATERIALIZED (
-        SELECT id, blk, len(sh) AS n, unnest(sh) AS s FROM prepped),
-      pairs AS MATERIALIZED (
-        SELECT a.id AS id_a, b.id AS id_b
-        FROM ex a JOIN ex b ON a.blk = b.blk AND a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id, a.n, b.n
-        HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.3),
-      ${ExtensionQueries.closureUnrollSql()},
+      WITH ${ExtensionQueries.jaccardClustersSql},
       q AS (SELECT doc_id, ${ExtensionQueries.qualitySql} AS quality FROM toks),
       ranked AS (
         SELECT comp.component, comp.id, q.quality,
@@ -877,16 +861,7 @@ object AnalyticsQueries {
   private val q99 = QueryDef(
     "q99_rate_anomaly",
     (s, dir) => {
-      val e = eventsTable(s, dir)
-        .select(to_date(col("ts")).as("day"), col("event_type"))
-      val days = e.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-      val types = e.select(col("event_type")).distinct()
-      val daily = broadcast(days).crossJoin(broadcast(types))
-        .join(e.groupBy(col("day"), col("event_type")).agg(count(lit(1)).as("n")),
-          Seq("day", "event_type"), "left")
-        .select(col("day"), col("event_type"),
-          coalesce(col("n"), lit(0L)).as("n_events"))
+      val daily = dailyGrid(s, dir)
       val stats = daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"), sum(col("n_events")).as("s1"),
           sum(col("n_events") * col("n_events")).as("s2"))
@@ -901,14 +876,8 @@ object AnalyticsQueries {
         .select(col("event_type"), col("day"), col("n_events"), col("z"))
         .orderBy(col("event_type"), col("day"))
     },
-    Some("""
-      WITH e AS (
-        SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type FROM events),
-      b AS (SELECT min(day) AS lo, max(day) AS hi FROM e),
-      days AS (
-        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-        FROM b),
-      t AS (SELECT DISTINCT event_type FROM e),
+    Some(s"""
+      WITH $daySpineSql,
       raw AS (SELECT day, event_type, COUNT(*) AS n FROM e GROUP BY 1, 2),
       daily AS (
         SELECT days.day, t.event_type,
@@ -1020,21 +989,7 @@ object AnalyticsQueries {
         .orderBy(col("split"), col("source"))
     },
     Some(s"""
-      WITH ${ExtensionQueries.augmentedDocsSql},
-      toks AS (SELECT doc_id, source, text, $toksSql AS t FROM aug),
-      prepped AS MATERIALIZED (
-        SELECT doc_id AS id,
-               source || '#' || CAST(length(text) // 64 AS VARCHAR) AS blk,
-               list_distinct(${ExtensionQueries.shinglesSql}) AS sh
-        FROM toks),
-      ex AS MATERIALIZED (
-        SELECT id, blk, len(sh) AS n, unnest(sh) AS s FROM prepped),
-      pairs AS MATERIALIZED (
-        SELECT a.id AS id_a, b.id AS id_b
-        FROM ex a JOIN ex b ON a.blk = b.blk AND a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id, a.n, b.n
-        HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.3),
-      ${ExtensionQueries.closureUnrollSql()},
+      WITH ${ExtensionQueries.jaccardClustersSql},
       cl AS (
         SELECT a.doc_id, a.source, a.text,
                COALESCE(c.component, a.doc_id) AS cluster

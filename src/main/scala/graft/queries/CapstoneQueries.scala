@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 
 /** Round-4 capstone tier (q196–q200): the batch twin of the streaming
   * CEP pattern detector, a pseudonymization-soundness audit, weekly
@@ -160,26 +160,16 @@ object CapstoneQueries {
   private val q199 = QueryDef(
     "q199_dau_wau_stickiness",
     (s, dir) => {
-      val ud = eventsTable(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val maxDay = ud.agg(max(col("day")).as("max_day"))
+      val ud = HygieneQueries.userDays(s, dir)
       val dau = ud.groupBy(col("day")).agg(countDistinct(col("user_id")).as("dau"))
-      val wau = ud
-        .select(col("user_id"), explode(sequence(lit(0), lit(6))).as("off"),
-          col("day"))
-        .select(col("user_id"), date_add(col("day"), col("off")).as("day"))
-        .crossJoin(broadcast(maxDay))
-        .filter(col("day") <= col("max_day"))
+      val wau = HygieneQueries.weekWindows(ud, "day")
         .groupBy(col("day")).agg(countDistinct(col("user_id")).as("wau"))
       dau.join(wau, Seq("day"))
         .withColumn("stickiness_ppm", expr("(dau * 1000000L) div wau"))
         .orderBy(col("day"))
     },
-    Some("""
-      WITH ud AS (
-        SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-        FROM events),
-      mx AS (SELECT MAX(day) AS max_day FROM ud),
+    Some(s"""
+      WITH ${HygieneQueries.userDaysSql},
       dau AS (SELECT day, COUNT(DISTINCT user_id) AS dau FROM ud GROUP BY 1),
       mem AS (SELECT user_id, day + CAST(off AS INT) AS day
               FROM ud, unnest([0, 1, 2, 3, 4, 5, 6]) AS u(off)),

@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import graft.functions.VectorFunctions
 import graft.operators.Clustering
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 
 /** Round-4 continuation: vector-geometry tier — a Johnson–
   * Lindenstrauss random-projection distortion audit (the dimension-

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.operators.{Reconcile, Sampling, TextAnalysis}
-import graft.queries.QueryDef.{spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.queries.QueryDef.table
+import graft.functions.DecimalExprs.dec2
 
 /** Round-3 widening: distribution-window family, PII scrubbing,
   * snapshot reconciliation, boilerplate-line removal, TF-IDF,
@@ -602,22 +602,7 @@ object CurationQueries {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH ${ExtensionQueries.augmentedDocsSql},
-      toks AS (SELECT doc_id, source, text, ${ExtensionQueries.toksSql} AS t
-               FROM aug),
-      prepped AS MATERIALIZED (
-        SELECT doc_id AS id,
-               source || '#' || CAST(length(text) // 64 AS VARCHAR) AS blk,
-               list_distinct(${ExtensionQueries.shinglesSql}) AS sh
-        FROM toks),
-      ex AS MATERIALIZED (
-        SELECT id, blk, len(sh) AS n, unnest(sh) AS s FROM prepped),
-      pairs AS MATERIALIZED (
-        SELECT a.id AS id_a, b.id AS id_b
-        FROM ex a JOIN ex b ON a.blk = b.blk AND a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id, a.n, b.n
-        HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.3),
-      ${ExtensionQueries.closureUnrollSql()},
+      WITH ${ExtensionQueries.jaccardClustersSql},
       sizes AS (SELECT component, COUNT(*) AS cluster_size
                 FROM comp GROUP BY 1)
       SELECT c.id AS doc_id, c.component, s.cluster_size

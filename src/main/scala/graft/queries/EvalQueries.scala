@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.operators.{Quantization, Similarity}
-import graft.queries.ExtensionQueries.{cosSql, toksSql}
+import graft.queries.ExtensionQueries.toksSql
 import graft.queries.QueryDef.{spreadTable, table}
 
 /** Round-4 continuation: evaluation tier — graded retrieval quality
@@ -63,51 +63,14 @@ object EvalQueries {
         .orderBy(col("q_id"))
     },
     Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      sc AS (
-        SELECT pos, MAX(ABS(x)) AS s FROM (
-          SELECT CAST(generate_subscripts(v, 1) AS BIGINT) AS pos,
-                 unnest(v) AS x FROM e)
-        GROUP BY pos),
-      sca AS (SELECT list(s ORDER BY pos) AS sa FROM sc),
-      qz AS (
-        SELECT vec_id,
-               list_transform(generate_series(1, len(v)), i ->
-                 CASE WHEN sa[i] = 0 THEN CAST(0 AS BIGINT)
-                      ELSE CAST(round(v[i] * 127.0 / sa[i]) AS BIGINT) END) AS qv
-        FROM e, sca),
-      qn AS (SELECT vec_id, qv,
-                    CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS n
-             FROM qz),
-      q AS (SELECT vec_id AS q_id, qv AS q_qv, n AS q_n
-            FROM qn WHERE vec_id % 200 = 0 AND vec_id < 2000),
-      sc2 AS (
-        SELECT q_id, vec_id AS n_id,
-               CAST(list_sum(list_transform(generate_series(1, len(q_qv)),
-                 i -> q_qv[i] * qv[i])) AS BIGINT) AS dt,
-               q_n, n AS n_n
-        FROM q JOIN qn ON q_id <> vec_id),
-      scored AS (
-        SELECT q_id, n_id,
-               CASE WHEN q_n * n_n = 0 THEN 0.0
-                    ELSE CAST(dt AS DOUBLE) / sqrt(CAST(q_n * n_n AS DOUBLE))
-               END AS qcos
-        FROM sc2),
+      WITH ${QuantQueries.int8CosSql},
       approx AS (
         SELECT q_id, n_id,
                CAST(ROW_NUMBER() OVER (PARTITION BY q_id
                                        ORDER BY qcos DESC, n_id) AS BIGINT) AS p
         FROM scored QUALIFY p <= 5),
-      eq AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 200 = 0 AND vec_id < 2000),
-      esc AS (SELECT a.q_id, b.vec_id AS n_id, $cosSql AS cos
-              FROM eq a JOIN e b ON a.q_id <> b.vec_id),
-      etop AS (
-        SELECT q_id, n_id, CAST(6 - rn AS BIGINT) AS rel, CAST(rn AS BIGINT) AS rn
-        FROM (SELECT q_id, n_id,
-                     ROW_NUMBER() OVER (PARTITION BY q_id
-                                        ORDER BY cos DESC, n_id) AS rn
-              FROM esc)
-        WHERE rn <= 5),
+      ${QuantQueries.exactTop5Sql("\nSELECT q_id, n_id, CAST(6 - rn AS BIGINT) AS rel, " +
+        "CAST(rn AS BIGINT) AS rn FROM (")},
       dcg AS (
         SELECT a.q_id,
                SUM(CAST(ROUND(CAST(COALESCE(t.rel, 0) AS DOUBLE) /
@@ -333,6 +296,23 @@ object EvalQueries {
       FROM a JOIN b USING (bin), na, nb
       ORDER BY bin"""))
 
+  /** The events table's `(user_id, event_id, ts, event_type)`. */
+  private def userEvents(s: org.apache.spark.sql.SparkSession, dir: String)
+  : org.apache.spark.sql.DataFrame =
+    graft.queries.QueryDef.eventsTable(s, dir)
+      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
+
+  /** Every user's consecutive event pairs: [[userEvents]] rows `e`
+    * with the user's next event type `nxt`, in (ts, event_id) order —
+    * the input of q179 and q187. */
+  private def transitions(e: org.apache.spark.sql.DataFrame)
+  : org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    e.withColumn("nxt", lead(col("event_type"), 1).over(w))
+      .filter(col("nxt").isNotNull)
+  }
+
   /** q179 — Markov next-event prediction accuracy with a train/score
     * split: transition counts from even user_ids train a majority-
     * vote next-event model (argmax count, ties lexicographic); odd
@@ -344,12 +324,7 @@ object EvalQueries {
   private val q179 = QueryDef(
     "q179_markov_accuracy",
     (s, dir) => {
-      val e = graft.queries.QueryDef.eventsTable(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val trans = e.withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
+      val trans = transitions(userEvents(s, dir))
         .select(col("user_id"), col("event_type").as("cur"), col("nxt"))
       val model = trans.filter(col("user_id") % 2 === 0)
         .groupBy(col("cur"), col("nxt")).agg(count(lit(1)).as("c"))
@@ -556,12 +531,8 @@ object EvalQueries {
     "q187_absorption_prob",
     (s, dir) => {
       val dec = DecimalType(18, 9)
-      val e = graft.queries.QueryDef.eventsTable(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val trans = e.withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
+      val e = userEvents(s, dir)
+      val trans = transitions(e)
         .filter(col("event_type") =!= "purchase") // absorbing: no out-edges
         .groupBy(col("event_type").as("src"), col("nxt").as("dst"))
         .agg(count(lit(1)).as("c"))

@@ -1,13 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{RollingHashExpr, TextFunctions, VectorFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, EventWindows, Similarity, TextAnalysis}
 import QueryDef.{eventsTable, spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.functions.DecimalExprs.dec2
 
 /** Extension query set — the LLM-training-data-pipeline operators
   * (SURVEY.md §7.5): event windowing, dedup family, similarity
@@ -343,6 +343,26 @@ object ExtensionQueries {
                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
          ELSE [array_to_string(t, ' ')] END"""
 
+  /** The near-dup cluster oracle of q67, q97, q98 and q137: the
+    * augmented docs `aug`, their `toks`, the length-blocked word-3-
+    * shingle Jaccard ≥ 0.3 `pairs`, closed into `comp(id, component)`
+    * by [[closureUnrollSql]]. */
+  private[queries] val jaccardClustersSql = s"""$augmentedDocsSql,
+      toks AS (SELECT doc_id, source, text, $toksSql AS t FROM aug),
+      prepped AS MATERIALIZED (
+        SELECT doc_id AS id,
+               source || '#' || CAST(length(text) // 64 AS VARCHAR) AS blk,
+               list_distinct($shinglesSql) AS sh
+        FROM toks),
+      ex AS MATERIALIZED (
+        SELECT id, blk, len(sh) AS n, unnest(sh) AS s FROM prepped),
+      pairs AS MATERIALIZED (
+        SELECT a.id AS id_a, b.id AS id_b
+        FROM ex a JOIN ex b ON a.blk = b.blk AND a.s = b.s AND a.id < b.id
+        GROUP BY a.id, b.id, a.n, b.n
+        HAVING CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) >= 0.3),
+      ${closureUnrollSql()}"""
+
   private val q30 = QueryDef(
     "q30_dedup_exact",
     (s, dir) => Dedup.exact(augmentedDocs(s, dir)).orderBy(col("fp")),
@@ -365,6 +385,19 @@ object ExtensionQueries {
       s"SELECT doc_id, md5('$b,' || $hs) AS band FROM sig"
     }.mkString("\n        UNION ALL ")
 
+  /** MinHash signatures of a `toks(doc_id, t)` CTE: distinct word
+    * 3-shingles `shing(doc_id, sh)`, their hashes, and
+    * `sig(doc_id, h0..h15)` — the oracle side of [[Dedup.minhashLsh]]
+    * (q31, q225, q228). */
+  private val minhashSigsSql: String = s"""shing AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM toks),
+      hashed AS (SELECT doc_id,
+        list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
+                                  % ${Dedup.MinhashP}) AS hs
+        FROM shing),
+      sig AS (SELECT doc_id,
+               $minhashSigSql
+              FROM hashed)"""
+
   private val q31 = QueryDef(
     "q31_dedup_minhash_lsh",
     (s, dir) => Dedup.minhashLsh(augmentedDocs(s, dir))
@@ -372,14 +405,7 @@ object ExtensionQueries {
     Some(s"""
       WITH $augmentedDocsSql,
       toks AS (SELECT doc_id, $toksSql AS t FROM aug),
-      shing AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM toks),
-      hashed AS (SELECT doc_id,
-        list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-                                  % ${Dedup.MinhashP}) AS hs
-        FROM shing),
-      sig AS (SELECT doc_id,
-               $minhashSigSql
-              FROM hashed),
+      $minhashSigsSql,
       bands AS (
         $minhashBandsSql),
       cand AS (
@@ -430,14 +456,7 @@ object ExtensionQueries {
     Some(s"""
       WITH $augmentedDocsSql,
       toks AS (SELECT doc_id, $toksSql AS t FROM aug),
-      shing AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM toks),
-      hashed AS (SELECT doc_id,
-        list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-                                  % ${Dedup.MinhashP}) AS hs
-        FROM shing),
-      sig AS (SELECT doc_id,
-               $minhashSigSql
-              FROM hashed),
+      $minhashSigsSql,
       bands AS MATERIALIZED (
         $minhashBandsSql),
       cand AS (
@@ -576,6 +595,16 @@ object ExtensionQueries {
       WHERE $cosSql >= 0.95
       ORDER BY id_a, id_b"""))
 
+  /** Oracle tail of the ANN queries q35-q37: each query's top 5 of a
+    * `scored(q_id, n_id, cos)` CTE by (cos desc, n_id) — the SQL side
+    * of `Similarity`'s top-k ranking. */
+  private val cosTop5Sql = """ranked AS (
+        SELECT q_id, n_id, cos,
+               ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn
+        FROM scored)
+      SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, cos
+      FROM ranked WHERE rn <= 5 ORDER BY q_id, rank"""
+
   private val q35 = QueryDef(
     "q35_knn_bruteforce",
     (s, dir) => {
@@ -591,12 +620,7 @@ object ExtensionQueries {
       scored AS (
         SELECT q_id, n_id, $cosSql AS cos
         FROM q a JOIN c b ON q_id <> n_id),
-      ranked AS (
-        SELECT q_id, n_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn
-        FROM scored)
-      SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, cos
-      FROM ranked WHERE rn <= 5 ORDER BY q_id, rank"""))
+      $cosTop5Sql"""))
 
   /** Per-table SRP bucket in DuckDB SQL: table `t` folds hyperplanes
     * [t·nBits, (t+1)·nBits) exactly like `Similarity.srpTopK`, with
@@ -638,12 +662,7 @@ object ExtensionQueries {
         FROM cand
         JOIN e a ON a.vec_id = cand.q_id
         JOIN e b ON b.vec_id = cand.n_id),
-      ranked AS (
-        SELECT q_id, n_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn
-        FROM scored)
-      SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, cos
-      FROM ranked WHERE rn <= 5 ORDER BY q_id, rank"""))
+      $cosTop5Sql"""))
 
   /** q37 — IVF cell-probe ANN (deterministic coarse quantizer, so the
     * full index build + probe is SQL-oracle-checkable, unlike q36's
@@ -687,12 +706,7 @@ object ExtensionQueries {
                  / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS cos
         FROM probes JOIN assign USING (cell)
         WHERE q_id <> n_id),
-      ranked AS (
-        SELECT q_id, n_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn
-        FROM scored)
-      SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, cos
-      FROM ranked WHERE rn <= 5 ORDER BY q_id, rank"""))
+      $cosTop5Sql"""))
 
   /** q38 — vector norm statistics per label (order-independent
     * min/max over per-row double norms — exercises the native dot
@@ -1100,14 +1114,7 @@ object ExtensionQueries {
       alld AS (SELECT doc_id, text FROM prior
                UNION ALL SELECT doc_id, text FROM inc),
       toks AS (SELECT doc_id, $toksSql AS t FROM alld),
-      shing AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM toks),
-      hashed AS (SELECT doc_id,
-        list_transform(sh, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
-                                  % ${Dedup.MinhashP}) AS hs
-        FROM shing),
-      sig AS (SELECT doc_id,
-               $minhashSigSql
-              FROM hashed),
+      $minhashSigsSql,
       bands AS MATERIALIZED (
         $minhashBandsSql),
       sets AS MATERIALIZED (SELECT doc_id, sh FROM shing),

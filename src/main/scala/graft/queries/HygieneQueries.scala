@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.queries.QueryDef.{spreadTable, table}
@@ -106,6 +105,25 @@ object HygieneQueries {
                AS cos_white
       FROM terms ORDER BY id_a"""))
 
+  /** q171's oracle raking steps, the SQL twins of its `langStep` and
+    * `srcStep`: CTE `name` rescales `from`'s weights `w` so each
+    * language (resp. source) sums to its target, rounded to 6 dp. */
+  private def ipfLangSql(name: String, from: String): String = s"""$name AS (
+        SELECT source, lang, n,
+               CAST(ROUND(CAST(w AS DOUBLE) *
+                 (CAST(t AS DOUBLE) / nl) /
+                 CAST(SUM(w) OVER (PARTITION BY lang) AS DOUBLE), 6)
+                 AS DECIMAL(28, 6)) AS w
+        FROM $from, tot)"""
+
+  private def ipfSrcSql(name: String, from: String): String = s"""$name AS (
+        SELECT source, lang, n,
+               CAST(ROUND(CAST(w AS DOUBLE) *
+                 CAST(st AS DOUBLE) /
+                 CAST(SUM(w) OVER (PARTITION BY source) AS DOUBLE), 6)
+                 AS DECIMAL(28, 6)) AS w
+        FROM $from JOIN srctot USING (source))"""
+
   /** q171 — iterative proportional fitting (raking) of sampling
     * weights: start from the source×lang document-count table and
     * alternate two marginal-matching steps (lang step toward a
@@ -160,7 +178,7 @@ object HygieneQueries {
           col("w4").cast(DoubleType).as("weight"))
         .orderBy(col("source"), col("lang"))
     },
-    Some("""
+    Some(s"""
       WITH cells AS (
         SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY 1, 2),
@@ -168,34 +186,10 @@ object HygieneQueries {
               FROM cells),
       srctot AS (SELECT source, SUM(n) AS st FROM cells GROUP BY 1),
       w0 AS (SELECT source, lang, n, CAST(n AS DECIMAL(28, 6)) AS w FROM cells),
-      l1 AS (
-        SELECT source, lang, n,
-               CAST(ROUND(CAST(w AS DOUBLE) *
-                 (CAST(t AS DOUBLE) / nl) /
-                 CAST(SUM(w) OVER (PARTITION BY lang) AS DOUBLE), 6)
-                 AS DECIMAL(28, 6)) AS w
-        FROM w0, tot),
-      s1 AS (
-        SELECT source, lang, n,
-               CAST(ROUND(CAST(w AS DOUBLE) *
-                 CAST(st AS DOUBLE) /
-                 CAST(SUM(w) OVER (PARTITION BY source) AS DOUBLE), 6)
-                 AS DECIMAL(28, 6)) AS w
-        FROM l1 JOIN srctot USING (source)),
-      l2 AS (
-        SELECT source, lang, n,
-               CAST(ROUND(CAST(w AS DOUBLE) *
-                 (CAST(t AS DOUBLE) / nl) /
-                 CAST(SUM(w) OVER (PARTITION BY lang) AS DOUBLE), 6)
-                 AS DECIMAL(28, 6)) AS w
-        FROM s1, tot),
-      s2 AS (
-        SELECT source, lang, n,
-               CAST(ROUND(CAST(w AS DOUBLE) *
-                 CAST(st AS DOUBLE) /
-                 CAST(SUM(w) OVER (PARTITION BY source) AS DOUBLE), 6)
-                 AS DECIMAL(28, 6)) AS w
-        FROM l2 JOIN srctot USING (source))
+      ${ipfLangSql("l1", "w0")},
+      ${ipfSrcSql("s1", "l1")},
+      ${ipfLangSql("l2", "s1")},
+      ${ipfSrcSql("s2", "l2")}
       SELECT source, lang, n, CAST(w AS DOUBLE) AS weight
       FROM s2 ORDER BY source, lang"""))
 
@@ -384,6 +378,32 @@ object HygieneQueries {
       SELECT i, j, corr FROM c
       ORDER BY ABS(corr) DESC, i, j LIMIT 10"""))
 
+  /** Distinct `(user_id, day)` activity of the events table. */
+  private[queries] def userDays(s: org.apache.spark.sql.SparkSession, dir: String)
+  : org.apache.spark.sql.DataFrame =
+    graft.queries.QueryDef.eventsTable(s, dir)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+
+  /** q176's window explosion: each user-day of `ud` becomes its ≤ 7
+    * memberships `(user_id, endCol)` in the 7-day windows ending on
+    * or after it, up to the last active day. */
+  private[queries] def weekWindows(ud: org.apache.spark.sql.DataFrame, endCol: String)
+  : org.apache.spark.sql.DataFrame = {
+    val maxDay = ud.agg(max(col("day")).as("max_day"))
+    ud.select(col("user_id"),
+        explode(sequence(lit(0), lit(6))).as("off"), col("day"))
+      .select(col("user_id"), date_add(col("day"), col("off")).as(endCol))
+      .crossJoin(broadcast(maxDay))
+      .filter(col(endCol) <= col("max_day"))
+  }
+
+  /** DuckDB twin of [[userDays]] with its last day: `ud(user_id, day)`
+    * and `mx(max_day)`. */
+  private[queries] val userDaysSql = """ud AS (
+        SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
+        FROM events),
+      mx AS (SELECT MAX(day) AS max_day FROM ud)"""
+
   /** q176 — sliding-window distinct actives via window-explosion:
     * 7-day distinct users per end-day, computed by exploding each
     * user-day into the ≤7 windows it covers and counting distinct
@@ -396,24 +416,13 @@ object HygieneQueries {
   private val q176 = QueryDef(
     "q176_sliding_distinct",
     (s, dir) => {
-      val QueryDefDays = graft.queries.QueryDef.eventsTable(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val maxDay = QueryDefDays.agg(max(col("day")).as("max_day"))
-      QueryDefDays
-        .select(col("user_id"),
-          explode(sequence(lit(0), lit(6))).as("off"), col("day"))
-        .select(col("user_id"), date_add(col("day"), col("off")).as("w_end"))
-        .crossJoin(broadcast(maxDay))
-        .filter(col("w_end") <= col("max_day"))
+      weekWindows(userDays(s, dir), "w_end")
         .groupBy(col("w_end"))
         .agg(countDistinct(col("user_id")).as("n_active"))
         .orderBy(col("w_end"))
     },
-    Some("""
-      WITH ud AS (
-        SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-        FROM events),
-      mx AS (SELECT MAX(day) AS max_day FROM ud),
+    Some(s"""
+      WITH $userDaysSql,
       mem AS (
         SELECT user_id, day + CAST(off AS INT) AS w_end
         FROM ud, unnest([0, 1, 2, 3, 4, 5, 6]) AS u(off)),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.queries.QueryDef.{eventsTable, spreadTable, table}
 import graft.queries.ExtensionQueries.toksSql
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-3 fifth widening: classic warehouse consumption shapes the
   * serving tier hadn't exercised yet — a TPC-H-Q9-style multi-way
@@ -641,6 +641,27 @@ object LakehouseQueries {
         ORDER BY n_chars DESC, doc_id LIMIT 3) l
       ORDER BY s.source, l.n_chars DESC, l.doc_id"""))
 
+  /** The brute-force Jaccard ≥ 0.6 oracle of q129 and q224 over the
+    * docs relation `rel`: every shingle-sharing pair, counted and
+    * filtered, ordered by (id_a, id_b). */
+  private def allPairsJaccardSql(rel: String): String = s"""
+      toks AS (SELECT doc_id, $toksSql AS t FROM $rel),
+      sh AS (SELECT doc_id AS id,
+                    list_distinct(${ExtensionQueries.shinglesSql}) AS shs
+             FROM toks),
+      e AS (SELECT id, len(shs) AS n, unnest(shs) AS s FROM sh),
+      pairs AS (
+        SELECT a.id AS id_a, b.id AS id_b, ANY_VALUE(a.n) AS n_a,
+               ANY_VALUE(b.n) AS n_b, COUNT(*) AS n_inter
+        FROM e a JOIN e b ON a.s = b.s AND a.id < b.id
+        GROUP BY a.id, b.id)
+      SELECT id_a, id_b, CAST(n_inter AS BIGINT) AS n_inter,
+             CAST(n_a + n_b - n_inter AS BIGINT) AS n_union,
+             CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
+      FROM pairs
+      WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.6
+      ORDER BY id_a, id_b"""
+
   /** q129 — prefix-filtered set-similarity join
     * ([[graft.operators.Dedup.prefixFilterJoin]], the PPJoin-family
     * trick): exact Jaccard ≥ 0.6 pairs with NO blocking column — only
@@ -656,22 +677,7 @@ object LakehouseQueries {
       .orderBy(col("id_a"), col("id_b")),
     Some(s"""
       WITH ${ExtensionQueries.augmentedDocsSql},
-      toks AS (SELECT doc_id, $toksSql AS t FROM aug),
-      sh AS (SELECT doc_id AS id,
-                    list_distinct(${ExtensionQueries.shinglesSql}) AS shs
-             FROM toks),
-      e AS (SELECT id, len(shs) AS n, unnest(shs) AS s FROM sh),
-      pairs AS (
-        SELECT a.id AS id_a, b.id AS id_b, ANY_VALUE(a.n) AS n_a,
-               ANY_VALUE(b.n) AS n_b, COUNT(*) AS n_inter
-        FROM e a JOIN e b ON a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id)
-      SELECT id_a, id_b, CAST(n_inter AS BIGINT) AS n_inter,
-             CAST(n_a + n_b - n_inter AS BIGINT) AS n_union,
-             CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
-      FROM pairs
-      WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.6
-      ORDER BY id_a, id_b"""))
+      ${allPairsJaccardSql("aug")}"""))
 
   /** q224 — PPJoin lossless-proof on a deterministic stratum: the
     * SAME exact prefix-filtered join as q129, restricted to an
@@ -715,22 +721,7 @@ object LakehouseQueries {
         WHERE CAST('0x' || substr(md5(CAST(
                      doc_id % ${ExtensionQueries.mutantOffsetSql("documents", "doc_id")}
                    AS VARCHAR)), 1, 15) AS BIGINT) % 10 = 0),
-      toks AS (SELECT doc_id, $toksSql AS t FROM strat),
-      sh AS (SELECT doc_id AS id,
-                    list_distinct(${ExtensionQueries.shinglesSql}) AS shs
-             FROM toks),
-      e AS (SELECT id, len(shs) AS n, unnest(shs) AS s FROM sh),
-      pairs AS (
-        SELECT a.id AS id_a, b.id AS id_b, ANY_VALUE(a.n) AS n_a,
-               ANY_VALUE(b.n) AS n_b, COUNT(*) AS n_inter
-        FROM e a JOIN e b ON a.s = b.s AND a.id < b.id
-        GROUP BY a.id, b.id)
-      SELECT id_a, id_b, CAST(n_inter AS BIGINT) AS n_inter,
-             CAST(n_a + n_b - n_inter AS BIGINT) AS n_union,
-             CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
-      FROM pairs
-      WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.6
-      ORDER BY id_a, id_b"""))
+      ${allPairsJaccardSql("strat")}"""))
 
   /** q130 — duplicate-span detection (the exact-substring dedup
     * signal of "Deduplicating Training Data Makes Language Models
@@ -797,32 +788,8 @@ object LakehouseQueries {
   private val q131 = QueryDef(
     "q131_triangle_count",
     (s, dir) => {
-      import graft.functions.{TextFunctions, TextExprs}
-      val bi = table(s, dir, "documents")
-        .select(TextFunctions.tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(explode(TextExprs.word_shingles(col("t"), 2)).as("bigram"))
-        .select(substring_index(col("bigram"), " ", 1).as("x"),
-          substring_index(col("bigram"), " ", -1).as("y"))
-        .filter(col("x") =!= col("y"))
-      // canonical undirected edge set
-      val edges = bi.select(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b"))
-        .distinct()
-      val deg = edges.select(col("a").as("v"))
-        .unionAll(edges.select(col("b")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      // orient: (deg, name)-smaller endpoint points at the larger
-      val withDeg = edges
-        .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      val oriented = graft.operators.Checkpoints.truncate(withDeg.select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("dst")))
+      val (edges, deg) = OpsQueries.tokenGraph(table(s, dir, "documents"))
+      val oriented = OpsQueries.orientByDegree(edges, deg)
       val wedges = oriented.as("e1").join(oriented.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
         .select(col("e1.dst").as("u"), col("e2.dst").as("w"))
@@ -839,14 +806,7 @@ object LakehouseQueries {
     Some(s"""
       WITH toks AS (
         SELECT $toksSql AS t FROM documents WHERE len($toksSql) >= 2),
-      bi AS (
-        SELECT unnest(list_transform(range(1, len(t)),
-                 i -> t[i] || ' ' || t[i+1])) AS bigram
-        FROM toks),
-      xy AS (
-        SELECT string_split(bigram, ' ')[1] AS x,
-               string_split(bigram, ' ')[2] AS y
-        FROM bi WHERE string_split(bigram, ' ')[1] <> string_split(bigram, ' ')[2]),
+      ${OpsQueries.bigramPairsSql()},
       edges AS (
         SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b FROM xy),
       deg AS (
@@ -1028,6 +988,28 @@ object LakehouseQueries {
       LEFT JOIN stats st USING (doc_id) LEFT JOIN reb USING (doc_id)
       ORDER BY a.doc_id"""))
 
+  /** Per-document token positions `(doc_id, pos, w)` and adjacent
+    * bigrams `(doc_id, a, b)` of `docs` — the training and scoring
+    * input of the q139 and q150 bigram models. */
+  private def docBigrams(docs: org.apache.spark.sql.DataFrame)
+  : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val toks = docs.select(col("doc_id"),
+      posexplode(graft.functions.TextFunctions.tokens(col("text"))).as(Seq("pos", "w")))
+    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val big = toks.withColumn("nxt", lead(col("w"), 1).over(byDoc))
+      .filter(col("nxt").isNotNull)
+      .select(col("doc_id"), col("w").as("a"), col("nxt").as("b"))
+    (toks, big)
+  }
+
+  /** DuckDB twin of [[docBigrams]]: `toks(doc_id, t)` and
+    * `big(doc_id, a, b)`. */
+  private val docBigramsSql = s"""toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      big AS (
+        SELECT doc_id, t[u.i] AS a, t[u.i + 1] AS b
+        FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)
+        WHERE len(t) >= 2)"""
+
   /** q139 — bigram language-model document scoring (perplexity-style
     * quality filtering): train add-one-smoothed conditional bigram
     * probabilities on the corpus itself, then score every document by
@@ -1041,14 +1023,8 @@ object LakehouseQueries {
   private val q139 = QueryDef(
     "q139_bigram_lm_score",
     (s, dir) => {
-      import graft.functions.TextFunctions
       val docs = table(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "w")))
-      val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val big = toks.withColumn("nxt", lead(col("w"), 1).over(byDoc))
-        .filter(col("nxt").isNotNull)
-        .select(col("doc_id"), col("w").as("a"), col("nxt").as("b"))
+      val (toks, big) = docBigrams(docs)
       val bc = big.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
       val uc = big.groupBy(col("a")).agg(count(lit(1)).as("ca"))
       val voc = toks.agg(countDistinct(col("w")).as("v"))
@@ -1069,11 +1045,7 @@ object LakehouseQueries {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-      big AS (
-        SELECT doc_id, t[u.i] AS a, t[u.i + 1] AS b
-        FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)
-        WHERE len(t) >= 2),
+      WITH $docBigramsSql,
       bc AS (SELECT a, b, COUNT(*) AS cab FROM big GROUP BY 1, 2),
       uc AS (SELECT a, COUNT(*) AS ca FROM big GROUP BY 1),
       voc AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v
@@ -1517,16 +1489,7 @@ object LakehouseQueries {
   private val q148 = QueryDef(
     "q148_label_propagation",
     (s, dir) => {
-      import graft.functions.{TextFunctions, TextExprs}
-      val bi = table(s, dir, "documents")
-        .select(TextFunctions.tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(explode(TextExprs.word_shingles(col("t"), 2)).as("bigram"))
-        .select(substring_index(col("bigram"), " ", 1).as("x"),
-          substring_index(col("bigram"), " ", -1).as("y"))
-        .filter(col("x") =!= col("y"))
-      val edges = bi.select(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b")).distinct()
+      val (edges, _) = OpsQueries.tokenGraph(table(s, dir, "documents"))
       val lp = graft.operators.LinkAnalysis.labelPropagation(edges, rounds = 4)
       val sizes = lp.groupBy(col("community"))
         .agg(count(lit(1)).as("community_size"))
@@ -1537,15 +1500,7 @@ object LakehouseQueries {
     Some(s"""
       WITH toks AS (
         SELECT $toksSql AS t FROM documents WHERE len($toksSql) >= 2),
-      lpbi AS (
-        SELECT unnest(list_transform(range(1, len(t)),
-                 i -> t[i] || ' ' || t[i+1])) AS bigram
-        FROM toks),
-      lpxy AS (
-        SELECT string_split(bigram, ' ')[1] AS x,
-               string_split(bigram, ' ')[2] AS y
-        FROM lpbi
-        WHERE string_split(bigram, ' ')[1] <> string_split(bigram, ' ')[2]),
+      ${OpsQueries.bigramPairsSql("lp")},
       lpedges AS MATERIALIZED (
         SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b FROM lpxy),
       lpadj AS MATERIALIZED (
@@ -1655,14 +1610,8 @@ object LakehouseQueries {
   private val q150 = QueryDef(
     "q150_stupid_backoff",
     (s, dir) => {
-      import graft.functions.TextFunctions
       val docs = table(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "w")))
-      val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val big = toks.withColumn("nxt", lead(col("w"), 1).over(byDoc))
-        .filter(col("nxt").isNotNull)
-        .select(col("doc_id"), col("w").as("a"), col("nxt").as("b"))
+      val (toks, big) = docBigrams(docs)
       val trainBig = big.filter(col("doc_id") % 2 === 0)
       val trainTok = toks.filter(col("doc_id") % 2 === 0)
       val bc = trainBig.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
@@ -1696,11 +1645,7 @@ object LakehouseQueries {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-      big AS (
-        SELECT doc_id, t[u.i] AS a, t[u.i + 1] AS b
-        FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)
-        WHERE len(t) >= 2),
+      WITH $docBigramsSql,
       bc AS (SELECT a, b, COUNT(*) AS cab FROM big
              WHERE doc_id % 2 = 0 GROUP BY 1, 2),
       uc AS (SELECT a, COUNT(*) AS ca FROM big

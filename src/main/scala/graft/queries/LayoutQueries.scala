@@ -1,12 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.functions.NfcNormalizeExpr
 import graft.operators.LinkAnalysis
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 
 /** Round-4 continuation: storage-layout and corpus-hygiene tier —
   * a Z-order (Morton curve) clustering audit that measures zone-map

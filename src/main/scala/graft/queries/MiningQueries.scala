@@ -2,12 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.operators.{Clustering, Pruning, Sketches}
 import graft.queries.ExtensionQueries.{augmentedEmbs, augmentedEmbsSql, cosSql, shinglesSql, toksSql}
 import graft.queries.QueryDef.{spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-3 second widening: distributed clustering (k-means Lloyd
   * step), SemDeDup semantic dedup, sequence packing for pretraining

@@ -550,9 +550,9 @@ object OpsQueries {
 
   /** Token co-occurrence graph (q131's construction): canonical
     * undirected edge set from adjacent-token bigrams, plus degrees.
-    * Shared by q209 (clustering coefficient) and q211 (link
-    * prediction). */
-  private def tokenGraph(docs: org.apache.spark.sql.DataFrame)
+    * Shared by q131 (triangle count), q148 (label propagation), q209
+    * (clustering coefficient) and q211 (link prediction). */
+  private[queries] def tokenGraph(docs: org.apache.spark.sql.DataFrame)
   : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import graft.functions.TextExprs
     val bi = docs
@@ -570,6 +570,38 @@ object OpsQueries {
     (edges, deg)
   }
 
+  /** Orient each canonical edge of [[tokenGraph]] from its
+    * (degree, name)-smaller endpoint to the larger (the
+    * node-iterator++ order), checkpointed: `(src, dst)`. */
+  private[queries] def orientByDegree(edges: org.apache.spark.sql.DataFrame,
+                                      deg: org.apache.spark.sql.DataFrame)
+  : org.apache.spark.sql.DataFrame = {
+    val withDeg = edges
+      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
+    graft.operators.Checkpoints.truncate(withDeg.select(
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("a"))
+        .otherwise(col("b")).as("src"),
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("b"))
+        .otherwise(col("a")).as("dst")))
+  }
+
+  /** The adjacent-token bigram CTEs of [[tokenGraph]]'s DuckDB twins,
+    * over a `toks(t)` CTE: `<p>bi(bigram)` and `<p>xy(x, y)` with
+    * x ≠ y, where `p` prefixes both CTE names. */
+  private[queries] def bigramPairsSql(p: String = ""): String = s"""
+      ${p}bi AS (
+        SELECT unnest(list_transform(range(1, len(t)),
+                 i -> t[i] || ' ' || t[i+1])) AS bigram
+        FROM toks),
+      ${p}xy AS (
+        SELECT string_split(bigram, ' ')[1] AS x,
+               string_split(bigram, ' ')[2] AS y
+        FROM ${p}bi
+        WHERE string_split(bigram, ' ')[1] <> string_split(bigram, ' ')[2])"""
+
   /** DuckDB twin of [[tokenGraph]]: MATERIALIZED CTEs `ei(a, b)` +
     * `deg(v, d)` over DENSE INT node ids, `ids(node, nid)` for the
     * final decode. Round 12: without MATERIALIZED, DuckDB re-inlined
@@ -583,15 +615,7 @@ object OpsQueries {
   private def graphCtesFrom(docsRel: String) = s"""
       toks AS MATERIALIZED (
         SELECT $toksSql AS t FROM $docsRel WHERE len($toksSql) >= 2),
-      bi AS (
-        SELECT unnest(list_transform(range(1, len(t)),
-                 i -> t[i] || ' ' || t[i+1])) AS bigram
-        FROM toks),
-      xy AS (
-        SELECT string_split(bigram, ' ')[1] AS x,
-               string_split(bigram, ' ')[2] AS y
-        FROM bi
-        WHERE string_split(bigram, ' ')[1] <> string_split(bigram, ' ')[2]),
+      ${bigramPairsSql()},
       edges0 AS MATERIALIZED (
         SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b FROM xy),
       ids AS MATERIALIZED (
@@ -624,16 +648,7 @@ object OpsQueries {
   private def clusteringCoefficient(docs: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame = {
       val (edges, deg) = tokenGraph(docs)
-      val withDeg = edges
-        .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      val oriented = graft.operators.Checkpoints.truncate(withDeg.select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("dst")))
+      val oriented = orientByDegree(edges, deg)
       val tri = oriented.as("e1").join(oriented.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
         .select(col("e1.src").as("v0"), col("e1.dst").as("u"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 
 /** Round-4 continuation: pipeline-planning analytics — exact integer
   * waterfilling of a token budget across sources (the data-mixing

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -8,7 +7,7 @@ import graft.functions.TextFunctions
 import graft.operators.Checkpoints
 import graft.queries.ExtensionQueries.{shinglesSql, toksSql}
 import graft.queries.QueryDef.{spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-4 continuation: data-profiling / explainability tier —
   * functional-dependency discovery (the schema-inference primitive
@@ -345,7 +344,7 @@ object ProfilingQueries {
   private val q194 = QueryDef(
     "q194_seasonal_index",
     (s, dir) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
+      import org.apache.spark.sql.types.DoubleType
       val e = graft.queries.QueryDef.eventsTable(s, dir)
         .select(col("event_type"),
           dayofweek(col("ts")).as("dow0"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Quantization, Similarity}
 import graft.queries.ExtensionQueries.cosSql
@@ -19,31 +20,12 @@ import graft.queries.QueryDef.{spreadTable, table}
   * staying bit-deterministic. */
 object QuantQueries {
 
-  /** q135 — int8 scalar-quantized ANN + recall audit
-    * ([[graft.operators.Quantization.scalarQuantize]]): train
-    * per-dimension max-|x| scales, quantize the corpus to int8,
-    * brute-force top-5 by integer-dot cosine, and flag each hit
-    * against the exact float top-5. Integer dots make the ranking
-    * exactly reproducible (no float accumulation anywhere before the
-    * final division); the oracle replays scales → codes → ranking →
-    * recall flags. */
-  private val q135 = QueryDef(
-    "q135_int8_quant_ann",
-    (s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val quantized = Quantization.scalarQuantize(e, Quantization.dimScales(e))
-      val qIds = QueryDef.annWorkload(e).select(col("vec_id"))
-      val top = Quantization.quantizedTopK(quantized, qIds, k = 5)
-      val exact = Similarity
-        .bruteForceTopK(e, QueryDef.annWorkload(e), k = 5)
-        .select(col("q_id"), col("n_id"), lit(true).as("hit"))
-      top.join(exact, Seq("q_id", "n_id"), "left")
-        .select(col("q_id"), col("rank"), col("n_id"), col("qcos"),
-          coalesce(col("hit"), lit(false)).as("hit"))
-        .orderBy(col("q_id"), col("rank"))
-    },
-    Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  /** The int8 quantized-cosine oracle chain (q135, q173): per-dimension
+    * max-|x| scales (`sc`, `sca`), int8 codes (`qz`, `qn`), and every
+    * workload query's integer-dot cosine to every other vector
+    * (`scored(q_id, n_id, qcos)`), over `e(vec_id, v)`. */
+  private[queries] val int8CosSql = s"""
+      e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       sc AS (
         SELECT pos, MAX(ABS(x)) AS s FROM (
           SELECT CAST(generate_subscripts(v, 1) AS BIGINT) AS pos,
@@ -72,24 +54,64 @@ object QuantQueries {
                CASE WHEN q_n * n_n = 0 THEN 0.0
                     ELSE CAST(dt AS DOUBLE) / sqrt(CAST(q_n * n_n AS DOUBLE))
                END AS qcos
-        FROM sc2),
+        FROM sc2)"""
+
+  /** The exact float top-5 of every workload query, as CTEs over
+    * `e(vec_id, v)`: `eq`, their cosines `esc`, and `etop`, which
+    * projects `etopHead` (up to and including its `FROM (`) over the
+    * neighbors ranked `rn` by (cos desc, n_id), rn ≤ 5. */
+  private[queries] def exactTop5Sql(etopHead: String): String = s"""
+      eq AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 200 = 0 AND vec_id < 2000),
+      esc AS (SELECT a.q_id, b.vec_id AS n_id, $cosSql AS cos
+              FROM eq a JOIN e b ON a.q_id <> b.vec_id),
+      etop AS (${etopHead}SELECT q_id, n_id,
+                        ROW_NUMBER() OVER (PARTITION BY q_id
+                                           ORDER BY cos DESC, n_id) AS rn
+                 FROM esc) WHERE rn <= 5)"""
+
+  /** SQL twin of [[withHitFlags]] over a `ranked(q_id, n_id, score, rn)`
+    * CTE: its top 5 with `hit` set where the exact top-5 holds the pair. */
+  private def hitFlagsSql(score: String): String = s"""
+      ${exactTop5Sql("SELECT q_id, n_id FROM (\n")}
+      SELECT r.q_id, CAST(rn AS BIGINT) AS rank, r.n_id, $score,
+             EXISTS (SELECT 1 FROM etop t
+                     WHERE t.q_id = r.q_id AND t.n_id = r.n_id) AS hit
+      FROM ranked r WHERE rn <= 5 ORDER BY q_id, rank"""
+
+  /** Recall audit of an approximate top-5 `top(q_id, rank, n_id, score)`:
+    * `hit` flags each pair the exact float top-5 of `e` also holds. */
+  private def withHitFlags(e: DataFrame, top: DataFrame, score: String): DataFrame = {
+    val exact = Similarity.bruteForceTopK(e, QueryDef.annWorkload(e), k = 5)
+      .select(col("q_id"), col("n_id"), lit(true).as("hit"))
+    top.join(exact, Seq("q_id", "n_id"), "left")
+      .select(col("q_id"), col("rank"), col("n_id"), col(score),
+        coalesce(col("hit"), lit(false)).as("hit"))
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** q135 — int8 scalar-quantized ANN + recall audit
+    * ([[graft.operators.Quantization.scalarQuantize]]): train
+    * per-dimension max-|x| scales, quantize the corpus to int8,
+    * brute-force top-5 by integer-dot cosine, and flag each hit
+    * against the exact float top-5. Integer dots make the ranking
+    * exactly reproducible (no float accumulation anywhere before the
+    * final division); the oracle replays scales → codes → ranking →
+    * recall flags. */
+  private val q135 = QueryDef(
+    "q135_int8_quant_ann",
+    (s, dir) => {
+      val e = table(s, dir, "embeddings")
+      val quantized = Quantization.scalarQuantize(e, Quantization.dimScales(e))
+      val qIds = QueryDef.annWorkload(e).select(col("vec_id"))
+      withHitFlags(e, Quantization.quantizedTopK(quantized, qIds, k = 5), "qcos")
+    },
+    Some(s"""
+      WITH $int8CosSql,
       ranked AS (
         SELECT q_id, n_id, qcos,
                ROW_NUMBER() OVER (PARTITION BY q_id
                                   ORDER BY qcos DESC, n_id) AS rn
-        FROM scored),
-      eq AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 200 = 0 AND vec_id < 2000),
-      esc AS (SELECT a.q_id, b.vec_id AS n_id, $cosSql AS cos
-              FROM eq a JOIN e b ON a.q_id <> b.vec_id),
-      etop AS (SELECT q_id, n_id FROM (
-                 SELECT q_id, n_id,
-                        ROW_NUMBER() OVER (PARTITION BY q_id
-                                           ORDER BY cos DESC, n_id) AS rn
-                 FROM esc) WHERE rn <= 5)
-      SELECT r.q_id, CAST(rn AS BIGINT) AS rank, r.n_id, qcos,
-             EXISTS (SELECT 1 FROM etop t
-                     WHERE t.q_id = r.q_id AND t.n_id = r.n_id) AS hit
-      FROM ranked r WHERE rn <= 5 ORDER BY q_id, rank"""))
+        FROM scored),${hitFlagsSql("qcos")}"""))
 
   /** q136 — product-quantization ADC ANN + recall audit
     * ([[graft.operators.Quantization.pqTrain]]/[[graft.operators
@@ -107,15 +129,8 @@ object QuantQueries {
       val cb = Quantization.pqTrain(e, nSub = 4, subDim = 16,
         every = 50, rounds = 1)
       val codes = Quantization.pqEncode(e, cb, nSub = 4, subDim = 16)
-      val qs = QueryDef.annWorkload(e)
-      val top = Quantization.pqSearch(qs, codes, cb, nSub = 4, subDim = 16,
-        k = 5)
-      val exact = Similarity.bruteForceTopK(e, qs, k = 5)
-        .select(col("q_id"), col("n_id"), lit(true).as("hit"))
-      top.join(exact, Seq("q_id", "n_id"), "left")
-        .select(col("q_id"), col("rank"), col("n_id"), col("adc"),
-          coalesce(col("hit"), lit(false)).as("hit"))
-        .orderBy(col("q_id"), col("rank"))
+      withHitFlags(e, Quantization.pqSearch(QueryDef.annWorkload(e), codes, cb,
+        nSub = 4, subDim = 16, k = 5), "adc")
     },
     Some(s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -168,19 +183,7 @@ object QuantQueries {
         SELECT q_id, n_id, adc,
                ROW_NUMBER() OVER (PARTITION BY q_id
                                   ORDER BY adc, n_id) AS rn
-        FROM adc),
-      eq AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 200 = 0 AND vec_id < 2000),
-      esc AS (SELECT a.q_id, b.vec_id AS n_id, $cosSql AS cos
-              FROM eq a JOIN e b ON a.q_id <> b.vec_id),
-      etop AS (SELECT q_id, n_id FROM (
-                 SELECT q_id, n_id,
-                        ROW_NUMBER() OVER (PARTITION BY q_id
-                                           ORDER BY cos DESC, n_id) AS rn
-                 FROM esc) WHERE rn <= 5)
-      SELECT r.q_id, CAST(rn AS BIGINT) AS rank, r.n_id, adc,
-             EXISTS (SELECT 1 FROM etop t
-                     WHERE t.q_id = r.q_id AND t.n_id = r.n_id) AS hit
-      FROM ranked r WHERE rn <= 5 ORDER BY q_id, rank"""))
+        FROM adc),${hitFlagsSql("adc")}"""))
 
   /** q138 — binary (1-bit) Hamming ANN + recall audit
     * ([[graft.operators.Quantization.binarize]]): sign bits packed
@@ -196,14 +199,7 @@ object QuantQueries {
       val e = table(s, dir, "embeddings")
       val bits = Quantization.binarize(e)
       val qIds = QueryDef.annWorkload(e).select(col("vec_id"))
-      val top = Quantization.hammingTopK(bits, qIds, k = 5)
-      val exact = Similarity
-        .bruteForceTopK(e, QueryDef.annWorkload(e), k = 5)
-        .select(col("q_id"), col("n_id"), lit(true).as("hit"))
-      top.join(exact, Seq("q_id", "n_id"), "left")
-        .select(col("q_id"), col("rank"), col("n_id"), col("hamming"),
-          coalesce(col("hit"), lit(false)).as("hit"))
-        .orderBy(col("q_id"), col("rank"))
+      withHitFlags(e, Quantization.hammingTopK(bits, qIds, k = 5), "hamming")
     },
     Some(s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -227,19 +223,7 @@ object QuantQueries {
         SELECT q_id, n_id, hamming,
                ROW_NUMBER() OVER (PARTITION BY q_id
                                   ORDER BY hamming, n_id) AS rn
-        FROM scored),
-      eq AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 200 = 0 AND vec_id < 2000),
-      esc AS (SELECT a.q_id, b.vec_id AS n_id, $cosSql AS cos
-              FROM eq a JOIN e b ON a.q_id <> b.vec_id),
-      etop AS (SELECT q_id, n_id FROM (
-                 SELECT q_id, n_id,
-                        ROW_NUMBER() OVER (PARTITION BY q_id
-                                           ORDER BY cos DESC, n_id) AS rn
-                 FROM esc) WHERE rn <= 5)
-      SELECT r.q_id, CAST(rn AS BIGINT) AS rank, r.n_id, hamming,
-             EXISTS (SELECT 1 FROM etop t
-                     WHERE t.q_id = r.q_id AND t.n_id = r.n_id) AS hit
-      FROM ranked r WHERE rn <= 5 ORDER BY q_id, rank"""))
+        FROM scored),${hitFlagsSql("hamming")}"""))
 
   val all: Seq[QueryDef] = Seq(q135, q136, q138)
 }

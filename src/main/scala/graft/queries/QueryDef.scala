@@ -45,21 +45,27 @@ object QueryDef {
   /** Estimated physical-scan split count for a parquet path — the
     * same bytes/maxPartitionBytes arithmetic Spark's file-source
     * packing uses (openCost ignored: an under-estimate only ever
-    * keeps [[spreadScan]] on, which is the safe direction). Memoized
-    * per (path, maxPartitionBytes): the bench re-reads the same
-    * handful of paths hundreds of times. */
+    * keeps [[spreadTable]] on, which is the safe direction). The files
+    * are listed through the path's Hadoop `FileSystem`, so a URI path
+    * (`file:`, `hdfs:`, `s3a:`) estimates like the plain local path
+    * it names. Memoized per (path, maxPartitionBytes): the bench
+    * re-reads the same handful of paths hundreds of times. */
   private val splitMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
   private def scanSplits(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
     splitMemo.computeIfAbsent((path, maxPB), { _ =>
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def walk(f: FileStatus): Seq[FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk)
         else Seq(f)
-      val files = walk(new java.io.File(path))
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      files.map(f => math.max(1L, (f.length + maxPB - 1) / maxPB)).sum
+      val files = walk(fs.getFileStatus(root)).filter { f =>
+        val name = f.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }
+      files.map(f => math.max(1L, (f.getLen + maxPB - 1) / maxPB)).sum
     })
   }
 

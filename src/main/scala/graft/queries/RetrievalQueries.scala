@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.{cosSql, toksSql}
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.queries.QueryDef.{eventsTable, table}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-4 continuation: the retrieval-fusion / model-scoring tier —
   * reciprocal-rank fusion of lexical (BM25) and semantic (embedding
@@ -48,24 +48,7 @@ object RetrievalQueries {
   private val q153 = QueryDef(
     "q153_rrf_hybrid",
     (s, dir) => {
-      val termsArr = array(hybridTerms.map(lit): _*)
-      val stats = table(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-        .select(col("doc_id"), size(col("t")).cast(LongType).as("dl"), col("t"))
-      val corpus = stats.agg(count(lit(1)).as("n"), sum(col("dl")).as("tt"))
-      val tf = stats
-        .select(col("doc_id"), col("dl"),
-          explode(filter(col("t"), x => array_contains(termsArr, x))).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val lexScore = tf.join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(corpus))
-        .withColumn("si",
-          expr("(1000000L * 44L * tf * tt) div (20L * tt * tf + 6L * tt + 18L * n * dl)"))
-        .withColumn("wi",
-          expr("(1000000L * (2L * n - 2L * df + 1L)) div (2L * df + 1L)"))
-        .withColumn("term_score", expr("(si * wi) div 1000000L"))
+      val lexScore = ServingQueries.bm25TermScores(table(s, dir, "documents"), hybridTerms)
         .groupBy(col("doc_id")).agg(sum(col("term_score")).as("score"))
       // the two rank branches are independent — build them
       // concurrently (guide §2.6, the q156/q219 pattern) so the
@@ -104,21 +87,7 @@ object RetrievalQueries {
         .limit(15)
     },
     Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-      stats AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, t FROM toks),
-      corpus AS (SELECT COUNT(*) AS n, SUM(dl) AS tt FROM stats),
-      tf AS (
-        SELECT doc_id, dl, term, COUNT(*) AS tf
-        FROM (SELECT doc_id, dl,
-                     unnest(list_filter(t, x -> list_contains(['spark','vector','stream'], x))) AS term
-              FROM stats)
-        GROUP BY 1, 2, 3),
-      dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-      sc AS (
-        SELECT f.doc_id,
-               (((1000000 * 44 * f.tf * c.tt) // (20 * c.tt * f.tf + 6 * c.tt + 18 * c.n * f.dl))
-                * ((1000000 * (2 * c.n - 2 * d.df + 1)) // (2 * d.df + 1))) // 1000000 AS term_score
-        FROM tf f JOIN dfreq d USING (term) CROSS JOIN corpus c),
+      WITH ${ServingQueries.bm25Sql(hybridTerms)},
       lexs AS (SELECT doc_id, SUM(term_score) AS score FROM sc GROUP BY 1),
       lex AS (SELECT doc_id,
                      CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rank

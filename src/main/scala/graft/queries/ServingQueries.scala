@@ -1,13 +1,14 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.operators.Clustering
 import graft.queries.ExtensionQueries.{cosSql, toksSql}
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.queries.QueryDef.{eventsTable, table}
+import graft.functions.DecimalExprs.dec2
 
 /** Round-3 fourth widening: the retrieval / serving tier — keyword
   * relevance search (integer-exact BM25), cumulative-distinct growth
@@ -23,6 +24,50 @@ import graft.functions.DecimalExprs.{dec2, cents2}
   * DECIMAL until one final double division of exact inputs.
   */
 object ServingQueries {
+
+  /** q101's BM25 (formulation below) per-(doc, term) scores over a
+    * documents frame for the given query `terms`: `(term, doc_id, dl,
+    * tf, df, n, tt, si, wi, term_score)`. Shared with q153's lexical
+    * ranking. */
+  private[queries] def bm25TermScores(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    val termsArr = array(terms.map(lit): _*)
+    val stats = docs
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
+      .select(col("doc_id"), size(col("t")).cast(LongType).as("dl"), col("t"))
+    val corpus = stats.agg(count(lit(1)).as("n"), sum(col("dl")).as("tt"))
+    val tf = stats
+      .select(col("doc_id"), col("dl"),
+        explode(filter(col("t"), x => array_contains(termsArr, x))).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    tf.join(broadcast(dfreq), "term")
+      .crossJoin(broadcast(corpus))
+      .withColumn("si",
+        expr("(1000000L * 44L * tf * tt) div (20L * tt * tf + 6L * tt + 18L * n * dl)"))
+      .withColumn("wi",
+        expr("(1000000L * (2L * n - 2L * df + 1L)) div (2L * df + 1L)"))
+      .withColumn("term_score", expr("(si * wi) div 1000000L"))
+  }
+
+  /** DuckDB twin of [[bm25TermScores]]: CTEs ending in
+    * `sc(doc_id, term_score)` over the documents table. */
+  private[queries] def bm25Sql(terms: Seq[String]): String = s"""
+      toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      stats AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, t FROM toks),
+      corpus AS (SELECT COUNT(*) AS n, SUM(dl) AS tt FROM stats),
+      tf AS (
+        SELECT doc_id, dl, term, COUNT(*) AS tf
+        FROM (SELECT doc_id, dl,
+                     unnest(list_filter(t, x -> list_contains(${terms.map(t => s"'$t'").mkString("[", ",", "]")}, x))) AS term
+              FROM stats)
+        GROUP BY 1, 2, 3),
+      dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+      sc AS (
+        SELECT f.doc_id,
+               (((1000000 * 44 * f.tf * c.tt) // (20 * c.tt * f.tf + 6 * c.tt + 18 * c.n * f.dl))
+                * ((1000000 * (2 * c.n - 2 * d.df + 1)) // (2 * d.df + 1))) // 1000000 AS term_score
+        FROM tf f JOIN dfreq d USING (term) CROSS JOIN corpus c)"""
 
   /** q101 — BM25 keyword retrieval, integer-exact. Classic BM25 with
     * k1 = 6/5 and b = 3/4 has, per matched term,
@@ -40,46 +85,13 @@ object ServingQueries {
 
   private val q101 = QueryDef(
     "q101_bm25_topk",
-    (s, dir) => {
-      val termsArr = array(bm25Terms.map(lit): _*)
-      val stats = table(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-        .select(col("doc_id"), size(col("t")).cast(LongType).as("dl"), col("t"))
-      val corpus = stats.agg(count(lit(1)).as("n"), sum(col("dl")).as("tt"))
-      val tf = stats
-        .select(col("doc_id"), col("dl"),
-          explode(filter(col("t"), x => array_contains(termsArr, x))).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      tf.join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(corpus))
-        .withColumn("si",
-          expr("(1000000L * 44L * tf * tt) div (20L * tt * tf + 6L * tt + 18L * n * dl)"))
-        .withColumn("wi",
-          expr("(1000000L * (2L * n - 2L * df + 1L)) div (2L * df + 1L)"))
-        .withColumn("term_score", expr("(si * wi) div 1000000L"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("term_score")).as("score"), count(lit(1)).as("n_terms"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(10)
-    },
+    (s, dir) => bm25TermScores(table(s, dir, "documents"), bm25Terms)
+      .groupBy(col("doc_id"))
+      .agg(sum(col("term_score")).as("score"), count(lit(1)).as("n_terms"))
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(10),
     Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-      stats AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, t FROM toks),
-      corpus AS (SELECT COUNT(*) AS n, SUM(dl) AS tt FROM stats),
-      tf AS (
-        SELECT doc_id, dl, term, COUNT(*) AS tf
-        FROM (SELECT doc_id, dl,
-                     unnest(list_filter(t, x -> list_contains(['spark','vector','stream'], x))) AS term
-              FROM stats)
-        GROUP BY 1, 2, 3),
-      dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-      sc AS (
-        SELECT f.doc_id,
-               (((1000000 * 44 * f.tf * c.tt) // (20 * c.tt * f.tf + 6 * c.tt + 18 * c.n * f.dl))
-                * ((1000000 * (2 * c.n - 2 * d.df + 1)) // (2 * d.df + 1))) // 1000000 AS term_score
-        FROM tf f JOIN dfreq d USING (term) CROSS JOIN corpus c)
+      WITH ${bm25Sql(bm25Terms)}
       SELECT doc_id, CAST(SUM(term_score) AS BIGINT) AS score, COUNT(*) AS n_terms
       FROM sc GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10"""))
 

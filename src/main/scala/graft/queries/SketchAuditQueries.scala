@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 
 /** Round-4 continuation: deterministic-approximation audit tier.
   * The inherently-randomized sketches (HLL q91, approx-percentile

@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.operators.Upsert
-import graft.queries.QueryDef.{spreadTable, table}
-import graft.functions.DecimalExprs.{dec2, cents2}
+import graft.queries.QueryDef.table
+import graft.functions.DecimalExprs.cents2
 
 /** Round-4 continuation: classic-warehouse serving tier — CDC apply
   * with delete tombstones (the Debezium-feed materialization the

@@ -48,6 +48,11 @@ object StreamingOps {
              keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
 
+  /** The gold run id of micro-batch `batchId`: `batch-` and the id
+    * zero-padded to 12 digits, so run names sort in batch order — the
+    * order [[LakeIO.vacuumGold]] and [[LakeIO.readGoldAsOf]] go by. */
+  private def runId(batchId: Long): String = f"batch-$batchId%012d"
+
   /** Idempotent gold sink: each micro-batch lands as its own
     * `load_id=batch-<id>` partition via dynamic partition overwrite,
     * so a replayed batch (at-least-once delivery after recovery)
@@ -58,7 +63,7 @@ object StreamingOps {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        LakeIO.appendGoldRun(df.toDF(), zones, table, s"batch-$batchId")
+        LakeIO.appendGoldRun(df.toDF(), zones, table, runId(batchId))
       }
       .start()
 
@@ -85,7 +90,7 @@ object StreamingOps {
         val partial = df.toDF().groupBy(keyCols.map(col): _*)
           .agg(count(lit(1)).as("n_partial"),
             sum(col(valueCol).cast(DecimalType(18, 2))).as("sum_partial"))
-        LakeIO.appendGoldRun(partial, zones, table, f"batch-$batchId%012d")
+        LakeIO.appendGoldRun(partial, zones, table, runId(batchId))
       }
       .start()
 
@@ -159,7 +164,7 @@ object StreamingOps {
           val hits = graft.operators.Similarity.searchIvfIndex(
             batch.sparkSession, zones, indexName, batch, k, nProbe,
             idCol, vecCol)
-          LakeIO.appendGoldRun(hits, zones, outTable, f"batch-$batchId%012d")
+          LakeIO.appendGoldRun(hits, zones, outTable, runId(batchId))
         }
       }
       .start()
@@ -290,7 +295,7 @@ object StreamingOps {
         val newlyClosed = next.filter(!col("IsActive"))
         if (!newlyClosed.isEmpty) {
           LakeIO.appendGoldRun(newlyClosed, zones, s"${table}__closed",
-            f"batch-$batchId%012d")
+            runId(batchId))
         }
         LakeIO.replaceGold(next.filter(col("IsActive")), zones, s"${table}__active")
       } finally next.unpersist()
@@ -637,7 +642,7 @@ object StreamingOps {
                  threshold: Double = 0.5): Unit = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val loadId = f"batch-$batchId%012d"
+    val loadId = runId(batchId)
 
     val shingled = Dedup.shingleSets(batch, idCol, textCol, shingleSize)
       .localCheckpoint() // one micro-batch: small; cut the source lineage

@@ -81,7 +81,7 @@ class ContractSpec extends SparkSpec {
   test("on a loaded lake, contract reads match inference and starTopK plans jobless") {
     val landing = tempDir("graft_contract_landing")
     val zones = LakeZones(tempDir("graft_contract_lake"))
-    PipelineFixture.writeLanding(landing)
+    PipelineDemo.writeLanding(landing)
     Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
       LocalDate.of(2024, 6, 1), Timestamp.valueOf("2024-06-01 00:00:00"))
     // partition columns (load_id) are still discovered, with the same types

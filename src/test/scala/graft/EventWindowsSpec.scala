@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.operators.EventWindows
 

@@ -225,8 +225,27 @@ class MultimodalStreamingSpec extends SparkSpec {
     // a replayed batch overwrites its own partition, not appends
     val replay = Seq(Event(1, Timestamp.valueOf("2024-01-01 00:00:00"), 1, "a", 1.0))
       .toDF()
-    LakeIO.appendGoldRun(replay, zones, "events_gold", "batch-0")
+    LakeIO.appendGoldRun(replay, zones, "events_gold", "batch-000000000000")
     assert(LakeIO.readGold(spark, zones, "events_gold").count() == 2)
+  }
+
+  test("gold sink run ids sort in batch order past batch 9") {
+    import graft.sources.{LakeIO, LakeZones}
+    implicit val sqlCtx = spark.sqlContext
+    val zones = LakeZones(tempDir("graft_ssink_order"))
+    val mem = MemoryStream[Event]
+    val q = StreamingOps.sinkToGold(mem.toDF(), zones, "events_gold",
+      tempDir("graft_ckpt"))
+    for (i <- 0 until 11) {
+      mem.addData(Event(i, Timestamp.valueOf("2024-01-01 00:00:00"), i, "a", i.toDouble))
+      q.processAllAvailable()
+    }
+    q.stop()
+    // keeping the newest run must keep batch 10, not batch 9
+    LakeIO.vacuumGold(spark, zones, "events_gold", keepLast = 1)
+    val left = LakeIO.readGold(spark, zones, "events_gold")
+      .select("event_id").as[Long].collect()
+    assert(left.toSeq == Seq(10L))
   }
 
   test("late cross-batch event extends an open session backward") {

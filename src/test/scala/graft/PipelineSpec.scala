@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.{LakeIO, LakeZones}
 import graft.types.Schemas
-import PipelineFixture.writeLanding
+import PipelineDemo.writeLanding
 
 /** C1+C7 golden end-to-end: reference-shaped CSV landing files
   * (50 customers / 200 orders, mirroring `generate_jde_data.py`

@@ -30,6 +30,15 @@ class SpreadSpec extends SparkSpec {
     assert(Spread.wide(wider) eq wider)
   }
 
+  test("spreadTable estimates a file: URI path from the files it names") {
+    val par = spark.sparkContext.defaultParallelism
+    val dir = tempDir("graft_spread_uri")
+    spark.range(0, 1000, 1, par).write.parquet(s"$dir/t.parquet")
+    val df = graft.queries.QueryDef.spreadTable(spark, s"file://$dir", "t")
+    // par part files estimate as >= par splits: the no-op path
+    assert(!df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning"))
+  }
+
   test("spreading preserves the row multiset exactly") {
     val df = spark.range(0, 5000).select(col("id"),
       (col("id") % 7).as("k"), md5(col("id").cast("string")).as("h"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.UnigramLm
 
 /** Unigram-LM tokenizer: the in-plan Viterbi fold must reproduce a
