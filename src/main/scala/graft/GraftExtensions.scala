@@ -67,6 +67,23 @@ object GraftExtensions {
     "dot_product" -> {
       case Seq(a, b) => DotProductExpr(a, b)
       case _ => throw new IllegalArgumentException("dot_product(arr, arr)")
+    },
+    "char_counts" -> {
+      case Seq(c) => CharCountsExpr(c)
+      case _ => throw new IllegalArgumentException("char_counts(str)")
+    },
+    "distinct_char_shingles" -> ((es: Seq[Expression]) => es match {
+      case Seq(c, k) => DistinctCharShinglesExpr(c, litInt(k, "shingle size"))
+      case _ => throw new IllegalArgumentException(
+        "distinct_char_shingles(str, k)")
+    }),
+    "jaro_winkler" -> {
+      case Seq(a, b) => JaroWinklerExpr(a, b)
+      case _ => throw new IllegalArgumentException("jaro_winkler(str, str)")
+    },
+    "nfc_normalize" -> {
+      case Seq(c) => NfcNormalizeExpr(c)
+      case _ => throw new IllegalArgumentException("nfc_normalize(str)")
     })
 
   /** Post-hoc registration on an already-built session (tests,

@@ -38,13 +38,6 @@ object ScaleGen {
   private def uic(salt: String, m: Column, cols: Column*): Column =
     pmod(h(salt, cols: _*), m)
 
-  /** standard gaussian via Box–Muller; u1 in (0,1] so log is finite. */
-  private def gauss(salt: String, cols: Column*): Column = {
-    val u1 = (pmod(h(salt + "_a", cols: _*), lit(M)) + 1).cast("double") / (M + 1).toDouble
-    val u2 = u(salt + "_b", cols: _*)
-    sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
-  }
-
   private def pick(choices: Seq[String], idx: Column): Column =
     element_at(array(choices.map(lit): _*), (idx + 1).cast("int"))
 

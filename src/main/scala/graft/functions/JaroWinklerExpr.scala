@@ -99,10 +99,4 @@ object JaroWinklerExpr {
     org.apache.spark.sql.graft.ColumnBridge.column(JaroWinklerExpr(
       org.apache.spark.sql.graft.ColumnBridge.expression(a),
       org.apache.spark.sql.graft.ColumnBridge.expression(b)))
-
-  /** Register as SQL function `jaro_winkler(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerExpr(exprs.head, exprs(1)),
-      "built-in")
 }

@@ -56,9 +56,4 @@ object NfcNormalizeExpr {
   def nfc_normalize(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(NfcNormalizeExpr(
       org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-
-  /** Register as SQL function `nfc_normalize(s)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalizeExpr(exprs.head), "built-in")
 }

@@ -56,13 +56,8 @@ object RollingHashExpr {
     acc
   }
 
-  /** Column wrapper + SQL registration. */
+  /** Column wrapper. */
   def rolling_hash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graft.ColumnBridge.column(RollingHashExpr(
       org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-
-  /** Register as SQL function `rolling_hash(...)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHashExpr(exprs.head), "built-in")
 }

@@ -70,9 +70,6 @@ object TextFunctions {
   def stopwordHitsOf(t: Column, words: Seq[String]): Column =
     size(filter(t, x => array_contains(typedLit(words), x)))
 
-  def stopwordHits(c: Column, words: Seq[String]): Column =
-    stopwordHitsOf(tokens(c), words)
-
   /** Language-ID over a staged token column: argmax of per-language
     * stopword hits, first-listed language wins ties, zero hits
     * everywhere → "und" (undetermined). */
@@ -98,8 +95,6 @@ object TextFunctions {
     when(size(t) === 0, lit(0.0))
       .otherwise(total.cast("double") / size(t).cast("double"))
   }
-
-  def meanTokenLen(c: Column): Column = meanTokenLenOf(tokens(c))
 
   /** Heuristic quality score in [0,1] from raw text + staged tokens:
     * length saturation, stopword presence, low punctuation, sane word

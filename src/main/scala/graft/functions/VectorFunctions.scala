@@ -36,15 +36,6 @@ object VectorFunctions {
     when(n === 0.0, lit(0.0)).otherwise(d / n)
   }
 
-  /** Squared Euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Deterministic pseudo-random hyperplane `h` for `dim`-dimensional
     * signed random projection: component d is derived from
     * md5("h-d")'s first 4 hex chars, shifted to [-32768, 32767].

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Event-time windowing over the `events` table — the batch half of
   * the streaming surface (SURVEY.md §2.7/§7.5). The same expressions
@@ -15,8 +15,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * order must not change results).
   */
 object EventWindows {
-
-  private val Dec = DecimalType(18, 2)
 
   /** Tumbling window aggregate per event type. */
   def tumbling(events: DataFrame, width: String = "1 hour"): DataFrame =

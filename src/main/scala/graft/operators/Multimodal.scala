@@ -20,12 +20,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata struct carried beside every media blob. */
-  val MetaSchema: StructType = StructType(Seq(
-    StructField("mime_type", StringType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false),
-    StructField("checksum_md5", StringType, nullable = false)))
-
   /** Wrap a string column as a binary media column + metadata struct
     * (in production the blob arrives from object storage; here the
     * bytes come from the fixture's text so tests are deterministic). */

@@ -43,20 +43,17 @@ object Quality {
 
   /** FOREIGN KEY constraint: violations = fact rows whose key has no
     * match in the dimension (left_anti; null keys are orphans too,
-    * mirroring a NOT NULL FK column — pass `nullable=true` to exempt
-    * them like SQL's nullable FK semantics). */
+    * mirroring a NOT NULL FK column). */
   def foreignKey(fact: DataFrame, factKey: String, dim: DataFrame,
-                 dimKey: String, nullable: Boolean = false,
-                 name: String = ""): DataFrame = {
+                 dimKey: String, name: String = ""): DataFrame = {
     val label = if (name.nonEmpty) name else s"fk($factKey->$dimKey)"
-    val checked = if (nullable) fact.filter(col(factKey).isNotNull) else fact
     // left join against DISTINCT dim keys: multiplicity-safe, lazy,
     // one aggregation pass (an anti-join would need a second scan for
     // the checked count)
     val dimKeys = dim.select(col(dimKey).as(factKey)).distinct()
       .withColumn("_matched", lit(1))
     summary(label, count(lit(1)), count(when(col("_matched").isNull, 1)),
-      checked.join(dimKeys, Seq(factKey), "left"))
+      fact.join(dimKeys, Seq(factKey), "left"))
   }
 
   /** Run a batch of checks and union the summaries. */

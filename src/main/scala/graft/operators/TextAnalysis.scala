@@ -441,18 +441,6 @@ object TextAnalysis {
     * bit-identical to sequential BPE — BpeSpec proves equality for a
     * full 1000-merge vocabulary.
     *
-    * `exact = false` trades the prefix-stop for a maximal independent
-    * SET: conflicting pairs are skipped, not batch-ending, and ties
-    * are not truncated, so every round fills up to `maxBatch` merges
-    * and round count is ~`nMerges / maxBatch` (plus the early rounds
-    * where the symbol universe itself is small). The learned rules
-    * are still a deterministic, valid BPE vocabulary — each accepted
-    * pair was frequent and is applied greedily in rank order — but
-    * merge ORDER may diverge from sequential where a skipped pair's
-    * count would not have dropped. That is the standard
-    * production-tokenizer trade (sample-free, full-corpus, bounded
-    * rounds); use the default for oracle parity.
-    *
     * Scale shape: all per-round work runs on the DISTINCT-WORD table
     * (bounded by vocabulary, not corpus bytes — the corpus is scanned
     * exactly once to build it); each round is one pair-explode
@@ -612,7 +600,7 @@ object TextAnalysis {
 
   def bpeTrain(docs: DataFrame, textCol: String = "text",
                nMerges: Int = 10, minPairFreq: Long = 2L,
-               maxBatch: Int = 256, exact: Boolean = true): DataFrame = {
+               maxBatch: Int = 256): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     var words = Checkpoints.truncate(docs
@@ -636,34 +624,31 @@ object TextAnalysis {
         .agg(sum(col("freq")).as("c"))
         .filter(col("c") >= minPairFreq)
         .orderBy(col("c").desc, col("a"), col("b"))
-        .limit(if (exact) maxBatch + 1 else 4 * maxBatch)
+        .limit(maxBatch + 1)
         .as[(String, String, Long)]
         .collect()
       if (top.isEmpty) exhausted = true
       else {
         // interference-free pairs in sort order (taboo = accepted
-        // symbols and their merged tokens); exact mode must stop at
-        // the first conflict, fast mode skips it and keeps scanning
+        // symbols and their merged tokens), stopping at the first
+        // conflict
         val taboo = scala.collection.mutable.Set.empty[String]
         val prefix = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var stop = false
         var k = 0
-        while (!stop && k < top.length && prefix.size < maxBatch) {
+        while (k < top.length && prefix.size < maxBatch &&
+               !taboo(top(k)._1) && !taboo(top(k)._2)) {
           val (a, b, c) = top(k)
-          if (taboo(a) || taboo(b)) { if (exact) stop = true else k += 1 }
-          else { prefix += ((a, b, c)); taboo ++= Seq(a, b, a + b); k += 1 }
+          prefix += ((a, b, c)); taboo ++= Seq(a, b, a + b); k += 1
         }
         // the first non-accepted count in sort order, if any pair was
         // left behind (conflict, capacity, or the limit+1 sentinel)
         val nextCount: Option[Long] =
           if (k < top.length) Some(top(k)._3) else None
         var batch = prefix.take(capacity)
-        if (exact) {
-          val boundary = if (batch.size < prefix.size) Some(prefix(batch.size)._3)
-            else nextCount
-          boundary.foreach { nc =>
-            while (batch.size > 1 && batch.last._3 == nc) batch = batch.dropRight(1)
-          }
+        val boundary = if (batch.size < prefix.size) Some(prefix(batch.size)._3)
+          else nextCount
+        boundary.foreach { nc =>
+          while (batch.size > 1 && batch.last._3 == nc) batch = batch.dropRight(1)
         }
         if (batch.isEmpty) batch = prefix.take(1)
         batch.foreach { case (a, b, c) =>

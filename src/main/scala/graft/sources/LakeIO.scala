@@ -100,10 +100,8 @@ object LakeIO {
   /** JSONL sink (gzip per-part — splittable at the FILE level, so
     * write many parts; a single giant .gz would serialize the
     * downstream scan). */
-  def writeJsonl(df: DataFrame, path: String, compress: Boolean = true): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (compress) w.option("compression", "gzip") else w).json(path)
-  }
+  def writeJsonl(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
   /** Raw media ingestion — Spark's `binaryFile` source: each file
     * becomes one row of (path, modificationTime, length, content),
@@ -210,14 +208,20 @@ object LakeIO {
     * must be stable across retries of a run and unique per run (the
     * ingest date works). */
   def appendGoldRun(df: DataFrame, zones: LakeZones, table: String,
-                    loadId: String): Unit = {
+                    loadId: String): Unit =
+    appendRun(df, zones.gold(table), loadId)
+
+  /** Write `df` as the `load_id=runId` partition of the parquet table
+    * at `path`, replacing only that partition (dynamic overwrite), so
+    * a retried run rewrites its own partition instead of adding a
+    * second copy. */
+  def appendRun(df: DataFrame, path: String, runId: String): Unit = {
     // Fail fast on layout clashes: mixing load_id=... dirs with
-    // root-level data files (a flattening compactGold rewrite) OR
-    // with a DIFFERENT partition column (a replaceGold written with
-    // other partitionCols) makes Spark partition discovery reject the
-    // whole table at read time. Better to refuse the write than to
-    // poison the table.
-    val target = new Path(zones.gold(table))
+    // root-level data files OR with a DIFFERENT partition column (a
+    // replaceGold written with other partitionCols) makes Spark
+    // partition discovery reject the whole table at read time.
+    // Better to refuse the write than to poison the table.
+    val target = new Path(path)
     val fs = target.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(target)) {
       val entries = fs.listStatus(target)
@@ -226,8 +230,7 @@ object LakeIO {
       require(!rootData,
         s"$target holds non-partitioned data files; appending a " +
           "load_id= partition would mix layouts and break partition " +
-          "discovery. Compact with preservePartitions=true, or " +
-          "overwrite the table instead.")
+          "discovery. Overwrite the table instead.")
       val foreignKeys = entries.collect {
         case st if st.isDirectory && st.getPath.getName.contains("=") =>
           st.getPath.getName.split("=", 2)(0)
@@ -237,13 +240,13 @@ object LakeIO {
           "appending a load_id= partition would conflict with that " +
           "layout and break partition discovery at read time.")
     }
-    df.withColumn("load_id", lit(loadId))
+    df.withColumn("load_id", lit(runId))
       .write
       .partitionBy("load_id")
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
-      .parquet(zones.gold(table))
+      .parquet(path)
   }
 
   /** Retention vacuum for run-partitioned gold tables: keep the
@@ -454,23 +457,18 @@ object LakeIO {
     * than a scan-efficient parquet target — at 100 TB the file count,
     * not the byte count, is what kills scan planning and open() cost.
     *
-    * The hive partition layout is PRESERVED by default (detected from
-    * the directory names and re-applied on the rewrite, coalescing
+    * The hive partition layout is PRESERVED (detected from the
+    * directory names and re-applied on the rewrite, coalescing
     * within partitions), so a later [[appendGoldRun]] into the same
-    * table still finds a partitioned layout. Pass
-    * `preservePartitions = false` to deliberately flatten partition
-    * columns into data columns — after that, appendGoldRun refuses the
-    * table (layout-clash guard). Returns the shuffle partition count
-    * used for the rewrite. */
+    * table still finds a partitioned layout. Returns the shuffle
+    * partition count used for the rewrite. */
   def compactGold(spark: SparkSession, zones: LakeZones, table: String,
-                  targetFileBytes: Long = 128L * 1024 * 1024,
-                  preservePartitions: Boolean = true): Int = {
+                  targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val target = new Path(zones.gold(table))
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes = fs.getContentSummary(target).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val partCols =
-      if (preservePartitions) hivePartitionColumns(fs, target) else Nil
+    val partCols = hivePartitionColumns(fs, target)
     val src = spark.read.parquet(zones.gold(table))
     val df =
       if (partCols.nonEmpty) {

@@ -395,65 +395,52 @@ object StreamingOps {
 
   /** Stateful gap sessionization with `flatMapGroupsWithState`:
     * per-user state carries the open session; a gap > `gapMinutes`
-    * closes and emits it on the next event. With
-    * `withProcessingTimeout=true` idle sessions also flush on a
-    * processing-time timer (production liveness; leave off in tests —
-    * the zero-interval default trigger busy-loops micro-batches
-    * evaluating timeouts, so `processAllAvailable` never settles).
+    * closes and emits it on the next event. There is no state
+    * timeout: an idle session stays open until its user's next event
+    * (a processing-time timer would make the zero-interval default
+    * trigger busy-loop micro-batches evaluating timeouts, so
+    * `processAllAvailable` never settles).
     * The streaming twin of `EventWindows.sessionize`. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
-                 withProcessingTimeout: Boolean = false): Dataset[Session] = {
+  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[Session] = {
     import events.sparkSession.implicits._
     val gapMs = gapMinutes * 60L * 1000L
 
     def update(userId: Long, rows: Iterator[Event],
                state: GroupState[SessionState]): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator(Session(userId, s.start, s.end, s.n, s.sum))
-      } else {
-        // Interval-gap merge over the restored open session PLUS this
-        // batch's events, all in start-time order. This handles late
-        // data exactly like the batch twin within the visible horizon:
-        // an event inside the open session's gap (either side) merges
-        // and can extend it backward; far-late events session among
-        // THEMSELVES (two late events within a gap of each other form
-        // ONE earlier session, not two singletons); everything that
-        // ends more than a gap before the final interval closes.
-        val items = (state.getOption.toList ++
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .map(e => SessionState(e.ts.getTime, e.ts.getTime, 1L, e.value)))
-          .sortBy(s => (s.start, s.end))
-        var closed = List.empty[Session]
-        var cur = Option.empty[SessionState]
-        items.foreach { it =>
-          cur match {
-            case Some(c) if it.start - c.end <= gapMs =>
-              // start-sorted ⇒ it.start >= c.start; overlap makes the
-              // difference negative and merges, as it must
-              cur = Some(SessionState(c.start, math.max(c.end, it.end),
-                c.n + it.n, c.sum + it.sum))
-            case Some(c) =>
-              closed ::= Session(userId, c.start, c.end, c.n, c.sum)
-              cur = Some(it)
-            case None =>
-              cur = Some(it)
-          }
+      // Interval-gap merge over the restored open session PLUS this
+      // batch's events, all in start-time order. This handles late
+      // data exactly like the batch twin within the visible horizon:
+      // an event inside the open session's gap (either side) merges
+      // and can extend it backward; far-late events session among
+      // THEMSELVES (two late events within a gap of each other form
+      // ONE earlier session, not two singletons); everything that
+      // ends more than a gap before the final interval closes.
+      val items = (state.getOption.toList ++
+        rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+          .map(e => SessionState(e.ts.getTime, e.ts.getTime, 1L, e.value)))
+        .sortBy(s => (s.start, s.end))
+      var closed = List.empty[Session]
+      var cur = Option.empty[SessionState]
+      items.foreach { it =>
+        cur match {
+          case Some(c) if it.start - c.end <= gapMs =>
+            // start-sorted ⇒ it.start >= c.start; overlap makes the
+            // difference negative and merges, as it must
+            cur = Some(SessionState(c.start, math.max(c.end, it.end),
+              c.n + it.n, c.sum + it.sum))
+          case Some(c) =>
+            closed ::= Session(userId, c.start, c.end, c.n, c.sum)
+            cur = Some(it)
+          case None =>
+            cur = Some(it)
         }
-        cur.foreach { s =>
-          state.update(s)
-          if (withProcessingTimeout) state.setTimeoutDuration(gapMs)
-        }
-        closed.reverseIterator
       }
+      cur.foreach(state.update)
+      closed.reverseIterator
     }
 
-    val timeout =
-      if (withProcessingTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(update)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
   final case class UserStats(user_id: Long, n_events: Long, sum_value: Double)
@@ -692,19 +679,13 @@ object StreamingOps {
       .select(col("id").as(idCol), col("status"), col("dup_of"))
 
     // (4) idempotent decision + state appends (own-partition overwrite)
-    decisions.withColumn("load_id", lit(loadId))
-      .write.mode("overwrite").partitionBy("load_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(outDir)
+    LakeIO.appendRun(decisions, outDir, loadId)
     val admittedState = shingled
       .join(inner.filter(col("status") === "A").select(col("id")), Seq("id"))
       .join(bands.groupBy(col("id")).agg(collect_list(col("band")).as("bands")),
         Seq("id"))
       .select(col("id"), col("sh"), col("bands"))
-    admittedState.withColumn("load_id", lit(loadId))
-      .write.mode("overwrite").partitionBy("load_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(stateDir)
+    LakeIO.appendRun(admittedState, stateDir, loadId)
   }
 
   /** Streaming near-dup admission gate — the continuous-ingestion

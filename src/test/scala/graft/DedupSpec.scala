@@ -211,13 +211,11 @@ class DedupSpec extends SparkSpec {
     val rep = Quality.report(Seq(
       Quality.notNull(fact, Seq("fk")),
       Quality.unique(fact, Seq("id")),
-      Quality.foreignKey(fact, "fk", dim, "k"),
-      Quality.foreignKey(fact, "fk", dim, "k", nullable = true, name = "fk_nullable")))
+      Quality.foreignKey(fact, "fk", dim, "k")))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rep("not_null(fk)") == ((5L, 1L)))
     assert(rep("unique(id)") == ((5L, 1L)))
     assert(rep("fk(fk->k)") == ((5L, 2L)))       // orphan + null
-    assert(rep("fk_nullable") == ((4L, 1L)))     // null exempted
   }
 
   test("deterministic sampling: stable, stratified, and split-disjoint") {

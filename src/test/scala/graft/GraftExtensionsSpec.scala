@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.RollingHashExpr
+import graft.functions.{RollingHashExpr, TextExprs}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL surface of the native expressions: every graft function is
@@ -49,13 +49,32 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(err.getMessage.toLowerCase.contains("literal"))
   }
 
+  test("char_counts and distinct_char_shingles from SQL match the static kernels") {
+    val cc = spark.sql("SELECT char_counts('aab') AS c").as[Seq[Long]].head()
+    assert(cc == Seq(2L, 1L))
+    val k = spark.sql("SELECT distinct_char_shingles('abab', 2) AS k")
+      .as[Long].head()
+    assert(k == TextExprs.distinctCharShingles(UTF8String.fromString("abab"), 2))
+    assert(k == 2L)
+  }
+
+  test("jaro_winkler and nfc_normalize from SQL") {
+    val j = spark.sql("SELECT jaro_winkler('martha', 'marhta') AS j")
+      .as[Double].head()
+    assert(math.abs(j - 0.9611111111111111) < 1e-12)
+    Seq("cafe\u0301").toDF("s").createOrReplaceTempView("nfc_in")
+    val n = spark.sql("SELECT nfc_normalize(s) AS n FROM nfc_in").as[String].head()
+    assert(n == "caf\u00e9")
+  }
+
   test("injector exposes the same builder table") {
     // the class-based injector must construct cleanly (driver passes it
     // via spark.sql.extensions) and cover every registered name
     val ext = new GraftExtensions
     assert(GraftExtensions.builders.map(_._1).toSet ==
       Set("rolling_hash", "minhash_base_hashes", "minhash_signature",
-        "word_shingles", "simhash_32", "dot_product"))
+        "word_shingles", "simhash_32", "dot_product", "char_counts",
+        "distinct_char_shingles", "jaro_winkler", "nfc_normalize"))
     val _ = ext
   }
 }

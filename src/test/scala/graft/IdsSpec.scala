@@ -102,11 +102,22 @@ class IdsSpec extends SparkSpec {
     val df = spark.range(5000).select(($"id" * 7919 % 5003).as("key")).repartition(6)
     def ids() = Ids.addContiguousIds(df, Seq(col("key")), "sk")
       .select("key", "sk").as[(Long, Long)].collect().sortBy(_._1).toSeq
+    def filesUnder(dir: String): Long = java.nio.file.Files
+      .walk(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
     val local = ids()
+    // the context's checkpoint dir alone selects reliable checkpoints
     val dir = tempDir("graft_ids_ckpt")
-    spark.conf.set(Checkpoints.ReliableConf, "true")
-    spark.conf.set(Checkpoints.DirConf, dir)
-    val reliable = try ids() finally spark.conf.set(Checkpoints.ReliableConf, "false")
+    spark.sparkContext.setCheckpointDir(dir)
+    val reliable = try {
+      assert(Checkpoints.truncate(spark.range(100).toDF()).count() == 100)
+      val afterTruncate = filesUnder(dir)
+      assert(afterTruncate > 0, s"truncate wrote no checkpoint files under $dir")
+      val got = ids()
+      assert(filesUnder(dir) > afterTruncate,
+        s"addContiguousIds wrote no checkpoint files under $dir")
+      got
+    } finally spark.sparkContext.setCheckpointDir(null)
     assert(reliable == local)
     assert(reliable.map(_._2) == (1L to 5000L))
   }

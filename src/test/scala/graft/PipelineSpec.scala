@@ -232,11 +232,11 @@ class PipelineSpec extends SparkSpec {
       Seq((99L, "row99")).toDF("id", "v"), zones, "tiny", "b99")
     assert(LakeIO.readGold(spark, zones, "tiny").count() == 9)
 
-    // explicit flatten: load_id becomes a data column, one file total,
-    // and appendGoldRun now REFUSES the mixed-layout write (ADVICE r02)
-    LakeIO.compactGold(spark, zones, "tiny", preservePartitions = false)
-    assert(dataFiles() == 1)
-    assert(LakeIO.readGold(spark, zones, "tiny").count() == 9)
+    // a table rewritten without its partitioning (load_id as a data
+    // column at the root): appendGoldRun REFUSES the mixed-layout
+    // write (ADVICE r02)
+    LakeIO.overwriteGold(
+      Seq((100L, "x", "b0")).toDF("id", "v", "load_id"), zones, "tiny")
     val ex = intercept[IllegalArgumentException] {
       LakeIO.appendGoldRun(
         Seq((100L, "x")).toDF("id", "v"), zones, "tiny", "b100")

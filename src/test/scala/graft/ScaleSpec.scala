@@ -294,7 +294,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("iterative operators: identical results and constant-size plans in both checkpoint modes") {
-    import graft.operators.{Checkpoints, Dedup}
+    import graft.operators.Dedup
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (8L, 5L),
       (10L, 11L), (11L, 12L), (20L, 21L)).toDF("id_a", "id_b")
 
@@ -308,8 +308,7 @@ class ScaleSpec extends SparkSpec {
     assert(planLines(local) < 10, local.queryExecution.optimizedPlan.toString)
 
     val dir = tempDir("graft_ckpt")
-    spark.conf.set(Checkpoints.ReliableConf, "true")
-    spark.conf.set(Checkpoints.DirConf, dir)
+    spark.sparkContext.setCheckpointDir(dir)
     try {
       val rel = Dedup.connectedComponents(pairs)
       assert(rel.as[(Long, Long)].collect().sorted.toSeq == localRows)
@@ -325,29 +324,30 @@ class ScaleSpec extends SparkSpec {
         .bpeTrain(docs.toDF("text"), nMerges = 4)
         .as[(Long, String, String, String, Long)].collect().toSeq
       assert(merges.take(2).map(r => (r._2, r._3)) == Seq(("e", "s"), ("es", "t")))
-    } finally {
-      spark.conf.set(Checkpoints.ReliableConf, "false")
-    }
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  test("reliable truncation writes under the checkpoint dir the session names now") {
+  test("truncation writes under the context's current dir, and is local once the dir is unset") {
     import graft.operators.Checkpoints
+    import org.apache.spark.sql.execution.LogicalRDD
     def filesUnder(dir: String): Long =
       Files.walk(java.nio.file.Paths.get(dir)).filter(Files.isRegularFile(_)).count()
+    def checkpointFile(df: org.apache.spark.sql.DataFrame): Option[String] =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+        .flatMap(_.getCheckpointFile)
     val dirs = Seq.fill(2)(tempDir("graft_ckpt_dir"))
-    spark.conf.set(Checkpoints.ReliableConf, "true")
     try dirs.foreach { dir =>
-      spark.conf.set(Checkpoints.DirConf, dir)
-      assert(Checkpoints.truncate(spark.range(100).toDF()).count() == 100)
+      spark.sparkContext.setCheckpointDir(dir)
+      val t = Checkpoints.truncate(spark.range(100).toDF())
+      assert(t.count() == 100)
       assert(filesUnder(dir) > 0, s"expected checkpoint files under $dir")
-      // an unchanged dir keeps the context's dir (no new UUID subdir)
-      val ctxDir = spark.sparkContext.getCheckpointDir
-      Checkpoints.truncate(spark.range(10).toDF())
-      assert(spark.sparkContext.getCheckpointDir == ctxDir)
-    } finally {
-      spark.conf.set(Checkpoints.ReliableConf, "false")
-      spark.conf.unset(Checkpoints.DirConf)
-    }
+      assert(checkpointFile(t).exists(_.contains(new java.io.File(dir).getName)))
+    } finally spark.sparkContext.setCheckpointDir(null)
+    val before = dirs.map(filesUnder)
+    val t = Checkpoints.truncate(spark.range(10).toDF())
+    assert(t.count() == 10)
+    assert(checkpointFile(t).isEmpty)
+    assert(dirs.map(filesUnder) == before)
   }
 
   test("q106/q156/q153: no Window or SinglePartition exchange survives in any plan") {

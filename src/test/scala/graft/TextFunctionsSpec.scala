@@ -82,7 +82,7 @@ class TextFunctionsSpec extends SparkSpec {
       .select(RollingHashExpr.rolling_hash($"t")).as[Option[Long]].collect().head
     assert(viaNull.isEmpty)
     // SQL surface
-    RollingHashExpr.register(spark)
+    GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT rolling_hash('abc') AS h").as[Long].collect().head
     assert(viaSql == expect)
   }
@@ -111,7 +111,7 @@ class TextFunctionsSpec extends SparkSpec {
       .select(JaroWinklerExpr.jaro_winkler($"a", $"b"))
       .as[Option[Double]].collect().head
     assert(viaNull.isEmpty)
-    JaroWinklerExpr.register(spark)
+    GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT jaro_winkler('dixon', 'dicksonx') AS j")
       .as[Double].collect().head
     assert(math.abs(viaSql - 0.8133333333333332) < 1e-12)
@@ -135,7 +135,7 @@ class TextFunctionsSpec extends SparkSpec {
       .select(NfcNormalizeExpr.nfc_normalize($"s"))
       .as[Option[String]].collect().head
     assert(viaNull.isEmpty)
-    NfcNormalizeExpr.register(spark)
+    GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT nfc_normalize('ü') AS n")
       .as[String].collect().head
     assert(viaSql == "ü")

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Runs graft.Verify (via sbt runMain) on a testdata sf dir, then replays
+Runs graft.Verify (via sbt runMain, in the checkout this script sits
+in) on a testdata sf dir, then replays
 each oracle_sql.json query in DuckDB over the same parquet tables and
 compares schema + values column-by-column (sorted by column name,
 row-order-insensitive via sorted tuples).
@@ -18,6 +19,9 @@ from pathlib import Path
 
 import duckdb
 
+# the checkout this script belongs to: Verify runs from it, and the
+# output dir may not be it
+REPO = Path(__file__).resolve().parents[1]
 FLAGS = set(a for a in sys.argv[1:] if a.startswith("--"))
 _POS = [a for a in sys.argv[1:] if not a.startswith("--")]
 SF = _POS[0] if _POS else "/root/testdata/sf0.001"
@@ -30,7 +34,7 @@ for f in list(FLAGS):
 _UNKNOWN = FLAGS - {"--skip-verify"}
 if _UNKNOWN:
     sys.exit(f"unknown flags: {sorted(_UNKNOWN)}")
-if not OUT or OUT.startswith("-") or Path(OUT).resolve() == Path("/root/repo").resolve():
+if not OUT or OUT.startswith("-") or Path(OUT).resolve() == REPO:
     sys.exit(f"refusing suspicious outdir {OUT!r}")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -40,7 +44,7 @@ if "--skip-verify" not in FLAGS:
     names = " " + " ".join(ONLY) if ONLY else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{names}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:]); sys.exit(1)
