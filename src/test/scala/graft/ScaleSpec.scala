@@ -327,7 +327,7 @@ class ScaleSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  test("truncation writes under the context's current dir, and is local once the dir is unset") {
+  test("reliable truncation writes under the checkpoint dir the session names now") {
     import graft.operators.Checkpoints
     import org.apache.spark.sql.execution.LogicalRDD
     def filesUnder(dir: String): Long =
