@@ -44,7 +44,7 @@ import graft.functions.JdeFunctions.rowHash
   *    re-evaluates its input's lineage (probe, expire join), so
   *    persist the returned state before the next merge: the pipeline
   *    writes it to the lake ([[graft.sources.LakeIO.replaceGold]]);
-  *    in-memory chains should `localCheckpoint()`.
+  *    in-memory chains cut the lineage with [[Checkpoints.truncate]].
   */
 object Scd2 {
 

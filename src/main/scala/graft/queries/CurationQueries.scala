@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.operators.{Reconcile, Sampling, TextAnalysis}
 import graft.queries.QueryDef.table
+import graft.queries.ExtensionQueries.toksSql
 import graft.functions.DecimalExprs.dec2
 
 /** Round-3 widening: distribution-window family, PII scrubbing,
@@ -230,12 +231,11 @@ object CurationQueries {
     (s, dir) => TextAnalysis.tfIdfTopTerms(
       table(s, dir, "documents"), k = 5)
       .orderBy(col("source"), col("rk")),
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT doc_id, source, u.term AS term
         FROM documents,
-             UNNEST(list_filter(string_split(lower(text), ' '),
-                    x -> x <> '')) AS u(term)),
+             UNNEST($toksSql) AS u(term)),
       tf AS (
         SELECT doc_id, source, term, COUNT(*) AS tf
         FROM toks GROUP BY 1, 2, 3),
@@ -561,10 +561,9 @@ object CurationQueries {
           round(col("n_oov").cast(DoubleType) / col("n_tokens"), 6))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT source, unnest(list_filter(string_split(lower(text), ' '),
-                                          x -> x <> '')) AS term
+        SELECT source, unnest($toksSql) AS term
         FROM documents),
       vocab AS (
         SELECT term FROM (
@@ -747,7 +746,7 @@ object CurationQueries {
                CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
                  % 100 AS bkt,
                list_distinct(${ExtensionQueries.shinglesSql}) AS shl
-        FROM (SELECT doc_id, ${ExtensionQueries.toksSql} AS t FROM documents)),
+        FROM (SELECT doc_id, $toksSql AS t FROM documents)),
       ev AS (SELECT doc_id, unnest(shl) AS s FROM sh WHERE bkt < 5),
       tr AS (SELECT DISTINCT unnest(shl) AS s FROM sh WHERE bkt >= 5),
       tot AS (SELECT doc_id, COUNT(*) AS n_shingles FROM ev GROUP BY 1),
@@ -787,7 +786,7 @@ object CurationQueries {
     Some(s"""
       WITH sh AS (
         SELECT doc_id, source, ${ExtensionQueries.shinglesSql} AS shl
-        FROM (SELECT doc_id, source, ${ExtensionQueries.toksSql} AS t
+        FROM (SELECT doc_id, source, $toksSql AS t
               FROM documents)),
       per AS (
         SELECT doc_id, source,
@@ -859,12 +858,12 @@ object CurationQueries {
           expr("(1000000L * n_contaminated) div n_train"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH docs AS (
         SELECT doc_id, source,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1')
                  AS is_eval,
-               list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
+               $toksSql AS t
         FROM documents),
       shing AS MATERIALIZED (
         SELECT doc_id, source, is_eval,
@@ -940,7 +939,7 @@ object CurationQueries {
     },
     Some(s"""
       WITH toks AS (
-        SELECT doc_id, ${ExtensionQueries.toksSql} AS t FROM documents),
+        SELECT doc_id, $toksSql AS t FROM documents),
       base AS (SELECT doc_id, t FROM toks WHERE len(t) >= 8),
       wins AS MATERIALIZED (
         SELECT doc_id, CAST(pos AS BIGINT) AS pos,

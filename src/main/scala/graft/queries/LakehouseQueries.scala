@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import graft.operators.Checkpoints
 import graft.queries.QueryDef.{eventsTable, spreadTable, table}
 import graft.queries.ExtensionQueries.toksSql
 import graft.functions.DecimalExprs.dec2
@@ -215,8 +216,8 @@ object LakehouseQueries {
     (s, dir) => {
       // each recursion level re-reads the joined relation; checkpoint
       // the (tiny) key set once so levels read cached blocks, not files
-      table(s, dir, "supplier").select("s_suppkey")
-        .localCheckpoint().createOrReplaceTempView("v_supplier119")
+      Checkpoints.truncate(table(s, dir, "supplier").select("s_suppkey"))
+        .createOrReplaceTempView("v_supplier119")
       s.sql("""
         WITH RECURSIVE walk(key, depth) AS (
           SELECT CAST(s_suppkey AS BIGINT), CAST(0 AS BIGINT)
@@ -492,9 +493,9 @@ object LakehouseQueries {
         .withColumn("dup_e6", expr("(chunk_tokens * 1000000L) div doc_tokens"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT source, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
+        SELECT source, $toksSql AS t
         FROM documents),
       sized AS (
         SELECT source, t, CAST(len(t) AS BIGINT) AS n FROM toks WHERE len(t) > 0),

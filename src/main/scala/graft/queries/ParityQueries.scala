@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.JdeFunctions._
-import graft.operators.{CalendarDim, FactLoad, Scd2}
+import graft.operators.{CalendarDim, Checkpoints, FactLoad, Scd2}
 import QueryDef.table
 import graft.functions.DecimalExprs.dec2
 
@@ -173,11 +173,11 @@ object ParityQueries {
         Seq("CustomerName", "SearchType", "CategoryCode"))
       val t0 = to_timestamp(lit("2024-01-01 00:00:00"))
       val t1 = to_timestamp(lit("2024-06-01 00:00:00"))
-      // localCheckpoint (not cache): merge-2 then plans and runs over
+      // a lineage cut (not cache): merge-2 then plans and runs over
       // a flat LogicalRDD scan instead of re-evaluating merge-1's
       // whole DAG — the operator scaladoc's chaining guidance
-      val dim1 = Scd2.merge(Scd2.emptyDim(s, b1, spec), b1, spec, t0)
-        .localCheckpoint()
+      val dim1 = Checkpoints.truncate(
+        Scd2.merge(Scd2.emptyDim(s, b1, spec), b1, spec, t0))
       val dim2 = Scd2.merge(dim1, b2, spec, t1)
       dim2.select(
           col("CustomerKey").as("customer_key"),

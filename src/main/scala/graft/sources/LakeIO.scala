@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.operators.Checkpoints
 
 /** Lake-zone IO — the reference's source/sink surface (SURVEY.md
   * §2.1) on a medallion directory convention:
@@ -19,6 +20,18 @@ import org.apache.spark.sql.types.StructType
   * columns, so Catalyst prunes ingest-date filters at file-listing
   * time — at 100 TB the difference between scanning a day and
   * scanning the lake.
+  *
+  * Every parquet write publishes through one of two rules, both
+  * snappy-compressed (the reference's codec):
+  *
+  *  - whole-table publish (Silver truncate-loads, Gold replaces and
+  *    compaction): the new table is written to a staging directory
+  *    and swapped in by rename, so readers see the old table or the
+  *    new one, never a hole — a failed write leaves the old table
+  *    readable;
+  *  - partition replace (Bronze ingest dates, Gold `load_id` runs): a
+  *    dynamic partition overwrite that replaces only the partitions
+  *    it writes, refused when the table's existing layout differs.
   */
 final case class LakeZones(root: String) {
   def bronze(table: String): String = s"$root/bronze/$table"
@@ -66,7 +79,7 @@ object LakeIO {
     val withAudit = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("_corrupt",
         org.apache.spark.sql.types.StringType, nullable = true))
-    val raw = spark.read
+    val parsed = spark.read
       .option("header", "true")
       .option("quote", "\"")
       .option("escape", "\\")
@@ -74,10 +87,10 @@ object LakeIO {
       .option("columnNameOfCorruptRecord", "_corrupt")
       .schema(withAudit)
       .csv(path)
-      // Spark forbids filtering on the corrupt column straight off the
-      // scan (it is only populated for rows the parser touches); a
-      // cache-free persist boundary makes both lanes well-defined
-      .localCheckpoint()
+    // Spark forbids filtering on the corrupt column straight off the
+    // scan (it is only populated for rows the parser touches); a
+    // cache-free persist boundary makes both lanes well-defined
+    val raw = Checkpoints.truncate(parsed)
     (raw.filter(col("_corrupt").isNull).drop("_corrupt"),
       raw.filter(col("_corrupt").isNotNull).select(col("_corrupt")))
   }
@@ -131,21 +144,16 @@ object LakeIO {
     df.write.mode("overwrite").option("compression", "snappy").orc(path)
 
   /** S2-layout + S6 — land a frame in Bronze, time-partitioned by
-    * ingest date. Dynamic partition overwrite replaces ONLY this
-    * ingest date's directory, so a retried ingest (C7 wraps this in
-    * `withRetry`) re-lands the same partition instead of appending
+    * ingest date, through a partition replace: only this ingest
+    * date's directory is replaced, so a retried ingest (C7 wraps this
+    * in `withRetry`) re-lands the same partition instead of appending
     * duplicate rows — the write is idempotent per (table, date). */
   def writeBronze(df: DataFrame, zones: LakeZones, table: String,
                   ingestDate: LocalDate): Unit =
-    df.withColumn("ingest_year", lit(ingestDate.getYear))
-      .withColumn("ingest_month", lit(ingestDate.getMonthValue))
-      .withColumn("ingest_day", lit(ingestDate.getDayOfMonth))
-      .write
-      .partitionBy("ingest_year", "ingest_month", "ingest_day")
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .parquet(zones.bronze(table))
+    replacePartitions(df, zones.bronze(table), Seq(
+      "ingest_year" -> ingestDate.getYear,
+      "ingest_month" -> ingestDate.getMonthValue,
+      "ingest_day" -> ingestDate.getDayOfMonth))
 
   /** A reader with `schema` imposed, or an inferring one without it.
     *
@@ -162,14 +170,8 @@ object LakeIO {
     * and a `schema` to read through a contract (see `reader`). */
   def readBronze(spark: SparkSession, zones: LakeZones, table: String,
                  ingestDate: Option[LocalDate] = None,
-                 schema: Option[StructType] = None): DataFrame = {
-    val df = reader(spark, schema).parquet(zones.bronze(table))
-    ingestDate.fold(df) { d =>
-      df.filter(col("ingest_year") === d.getYear &&
-        col("ingest_month") === d.getMonthValue &&
-        col("ingest_day") === d.getDayOfMonth)
-    }
-  }
+                 schema: Option[StructType] = None): DataFrame =
+    onIngestDate(reader(spark, schema).parquet(zones.bronze(table)), ingestDate)
 
   /** S2 with schema drift — the reference declares `allowSchemaDrift:
     * true, validateSchema: false` on every source (SURVEY §1.3):
@@ -181,19 +183,23 @@ object LakeIO {
     * scale by partition pruning (pass `ingestDate`) or a pinned
     * contract schema once drift settles. */
   def readBronzeEvolving(spark: SparkSession, zones: LakeZones, table: String,
-                         ingestDate: Option[LocalDate] = None): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(zones.bronze(table))
+                         ingestDate: Option[LocalDate] = None): DataFrame =
+    onIngestDate(spark.read.option("mergeSchema", "true").parquet(zones.bronze(table)),
+      ingestDate)
+
+  /** `df` pruned to one Bronze ingest date (a partition filter), or
+    * unfiltered without one. */
+  private def onIngestDate(df: DataFrame, ingestDate: Option[LocalDate]): DataFrame =
     ingestDate.fold(df) { d =>
       df.filter(col("ingest_year") === d.getYear &&
         col("ingest_month") === d.getMonthValue &&
         col("ingest_day") === d.getDayOfMonth)
     }
-  }
 
-  /** S3/S10 — truncate-load a Silver domain (`DF_Clean_JDE.json:95`). */
+  /** S3/S10 — truncate-load a Silver domain (`DF_Clean_JDE.json:95`)
+    * through a whole-table publish. */
   def overwriteSilver(df: DataFrame, zones: LakeZones, domain: String): Unit =
-    df.write.mode("overwrite").option("compression", "snappy")
-      .parquet(zones.silver(domain))
+    publishTable(df, zones.silver(domain))
 
   /** Pass a `schema` to read through a contract (see `reader`). */
   def readSilver(spark: SparkSession, zones: LakeZones, domain: String,
@@ -202,47 +208,51 @@ object LakeIO {
 
   /** S7 — append-only fact sink (`DF_Load_FactSales.json:145-153`),
     * retry-safe: append one load batch as its own `load_id`
-    * partition with dynamic overwrite: a retried load (C7) replaces
-    * its OWN partition instead of appending a second copy, so the
-    * append-only fact sink is idempotent per logical run. `loadId`
-    * must be stable across retries of a run and unique per run (the
-    * ingest date works). */
+    * partition through a partition replace: a retried load (C7)
+    * replaces its OWN partition instead of appending a second copy,
+    * so the append-only fact sink is idempotent per logical run.
+    * `loadId` must be stable across retries of a run and unique per
+    * run (the ingest date works). */
   def appendGoldRun(df: DataFrame, zones: LakeZones, table: String,
                     loadId: String): Unit =
     appendRun(df, zones.gold(table), loadId)
 
   /** Write `df` as the `load_id=runId` partition of the parquet table
-    * at `path`, replacing only that partition (dynamic overwrite), so
-    * a retried run rewrites its own partition instead of adding a
-    * second copy. */
-  def appendRun(df: DataFrame, path: String, runId: String): Unit = {
-    // Fail fast on layout clashes: mixing load_id=... dirs with
-    // root-level data files OR with a DIFFERENT partition column (a
-    // replaceGold written with other partitionCols) makes Spark
-    // partition discovery reject the whole table at read time.
-    // Better to refuse the write than to poison the table.
+    * at `path` through a partition replace, so a retried run rewrites
+    * its own partition instead of adding a second copy. */
+  def appendRun(df: DataFrame, path: String, runId: String): Unit =
+    replacePartitions(df, path, Seq("load_id" -> runId))
+
+  /** Partition replace: write `df` with each `(column, value)` of
+    * `partition` added as a constant hive partition column, replacing
+    * only that partition of the parquet table at `path` (dynamic
+    * overwrite) and leaving every other partition as it was.
+    *
+    * Fails fast on a layout clash instead of poisoning the table:
+    * root-level data files, or existing partition columns other than
+    * `partition`'s, make Spark's partition discovery reject the whole
+    * table at read time once the new partition lands. */
+  private def replacePartitions(df: DataFrame, path: String,
+                                partition: Seq[(String, Any)]): Unit = {
+    val cols = partition.map(_._1)
+    val dir = partition.map { case (c, v) => s"$c=$v" }.mkString("/")
     val target = new Path(path)
     val fs = target.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(target)) {
-      val entries = fs.listStatus(target)
-      val rootData = entries.exists(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-      require(!rootData,
-        s"$target holds non-partitioned data files; appending a " +
-          "load_id= partition would mix layouts and break partition " +
-          "discovery. Overwrite the table instead.")
-      val foreignKeys = entries.collect {
-        case st if st.isDirectory && st.getPath.getName.contains("=") =>
-          st.getPath.getName.split("=", 2)(0)
-      }.filter(_ != "load_id").distinct
-      require(foreignKeys.isEmpty,
-        s"$target is partitioned by ${foreignKeys.mkString(",")}; " +
-          "appending a load_id= partition would conflict with that " +
-          "layout and break partition discovery at read time.")
+      require(!fs.listStatus(target).exists(st =>
+          st.isFile && st.getPath.getName.endsWith(".parquet")),
+        s"$target holds non-partitioned data files; writing a $dir " +
+          "partition would mix layouts and break partition discovery. " +
+          "Overwrite the table instead.")
+      val existing = hivePartitionColumns(fs, target)
+      require(existing.isEmpty || existing == cols,
+        s"$target is partitioned by ${existing.mkString(",")}; writing a " +
+          s"$dir partition would conflict with that layout and break " +
+          "partition discovery at read time.")
     }
-    df.withColumn("load_id", lit(runId))
+    partition.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, lit(v)) }
       .write
-      .partitionBy("load_id")
+      .partitionBy(cols: _*)
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
@@ -269,28 +279,33 @@ object LakeIO {
     doomed.map(_.getName.stripPrefix("load_id=")).toSeq
   }
 
-  /** Plain full overwrite. NOT safe when `df` reads from the target
-    * path — use [[replaceGold]] for read-modify-write cycles. */
+  /** Replace a whole Gold table through a whole-table publish. */
   def overwriteGold(df: DataFrame, zones: LakeZones, table: String): Unit =
-    df.write.mode("overwrite").option("compression", "snappy")
-      .parquet(zones.gold(table))
+    publishTable(df, zones.gold(table))
 
-  /** S8/S9 rewrite — write-then-swap dimension replace for
-    * read-modify-write cycles (SCD2 merge reads the current dimension
-    * and writes its successor). The new state is fully materialized
-    * into a staging directory — the live directory is untouched while
-    * the job runs, so the plan can keep reading the files it started
-    * from — then swapped in with two FS renames. Readers never see a
+  /** S8/S9 rewrite — dimension replace for read-modify-write cycles
+    * (SCD2 merge reads the current dimension and writes its
+    * successor) through a whole-table publish. Pass `partitionCols`
+    * to keep a hive-partitioned layout through the rewrite. */
+  def replaceGold(df: DataFrame, zones: LakeZones, table: String,
+                  partitionCols: Seq[String] = Nil): Unit =
+    publishTable(df, zones.gold(table), partitionCols)
+
+  /** Whole-table publish: write-then-swap replace of the parquet
+    * table at `path`. The new state is fully materialized into a
+    * staging directory — the live directory is untouched while the
+    * job runs, so a plan that reads the table keeps reading the files
+    * it started from, and a failed write leaves the old table in
+    * place — then swapped in with two FS renames. Readers never see a
     * partially-written state: they see the old table, or the new one,
     * or (in the brief rename window, or after a crash inside it) a
-    * missing directory — which the next replaceGold/[[readIfPresent]]
+    * missing directory — which the next publish or [[readIfPresent]]
     * repairs from the `.old`/`.staging` leftovers before proceeding.
-    * Pass `partitionCols` to keep a hive-partitioned layout through
-    * the rewrite. */
-  def replaceGold(df: DataFrame, zones: LakeZones, table: String,
-                  partitionCols: Seq[String] = Nil): Unit = {
-    val (fs, target, staging, retired) =
-      recoverSwap(df.sparkSession, zones.gold(table))
+    * `partitionCols` names the hive partition columns of the new
+    * table, if any. */
+  private def publishTable(df: DataFrame, path: String,
+                           partitionCols: Seq[String] = Nil): Unit = {
+    val (fs, target, staging, retired) = recoverSwap(df.sparkSession, path)
     fs.delete(staging, true)
     val w = df.write.mode("overwrite").option("compression", "snappy")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
@@ -303,9 +318,9 @@ object LakeIO {
     fs.delete(retired, true)
   }
 
-  /** The live, staging and retired directories of a [[replaceGold]]
-    * swap on `path`, after crash recovery for the swap window: if a
-    * previous replaceGold died between retiring the live table and
+  /** The live, staging and retired directories of a whole-table
+    * publish on `path`, after crash recovery for the swap window: if
+    * a previous publish died between retiring the live table and
     * publishing staging, the target is missing but its content
     * survives in `.old` (complete previous state) and possibly
     * `.staging` (complete next state). Prefer the fully-written NEW
@@ -344,7 +359,7 @@ object LakeIO {
     * (every name starts with `_` or `.`, as an aborted first write or
     * a batch that wrote no rows leaves it). Any other failure of the
     * read propagates: a caller never mistakes a broken table for an
-    * absent one. Repairs a dangling [[replaceGold]] swap first (see
+    * absent one. Repairs a dangling whole-table publish first (see
     * `recoverSwap`), so a table whose data sits in `.old`/`.staging`
     * counts as present. Pass a `schema` to read through a contract
     * (see `reader`). */
@@ -449,13 +464,13 @@ object LakeIO {
     }
   }
 
-  /** Small-file compaction: rewrite a zone table into
-    * ~ceil(bytes / targetFileBytes) right-sized files via the staged
-    * swap (atomic like [[replaceGold]], no reader ever sees a partial
-    * table). Streaming/incremental appends (per-batch `load_id`
-    * partitions, daily Bronze landings) accrete files far smaller
-    * than a scan-efficient parquet target — at 100 TB the file count,
-    * not the byte count, is what kills scan planning and open() cost.
+  /** Small-file compaction: rewrite a Gold table into
+    * ~ceil(bytes / targetFileBytes) right-sized files through a
+    * whole-table publish (no reader ever sees a partial table).
+    * Streaming/incremental appends (per-batch `load_id` partitions,
+    * daily Bronze landings) accrete files far smaller than a
+    * scan-efficient parquet target — at 100 TB the file count, not
+    * the byte count, is what kills scan planning and open() cost.
     *
     * The hive partition layout is PRESERVED (detected from the
     * directory names and re-applied on the rewrite, coalescing
@@ -489,7 +504,7 @@ object LakeIO {
           lit(filesPerPart))
         src.repartition(nFiles, partCols.map(col) :+ spread: _*)
       } else src.repartition(nFiles)
-    replaceGold(df, zones, table, partCols)
+    publishTable(df, zones.gold(table), partCols)
     nFiles
   }
 

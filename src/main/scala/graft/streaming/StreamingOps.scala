@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.operators.Checkpoints
 import graft.sources.{LakeIO, LakeZones}
 
 /** Structured Streaming surface (SURVEY.md §2.7: absent from the
@@ -222,7 +223,7 @@ object StreamingOps {
         val dim = LakeIO.readIfPresent(spark, zones.gold(dimTable))
           .getOrElse(graft.operators.Scd2.emptyDim(spark, incoming, spec))
         publish(graft.operators.Scd2.merge(
-          dim.localCheckpoint(), incoming, spec, lit(now)))
+          Checkpoints.truncate(dim), incoming, spec, lit(now)))
       } finally latest.unpersist()
     }
 
@@ -631,17 +632,18 @@ object StreamingOps {
     val spark = batch.sparkSession
     val loadId = runId(batchId)
 
-    val shingled = Dedup.shingleSets(batch, idCol, textCol, shingleSize)
-      .localCheckpoint() // one micro-batch: small; cut the source lineage
+    // one micro-batch: small; cut the source lineage
+    val shingled = Checkpoints.truncate(
+      Dedup.shingleSets(batch, idCol, textCol, shingleSize))
     val sigs = Dedup.minhashSignatures(shingled, numHashes)
-    val bands = Dedup.bandedIds(sigs, numHashes, numBands).localCheckpoint()
+    val bands = Checkpoints.truncate(Dedup.bandedIds(sigs, numHashes, numBands))
 
     // Admitted-corpus state (empty on the first batch). A replayed
     // batch's own stale partition is excluded from the READ so the
     // dynamic-overwrite WRITE below replaces it without this batch's
     // docs seeing their own failed-attempt state as "admitted".
     val state: Option[DataFrame] = LakeIO.readIfPresent(spark, stateDir)
-      .map(_.filter(col("load_id") =!= loadId).localCheckpoint())
+      .map(st => Checkpoints.truncate(st.filter(col("load_id") =!= loadId)))
 
     // (2) rejected-by-state: verified near-dup of an already-admitted
     // doc; witness = the smallest such neighbor (ids only grow, so
@@ -661,7 +663,7 @@ object StreamingOps {
           .groupBy(col("id_b").as("id"))
           .agg(min(col("id_a")).as("dup_of"))
     }
-    val rejectedByState = stateRejected.localCheckpoint()
+    val rejectedByState = Checkpoints.truncate(stateRejected)
 
     // (3) within-batch kernel over survivor-survivor verified edges
     val survivors = shingled.select(col("id"))

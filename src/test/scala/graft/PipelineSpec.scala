@@ -272,6 +272,47 @@ class PipelineSpec extends SparkSpec {
         zones, "t", "b1")
     }
     assert(ex.getMessage.contains("partitioned by region"))
+    // Bronze gets the same guard: root-level data files, or a table
+    // partitioned by another column, refuse an ingest-date partition
+    val day = LocalDate.of(2024, 6, 1)
+    Seq((1L, "a")).toDF("id", "v").write.parquet(zones.bronze("flat"))
+    val flat = intercept[IllegalArgumentException] {
+      LakeIO.writeBronze(Seq((2L, "b")).toDF("id", "v"), zones, "flat", day)
+    }
+    assert(flat.getMessage.contains("non-partitioned"))
+    Seq((1L, "east")).toDF("id", "region").write.partitionBy("region")
+      .parquet(zones.bronze("regional"))
+    val regional = intercept[IllegalArgumentException] {
+      LakeIO.writeBronze(Seq((2L, "west")).toDF("id", "region"),
+        zones, "regional", day)
+    }
+    assert(regional.getMessage.contains("partitioned by region"))
+  }
+
+  test("a failed Silver or Gold rewrite leaves the previous table readable") {
+    val lake = mkTmp()
+    val zones = LakeZones(lake)
+    val prev = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    // a Range, not a local relation: the error is raised by the write
+    // job's tasks, not folded away while the plan is optimized
+    val failing = spark.range(3, 4).select($"id",
+      expr("CASE WHEN id = 3 THEN raise_error('rewrite failed') ELSE 'c' END").as("v"))
+    def failedWith(msg: String)(write: => Unit): Boolean = {
+      val ex = intercept[Exception](write)
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains(msg))
+    }
+    LakeIO.overwriteSilver(prev, zones, "clean")
+    LakeIO.overwriteGold(prev, zones, "dim")
+    assert(failedWith("rewrite failed")(LakeIO.overwriteSilver(failing, zones, "clean")))
+    assert(failedWith("rewrite failed")(LakeIO.overwriteGold(failing, zones, "dim")))
+    // a contract read of each table still returns the previous rows
+    val contract = Some(prev.schema)
+    val expected = Set((1L, "a"), (2L, "b"))
+    assert(LakeIO.readSilver(spark, zones, "clean", contract)
+      .as[(Long, String)].collect().toSet == expected)
+    assert(LakeIO.readGold(spark, zones, "dim", contract)
+      .as[(Long, String)].collect().toSet == expected)
   }
 
   test("replaceGold recovers a dangling swap (crash between renames)") {

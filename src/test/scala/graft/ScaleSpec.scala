@@ -335,18 +335,28 @@ class ScaleSpec extends SparkSpec {
     def checkpointFile(df: org.apache.spark.sql.DataFrame): Option[String] =
       df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
         .flatMap(_.getCheckpointFile)
+    // the lineage cuts of an iterative operator and of the audited
+    // CSV read go through the same rule
+    val csv = s"${tempDir("graft_ckpt_csv")}/in.csv"
+    Files.writeString(java.nio.file.Paths.get(csv), "id,v\n1,a\n2,b\n")
+    val csvSchema = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("v", "string")
+    def truncated(n: Int) =
+      (Checkpoints.truncate(spark.range(n).toDF()),
+        LakeIO.readCsvAudited(spark, csv, csvSchema)._1)
     val dirs = Seq.fill(2)(tempDir("graft_ckpt_dir"))
     try dirs.foreach { dir =>
       spark.sparkContext.setCheckpointDir(dir)
-      val t = Checkpoints.truncate(spark.range(100).toDF())
-      assert(t.count() == 100)
+      val (t, clean) = truncated(100)
+      assert(t.count() == 100 && clean.count() == 2)
       assert(filesUnder(dir) > 0, s"expected checkpoint files under $dir")
-      assert(checkpointFile(t).exists(_.contains(new java.io.File(dir).getName)))
+      for (df <- Seq(t, clean))
+        assert(checkpointFile(df).exists(_.contains(new java.io.File(dir).getName)))
     } finally spark.sparkContext.setCheckpointDir(null)
     val before = dirs.map(filesUnder)
-    val t = Checkpoints.truncate(spark.range(10).toDF())
-    assert(t.count() == 10)
-    assert(checkpointFile(t).isEmpty)
+    val (t, clean) = truncated(10)
+    assert(t.count() == 10 && clean.count() == 2)
+    assert(checkpointFile(t).isEmpty && checkpointFile(clean).isEmpty)
     assert(dirs.map(filesUnder) == before)
   }
 
