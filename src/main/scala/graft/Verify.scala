@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,6 +11,7 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
+    val fs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
     // local artifact beside the driver's: per-query rows/seconds/status
     // → target/correctness.json, so the correctness pass leaves a
     // complete record even if the driver's stdout capture truncates
@@ -19,6 +21,10 @@ object Verify {
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
+        // a query that throws must leave no output, not the previous
+        // run's: many queries run jobs while they are built (q05's
+        // contiguous-id checkpoint), so clear the directory first
+        fs.delete(new Path(s"$outDir/$name"), true)
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         val rows = spark.read.parquet(s"$outDir/$name").count()

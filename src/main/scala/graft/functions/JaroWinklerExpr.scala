@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: Jaro–Winkler similarity (Winkler 1990)
@@ -18,32 +17,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * inside whole-stage codegen — no UDF serialization, no boxing.
   */
 case class JaroWinklerExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler requires string inputs, got " +
-        s"(${left.dataType}, ${right.dataType})")
-
+    extends BinaryKernel(JaroWinklerExpr) {
   protected override def nullSafeEval(l: Any, r: Any): Any =
     JaroWinklerExpr.sim(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.JaroWinklerExpr.sim($a, $b)")
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaroWinklerExpr =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "jaro_winkler"
 }
 
-object JaroWinklerExpr {
+object JaroWinklerExpr extends Kernel("jaro_winkler", Seq.fill(2)(Kernel.string),
+    Nil, DoubleType, "graft.functions.JaroWinklerExpr.sim") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    JaroWinklerExpr(c(0), c(1))
 
   /** Static entry point shared by interpreted eval and generated code. */
   def sim(a: UTF8String, b: UTF8String): Double = {
@@ -94,9 +79,5 @@ object JaroWinklerExpr {
   }
 
   /** Column wrapper. */
-  def jaro_winkler(a: org.apache.spark.sql.Column,
-                   b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(JaroWinklerExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(a),
-      org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+  def jaro_winkler(a: Column, b: Column): Column = column(a, b)
 }

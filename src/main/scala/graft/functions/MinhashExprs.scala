@@ -3,9 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -102,17 +100,14 @@ object MinhashExprs {
     new GenericArrayData(out)
   }
 
-  def minhash_base_hashes(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(MinhashBaseHashExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+  def minhash_base_hashes(c: Column): Column = MinhashBaseHashExpr.column(c)
 
   def minhash_signature(c: Column, numHashes: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(MinhashSigExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c), numHashes))
+    MinhashSigExpr.column(c, numHashes)
 }
 
 /** array<string> → array<long>: md5-60-bit base hash per element. */
-case class MinhashBaseHashExpr(child: Expression) extends UnaryExpression {
+case class MinhashBaseHashExpr(child: Expression) extends UnaryKernel(MinhashBaseHashExpr) {
 
   // null elements propagate (md5(null) → null), so the output can
   // hold nulls exactly when the input can
@@ -122,47 +117,35 @@ case class MinhashBaseHashExpr(child: Expression) extends UnaryExpression {
       case _ => true
     })
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_base_hashes requires array<string>, got $other")
-  }
-
   protected override def nullSafeEval(input: Any): Any =
     MinhashExprs.baseHashes(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinhashExprs.baseHashes($c)")
-
   override protected def withNewChildInternal(newChild: Expression): MinhashBaseHashExpr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "minhash_base_hashes"
+object MinhashBaseHashExpr extends Kernel("minhash_base_hashes",
+    Seq(Kernel.arrayOf(StringType)), Nil, ArrayType(LongType),
+    "graft.functions.MinhashExprs.baseHashes") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    MinhashBaseHashExpr(c.head)
 }
 
 /** array<long> → array<long>: fused all-families minhash signature. */
 case class MinhashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryKernel(MinhashSigExpr) {
 
   require(numHashes > 0, "numHashes must be positive")
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_signature requires array<long>, got $other")
-  }
-
+  override protected def literals: Seq[Any] = Seq(numHashes)
   protected override def nullSafeEval(input: Any): Any =
     MinhashExprs.signature(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinhashExprs.signature($c, $numHashes)")
-
   override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "minhash_signature"
+object MinhashSigExpr extends Kernel("minhash_signature",
+    Seq(Kernel.arrayOf(LongType)), Seq("numHashes"),
+    ArrayType(LongType, containsNull = true), "graft.functions.MinhashExprs.signature") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    MinhashSigExpr(c.head, ints.head)
 }

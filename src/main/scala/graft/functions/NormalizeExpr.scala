@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: Unicode NFC normalization (UAX#15
@@ -19,28 +17,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * (SURVEY.md §4.3): one static call per row inside whole-stage
   * codegen — no UDF serialization.
   */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires a string input, got ${child.dataType}")
-
+case class NfcNormalizeExpr(child: Expression) extends UnaryKernel(NfcNormalizeExpr) {
   protected override def nullSafeEval(v: Any): Any =
     NfcNormalizeExpr.nfc(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalizeExpr.nfc($c)")
-
   override protected def withNewChildInternal(
       newChild: Expression): NfcNormalizeExpr = copy(child = newChild)
-
-  override def prettyName: String = "nfc_normalize"
 }
 
-object NfcNormalizeExpr {
+object NfcNormalizeExpr extends Kernel("nfc_normalize", Seq(Kernel.string), Nil,
+    StringType, "graft.functions.NfcNormalizeExpr.nfc") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression = NfcNormalizeExpr(c.head)
 
   /** Static entry point shared by interpreted eval and generated code.
     * Fast path: `Normalizer.isNormalized` is O(n) with no allocation
@@ -53,7 +39,5 @@ object NfcNormalizeExpr {
   }
 
   /** Column wrapper. */
-  def nfc_normalize(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(NfcNormalizeExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+  def nfc_normalize(c: Column): Column = column(c)
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: polynomial rolling hash (Horner, base
@@ -18,28 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * produce identical values (byte == code point), which the oracle
   * exploits.
   */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash requires a string input, got ${child.dataType}")
-
+case class RollingHashExpr(child: Expression) extends UnaryKernel(RollingHashExpr) {
   protected override def nullSafeEval(input: Any): Any =
     RollingHashExpr.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHashExpr.hash($c)")
-
   override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
     copy(child = newChild)
-
-  override def prettyName: String = "rolling_hash"
 }
 
-object RollingHashExpr {
+object RollingHashExpr extends Kernel("rolling_hash", Seq(Kernel.string), Nil,
+    LongType, "graft.functions.RollingHashExpr.hash") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression = RollingHashExpr(c.head)
+
   /** Modulus 1e9+7: acc < 2^30, so acc*31 + 255 < 2^35 — no overflow
     * headroom games needed on 64-bit longs. */
   private final val P = 1000000007L
@@ -57,7 +45,5 @@ object RollingHashExpr {
   }
 
   /** Column wrapper. */
-  def rolling_hash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(RollingHashExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+  def rolling_hash(c: Column): Column = column(c)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word-shingling (SURVEY.md §4.3 custom-`Expression` tier).
@@ -49,9 +47,7 @@ object TextExprs {
     }
   }
 
-  def word_shingles(c: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(WordShinglesExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c), n))
+  def word_shingles(c: Column, n: Int): Column = WordShinglesExpr.column(c, n)
 
   private val simhashMd5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -94,9 +90,7 @@ object TextExprs {
     sig
   }
 
-  def simhash_32(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(Simhash32Expr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+  def simhash_32(c: Column): Column = Simhash32Expr.column(c)
 
   /** Per-string character histogram VALUES (one count per distinct
     * code point, identity dropped — entropy and other distributional
@@ -132,9 +126,7 @@ object TextExprs {
     new GenericArrayData(out.toArray)
   }
 
-  def char_counts(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(CharCountsExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+  def char_counts(c: Column): Column = CharCountsExpr.column(c)
 
   /** Number of DISTINCT k-code-point character shingles, matching
     * `size(array_distinct(charShingles(text, k)))` — including the
@@ -176,107 +168,72 @@ object TextExprs {
   }
 
   def distinct_char_shingles(c: Column, k: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(DistinctCharShinglesExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(c), k))
+    DistinctCharShinglesExpr.column(c, k)
 }
 
 /** array<string> tokens → long 32-bit simhash signature. */
-case class Simhash32Expr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_32 requires array<string>, got $other")
-  }
-
+case class Simhash32Expr(child: Expression) extends UnaryKernel(Simhash32Expr) {
   protected override def nullSafeEval(input: Any): Any =
     TextExprs.simhash32(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprs.simhash32($c)")
-
   override protected def withNewChildInternal(newChild: Expression): Simhash32Expr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "simhash_32"
+object Simhash32Expr extends Kernel("simhash_32", Seq(Kernel.arrayOf(StringType)),
+    Nil, LongType, "graft.functions.TextExprs.simhash32") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression = Simhash32Expr(c.head)
 }
 
 /** string → array<long> character-histogram counts (identities dropped). */
-case class CharCountsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"char_counts requires string, got $other")
-  }
-
+case class CharCountsExpr(child: Expression) extends UnaryKernel(CharCountsExpr) {
   protected override def nullSafeEval(input: Any): Any =
     TextExprs.charCounts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprs.charCounts($c)")
-
   override protected def withNewChildInternal(newChild: Expression): CharCountsExpr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "char_counts"
+object CharCountsExpr extends Kernel("char_counts", Seq(Kernel.string), Nil,
+    ArrayType(LongType, containsNull = false), "graft.functions.TextExprs.charCounts") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression = CharCountsExpr(c.head)
 }
 
 /** string → bigint distinct k-char-shingle count. */
 case class DistinctCharShinglesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel(DistinctCharShinglesExpr) {
 
   require(k > 0, "shingle size must be positive")
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"distinct_char_shingles requires string, got $other")
-  }
-
+  override protected def literals: Seq[Any] = Seq(k)
   protected override def nullSafeEval(input: Any): Any =
     TextExprs.distinctCharShingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextExprs.distinctCharShingles($c, $k)")
-
   override protected def withNewChildInternal(
       newChild: Expression): DistinctCharShinglesExpr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "distinct_char_shingles"
+object DistinctCharShinglesExpr extends Kernel("distinct_char_shingles",
+    Seq(Kernel.string), Seq("shingle size"), LongType,
+    "graft.functions.TextExprs.distinctCharShingles") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    DistinctCharShinglesExpr(c.head, ints.head)
 }
 
 /** array<string> tokens → array<string> sliding n-gram shingles. */
 case class WordShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel(WordShinglesExpr) {
 
   require(n > 0, "shingle size must be positive")
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires array<string>, got $other")
-  }
-
+  override protected def literals: Seq[Any] = Seq(n)
   protected override def nullSafeEval(input: Any): Any =
     TextExprs.shingles(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprs.shingles($c, $n)")
-
   override protected def withNewChildInternal(newChild: Expression): WordShinglesExpr =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "word_shingles"
+object WordShinglesExpr extends Kernel("word_shingles",
+    Seq(Kernel.arrayOf(StringType)), Seq("shingle size"),
+    ArrayType(StringType, containsNull = false), "graft.functions.TextExprs.shingles") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    WordShinglesExpr(c.head, ints.head)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -37,55 +36,45 @@ object VectorExprs {
     acc
   }
 
-  def dot_product(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(DotProductExpr(
-      org.apache.spark.sql.graft.ColumnBridge.expression(a),
-      org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+  def dot_product(a: Column, b: Column): Column = DotProductExpr.column(a, b)
 }
 
-/** array<float|double> × array<float|double> → double. */
+/** array<float|double> × array<float|double> → double. The kernel
+  * returns a boxed null for mismatched lengths or a null element, so
+  * the generated code unboxes it itself; each side's element type is
+  * passed to the kernel as a flag. */
 case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel(DotProductExpr) {
 
-  private def elemOk(dt: DataType): Option[Boolean] = dt match {
-    case ArrayType(FloatType, _) => Some(true)
-    case ArrayType(DoubleType, _) => Some(false)
-    case _ => None
-  }
-
-  override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemOk(left.dataType), elemOk(right.dataType)) match {
-      case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"dot_product requires array<float|double> inputs, got " +
-          s"${left.dataType} and ${right.dataType}")
-    }
-
-  private lazy val aFloat = elemOk(left.dataType).get
-  private lazy val bFloat = elemOk(right.dataType).get
+  private def isFloat(dt: DataType): Boolean =
+    dt.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val aFloat = isFloat(left.dataType)
+  private lazy val bFloat = isFloat(right.dataType)
+  override protected def literals: Seq[Any] = Seq(aFloat, bFloat)
 
   protected override def nullSafeEval(a: Any, b: Any): Any =
     VectorExprs.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
       aFloat, bFloat)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dotCall = (a: String, b: String) =>
-      s"graft.functions.VectorExprs.dot($a, $b, $aFloat, $bFloat)"
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val tmp = ctx.freshName("dotRes")
       s"""
-         |java.lang.Double $tmp = ${dotCall(a, b)};
+         |java.lang.Double $tmp = ${call(a, b)};
          |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
        """.stripMargin
     })
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductExpr =
     copy(left = newLeft, right = newRight)
+}
 
-  override def prettyName: String = "dot_product"
+object DotProductExpr extends Kernel("dot_product",
+    Seq.fill(2)(Kernel.arrayOf(FloatType, DoubleType)), Nil, DoubleType,
+    "graft.functions.VectorExprs.dot") {
+  protected def make(c: Seq[Expression], ints: Seq[Int]): Expression =
+    DotProductExpr(c(0), c(1))
 }

@@ -1,6 +1,12 @@
 package graft
 
-import graft.functions.{RollingHashExpr, TextExprs}
+import graft.functions._
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.debug.codegenString
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL surface of the native expressions: every graft function is
@@ -76,5 +82,78 @@ class GraftExtensionsSpec extends SparkSpec {
         "word_shingles", "simhash_32", "dot_product", "char_counts",
         "distinct_char_shingles", "jaro_winkler", "nfc_normalize"))
     val _ = ext
+  }
+
+  test("every kernel: eval matches generated code, whole-stage calls it, " +
+      "it serializes, its builder rejects bad calls") {
+    // one column per input type, each with a NULL row; range-based so
+    // the projection stays a whole-stage stage (a local relation would
+    // be folded away at optimization)
+    def col(name: String, values: String*): String =
+      s"element_at(array(${values.mkString(", ")}), CAST(id AS INT) + 1) AS $name"
+    spark.sql("SELECT id, " + Seq(
+      col("s", "NULL", "''", "'martha'", "'cafe\u0301 ab'", "'abab'"),
+      col("s2", "'marhta'", "'x'", "NULL", "'martha'", "'abba'"),
+      col("toks", "array('a', 'b', 'c')", "NULL", "array('x', NULL, 'y z')",
+        "CAST(array() AS ARRAY<STRING>)", "array('a')"),
+      col("hs", "array(1L, 2L)", "array(3L, NULL)", "NULL",
+        "CAST(array() AS ARRAY<BIGINT>)", "array(5L)"),
+      col("fv", "array(1.5F, 2F)", "array(1F)", "array(1F, NULL)", "NULL",
+        "array(0.25F, 4F)"),
+      col("dv", "array(3D, 4D)", "array(1D, 2D)", "array(1D, 2D)", "array(1D)",
+        "NULL")).mkString(", ") + " FROM range(5)")
+      .createOrReplaceTempView("kernel_in")
+    val rows = spark.table("kernel_in").queryExecution.toRdd.map(_.copy()).collect()
+    val calls: Seq[(Kernel, Seq[String])] = Seq(
+      RollingHashExpr -> Seq("s"),
+      MinhashBaseHashExpr -> Seq("toks"),
+      MinhashSigExpr -> Seq("hs", "4"),
+      WordShinglesExpr -> Seq("toks", "2"),
+      Simhash32Expr -> Seq("toks"),
+      DotProductExpr -> Seq("fv", "dv"),
+      DotProductExpr -> Seq("dv", "fv"),
+      CharCountsExpr -> Seq("s"),
+      DistinctCharShinglesExpr -> Seq("s", "2"),
+      JaroWinklerExpr -> Seq("s", "s2"),
+      NfcNormalizeExpr -> Seq("s"))
+    assert(calls.map(_._1.name).toSet == GraftExtensions.builders.map(_._1).toSet)
+
+    def sql(k: Kernel, args: Seq[String]) =
+      spark.sql(s"SELECT ${k.name}(${args.mkString(", ")}) AS r FROM kernel_in")
+    def rejected(k: Kernel, args: Seq[String]): String =
+      intercept[Exception](sql(k, args).collect()).getMessage
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+
+    calls.foreach { case (k, args) =>
+      val df = sql(k, args)
+      val p = df.queryExecution.analyzed.asInstanceOf[Project]
+      val e = BindReferences.bindReference(
+        p.projectList.head.asInstanceOf[Alias].child, p.child.output)
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      val results = rows.toSeq.map { row =>
+        val viaEval = convertToScala(e.eval(row), e.dataType)
+        assert(convertToScala(generated(row).get(0, e.dataType), e.dataType) ==
+          viaEval, s"${k.name} on $row")
+        viaEval
+      }
+      assert(results.contains(null) && results.exists(_ != null), k.name)
+      // interpreted operators ship the expression to their tasks
+      assert(ser.deserialize[Expression](ser.serialize(e)) == e, k.name)
+      assert(codegenString(df.queryExecution.executedPlan).contains(s"${k.entry}("),
+        k.name)
+
+      val arity = rejected(k, args :+ "s")
+      assert(arity.contains(k.name) && arity.contains(k.usage), arity)
+      k.intParams.indices.foreach { i =>
+        val j = k.inputs.length + i
+        val err = rejected(k, args.updated(j, "CAST(id AS INT)"))
+        assert(err.contains(k.name) && err.contains("integer literal"), err)
+      }
+      k.inputs.indices.foreach { i =>
+        val err = rejected(k, args.updated(i, "id"))
+        assert(err.contains(k.name) && err.contains(k.inputs(i).sql) &&
+          err.contains("bigint"), err)
+      }
+    }
   }
 }

@@ -85,6 +85,10 @@ def fresh_con():
     return c
 
 oracle = json.loads(Path(f"{OUT}/oracle_sql.json").read_text())
+# a misspelled name would otherwise compare nothing and print ALL PASS
+_MISSING = [n for n in ONLY if n not in oracle]
+if _MISSING:
+    sys.exit(f"unknown queries (not in oracle_sql.json): {_MISSING}")
 
 def norm(v):
     if isinstance(v, float):
